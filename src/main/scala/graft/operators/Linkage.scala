@@ -19,6 +19,14 @@ import graft.functions.NumFunctions
   */
 object Linkage {
 
+  /** A non-negative DECIMAL as a Long, saturating at `Long.MaxValue`:
+    * `longValue()` alone keeps only the low 64 bits of a larger value,
+    * which can wrap negative.
+    */
+  private[graft] def saturatingLong(d: java.math.BigDecimal): Long =
+    if (d.compareTo(java.math.BigDecimal.valueOf(Long.MaxValue)) > 0) Long.MaxValue
+    else d.longValue()
+
   /** Pre-flight blocking profile: per block key, the record count and
     * the candidate-pair count `n·(n−1)/2` that
     * [[fellegiSunterScores]] would generate, plus each block's share
@@ -181,7 +189,7 @@ object Linkage {
             s"pairs (> maxPairsPerBlock = $maxPairsPerBlock): refine the " +
             "blocking key (run blockProfile for the full ranking) or pass " +
             "maxPairsPerBlock = Long.MaxValue to accept the cost explicitly")
-        totalPairs = math.min(worst.getDecimal(2).longValue(), Long.MaxValue)
+        totalPairs = saturatingLong(worst.getDecimal(2))
       }
     }
 

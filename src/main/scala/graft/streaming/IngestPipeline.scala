@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors, TimeUnit}
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.ops.EventOps
 import graft.schemas.TopicSchemas
@@ -65,10 +67,40 @@ object IngestPipeline {
     * reference stringifies it, `run.py:46,51`; `locations_json` keeps
     * CSV-sink parity).
     */
-  def transformVision(batch: DataFrame): DataFrame = {
-    val decoded = EventOps.decodeJson(batch, TopicSchemas.visionEvent)
-      .select(col("record.*"))
-    val patched = EventOps.patchHitCounts(decoded)
+  def transformVision(batch: DataFrame): DataFrame =
+    shapeVision(decode(batch, "vision", TopicSchemas.visionEvent))
+
+  /** Same pipeline for air-quality topics, keyed on `nicename`; the
+    * open-ended sensor fields ride along raw in `props`.
+    */
+  def transformAirQuality(batch: DataFrame): DataFrame =
+    shapeAirQuality(decode(batch, "aq", TopicSchemas.airQualityReading))
+
+  /** `from_json` under the standard rescue-column policy: the
+    * `columnNameOfCorruptRecord` field tells truly unparseable JSON
+    * (field set) from valid-but-incomplete records (which the validity
+    * gates handle) and from forward-compatible messages with unknown
+    * EXTRA fields (which parse cleanly). The typed fields come out the
+    * same as without the rescue field, so one parse serves both the
+    * lake and the dead letters. This is the pipeline's only JSON decode.
+    */
+  private def rescuedJson(value: Column, schema: StructType): Column =
+    from_json(value, schema.add("_corrupt", StringType),
+      Map("columnNameOfCorruptRecord" -> "_corrupt"))
+
+  /** `value` as a string plus its parse against one topic family's
+    * schema in column `record`: the shape [[routeAndWrite]] produces for
+    * every family at once.
+    */
+  private def decode(batch: DataFrame, record: String, schema: StructType): DataFrame = {
+    val value = col("value").cast("string")
+    batch.select(value.as("value"), rescuedJson(value, schema).as(record))
+  }
+
+  /** Everything after decode for vision rows, parsed into `vision`. */
+  private def shapeVision(parsed: DataFrame): DataFrame = {
+    val records = parsed.select(col("vision.*")).drop("_corrupt")
+    val patched = EventOps.patchHitCounts(records)
       .withColumn("locations_json", to_json(col("locations")))
     val timed = EventOps.deriveEventTime(patched, "timestamp", "ts")
     EventOps.withPartitionColumns(
@@ -76,60 +108,70 @@ object IngestPipeline {
       .withColumnRenamed("camera_id", "entity")
   }
 
-  /** Same pipeline for air-quality topics, keyed on `nicename`; the
-    * open-ended sensor fields ride along raw in `props`.
+  /** Everything after decode for air-quality rows, parsed into `aq`;
+    * the raw payload rides along as `props`.
     */
-  def transformAirQuality(batch: DataFrame): DataFrame = {
-    val decoded = EventOps.decodeJson(batch, TopicSchemas.airQualityReading)
-      .select(col("record.*"), col("value").cast("string").as("props"))
-    val timed = EventOps.deriveEventTime(decoded, "timestamp", "ts")
+  private def shapeAirQuality(parsed: DataFrame): DataFrame = {
+    val records = parsed.select(col("aq.*"), col("value").as("props")).drop("_corrupt")
+    val timed = EventOps.deriveEventTime(records, "timestamp", "ts")
     EventOps.withPartitionColumns(
       EventOps.filterValid(timed, "ts", Some("nicename")), "ts")
       .withColumnRenamed("nicename", "entity")
   }
 
-  /** Rows on a KNOWN topic whose `value` does not decode against the
-    * topic schema: the reference's poll-loop at least kept these visible
-    * (`run.py:40-42`); silently vanishing at the validity gate loses
-    * data invisibly. Detection uses the standard rescue-column policy —
-    * a `columnNameOfCorruptRecord` field distinguishes truly-unparseable
-    * JSON (corrupt column set) from valid-but-incomplete records (which
-    * the validity gates handle) and from forward-compatible messages
-    * with unknown EXTRA fields (which parse cleanly; the typed columns
-    * simply ignore the additions).
-    */
-  private def malformedRows(df: DataFrame,
-                            schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val rescued = schema.add("_corrupt", org.apache.spark.sql.types.StringType)
-    df.withColumn("record",
-        from_json(col("value").cast("string"), rescued,
-          Map("columnNameOfCorruptRecord" -> "_corrupt")))
-      .filter(col("record").isNull || col("record._corrupt").isNotNull)
-      .drop("record")
-  }
+  // null-safe routing: a null/missing topic must reach the dead-letter
+  // table, not vanish (three-valued logic would make it match no branch)
+  private val isVision = col("topic") <=> TopicSchemas.visionTopic
+  private val isAq = coalesce(col("topic").endsWith(TopicSchemas.airQualitySuffix), lit(false))
 
-  /** O8/O22 — topic routing. One cached pass over the micro-batch, one
-    * partitioned append per topic family; unknown topics AND undecodable
-    * rows on known topics land in the dead-letter table with a `reason`
-    * (the reference logs-and-drops unknowns, `df_manager.py:115-121`,
-    * and skips unreadable messages visibly, `run.py:40-42`).
+  /** O8/O22 — topic routing, one pass per micro-batch:
+    *
+    *   - one projection parses each row's JSON once, against its topic
+    *     family's schema, and tags dead rows with a `reason`; only this
+    *     parsed frame is cached;
+    *   - one counting job over it fills the cache and sizes the routes;
+    *     a route with no rows writes nothing, so no empty table
+    *     directory appears;
+    *   - the non-empty tables (vision, then its `stats` rollup;
+    *     `air_quality`; `_dead_letter`) commit concurrently, one driver
+    *     thread each. All of them run to completion before the first
+    *     failure (a fatal error included) is rethrown; the threads start
+    *     here, inherit the stream's job group, and `query.stop()`
+    *     cancels their jobs, then waits here for them to end. No write
+    *     outlives this call;
+    *   - dead letters are shuffled on `topic`, so each batch writes one
+    *     file per topic.
+    *
+    * Unknown topics AND unreadable rows on known topics land in the
+    * dead-letter table with a `reason` (the reference logs-and-drops
+    * unknowns, `df_manager.py:115-121`, and skips unreadable messages
+    * visibly, `run.py:40-42`). A row that parses only partially (say, a
+    * string where a number belongs) both lands with the fields that did
+    * parse and is dead-lettered.
     */
   def routeAndWrite(batch: DataFrame, root: String, format: String = "parquet",
                     stats: Boolean = false): Unit = {
-    batch.persist()
+    val value = col("value").cast("string")
+    def malformed(record: String): Column =
+      col(record).isNull || col(s"$record._corrupt").isNotNull
+    val parsed = batch.select(
+        col("topic"), value.as("value"),
+        when(isVision, rescuedJson(value, TopicSchemas.visionEvent)).as("vision"),
+        when(isAq, rescuedJson(value, TopicSchemas.airQualityReading)).as("aq"))
+      .withColumn("reason",
+        when(isVision, when(malformed("vision"), lit("malformed_json")))
+          .when(isAq, when(malformed("aq"), lit("malformed_json")))
+          .otherwise(lit("unknown_topic")))
+      .persist()
     try {
-      // one output file per (entity, year, month) partition instead of
-      // one per task × partition — the small-file guard matters here
-      // because a catch-up batch touches every partition at once
-      // null-safe routing: a null/missing topic must reach the
-      // dead-letter table, not vanish (three-valued logic would make it
-      // match no branch)
-      val isVision = col("topic") <=> TopicSchemas.visionTopic
-      val isAq = coalesce(col("topic").endsWith(TopicSchemas.airQualitySuffix), lit(false))
+      val Row(nVision: Long, nAq: Long, nDead: Long) = parsed.agg(
+        count(when(isVision, 1)), count(when(isAq, 1)), count(col("reason"))).head()
 
-      val vision = batch.filter(isVision)
-      if (!vision.isEmpty) {
-        val tv = transformVision(vision)
+      def writeVision(): Unit = {
+        // one output file per (entity, year, month) partition instead of
+        // one per task × partition — the small-file guard matters here
+        // because a catch-up batch touches every partition at once
+        val tv = shapeVision(parsed.filter(isVision))
         PartitionedSink.appendPartitioned(
           PartitionedSink.repartitionByPartitionColumns(tv),
           s"$root/vision", format = format)
@@ -142,26 +184,49 @@ object IngestPipeline {
             s"$root/_stats/vision", Seq("entity"),
             Seq("entity", "year", "month"), "hit_counts")
       }
-
-      val aq = batch.filter(isAq)
-      if (!aq.isEmpty)
+      def writeAirQuality(): Unit =
         PartitionedSink.appendPartitioned(
-          PartitionedSink.repartitionByPartitionColumns(transformAirQuality(aq)),
+          PartitionedSink.repartitionByPartitionColumns(shapeAirQuality(parsed.filter(isAq))),
           s"$root/air_quality", format = format)
-
-      def asDead(df: DataFrame, reason: String): DataFrame =
-        df.select(coalesce(col("topic"), lit("__null__")).as("topic"),
-          col("value").cast("string").as("value"), lit(reason).as("reason"))
-
-      val dead = asDead(batch.filter(!isVision && !isAq), "unknown_topic")
-        .unionByName(asDead(
-          malformedRows(vision, TopicSchemas.visionEvent), "malformed_json"))
-        .unionByName(asDead(
-          malformedRows(aq, TopicSchemas.airQualityReading), "malformed_json"))
-      if (!dead.isEmpty)
-        dead.write.mode("append").partitionBy("topic").format(format)
+      def writeDeadLetters(): Unit =
+        parsed.filter(col("reason").isNotNull)
+          .select(coalesce(col("topic"), lit("__null__")).as("topic"),
+            col("value"), col("reason"))
+          .repartition(col("topic"))
+          .write.mode("append").partitionBy("topic").format(format)
           .save(s"$root/_dead_letter")
-    } finally batch.unpersist()
+
+      val writes = Seq(nVision -> writeVision _, nAq -> writeAirQuality _,
+          nDead -> writeDeadLetters _)
+        .collect { case (rows, write) if rows > 0 => write }
+      if (writes.nonEmpty) {
+        val pool = Executors.newFixedThreadPool(writes.size)
+        try {
+          // a FutureTask records any Throwable, fatal ones too, so every
+          // get() returns; one failure cannot abandon the other writes
+          val pending = writes.map(write => pool.submit((() => write()): Callable[Unit]))
+          val failures = pending.flatMap { f =>
+            try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+          }
+          failures.headOption.foreach(e => throw e)
+        } finally awaitShutdown(pool)
+      }
+    } finally parsed.unpersist()
+  }
+
+  /** Shut `pool` down and wait until its writes have finished, also when
+    * this thread is interrupted: `query.stop()` interrupts the stream
+    * thread after cancelling its jobs, and must not return while a pool
+    * thread still commits files. The interrupt is restored afterwards.
+    */
+  private def awaitShutdown(pool: ExecutorService): Unit = {
+    pool.shutdown()
+    var interrupted = false
+    var done = false
+    while (!done)
+      try done = pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread().interrupt()
   }
 
   /** THE read path for the dead-letter table, across schema generations.

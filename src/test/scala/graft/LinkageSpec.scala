@@ -148,6 +148,17 @@ class LinkageSpec extends SparkSpec {
       "null block keys never join, so they must not count toward the gate")
   }
 
+  test("saturatingLong: a pair total past Long.MaxValue saturates instead of wrapping") {
+    val maxDecimal38 = new java.math.BigDecimal("9" * 38)
+    assert(maxDecimal38.longValue() !== Long.MaxValue, "longValue() alone wraps")
+    assert(Linkage.saturatingLong(maxDecimal38) === Long.MaxValue)
+    val justPast = java.math.BigDecimal.valueOf(Long.MaxValue).add(java.math.BigDecimal.ONE)
+    assert(justPast.longValue() < 0)
+    assert(Linkage.saturatingLong(justPast) === Long.MaxValue)
+    assert(Linkage.saturatingLong(java.math.BigDecimal.valueOf(Long.MaxValue)) === Long.MaxValue)
+    assert(Linkage.saturatingLong(java.math.BigDecimal.valueOf(123L)) === 123L)
+  }
+
   test("q223 registry entry runs GATED (round-17 item 5): construction fires the pre-flight job") {
     // the gate is an EAGER job at plan-construction time (the .head()
     // over per-block counts); the Long.MaxValue hatch skips it and runs

@@ -1,6 +1,13 @@
 package graft
 
+import java.net.URI
 import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -72,6 +79,145 @@ class StreamingIngestSpec extends SparkSpec {
     assert(dead === Array(
       ("cuip_vision_events", "malformed_json"),
       ("mystery_topic", "unknown_topic")))
+  }
+
+  test("one drain over every dirty case: exact lake rows, lake schemas and dead letters") {
+    val root = Files.createTempDirectory("graft_lake_eq_").toString
+    val ckpt = Files.createTempDirectory("graft_ckpt_eq_").toString
+    implicit val sqlCtx: org.apache.spark.sql.classic.SQLContext =
+      spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
+    val input = MemoryStream[(String, String)]
+    val v = "cuip_vision_events"
+    input.addData(
+      (v, """{"timestamp": 1704067200000, "camera_id": "cam1", "locations": [{"x":1.0,"y":2.0,"label":"car"}], "hit_counts": 7}"""),
+      (v, """{"timestamp": 1706745600000, "camera_id": "cam2", "locations": [{"x":1.0,"y":2.0,"label":"car"},{"x":3.0,"y":4.0,"label":"bus"}]}"""),
+      // wrong-typed fields parse partially: the row lands (hit_counts
+      // patched to size(locations); the bad nested x nulled) AND is
+      // dead-lettered
+      (v, """{"timestamp": 1704067260000, "camera_id": "cam3", "locations": [{"x":1.0,"y":2.0,"label":"car"},{"x":3.0,"y":4.0,"label":"bus"},{"x":5.0,"y":6.0,"label":"van"}], "hit_counts": "x"}"""),
+      (v, """{"timestamp": 1704067320000, "camera_id": "cam4", "locations": [{"x":"far","y":2.0,"label":"car"}], "hit_counts": 1}"""),
+      // a bad timestamp fails the null-ts gate AND is dead-lettered
+      (v, """{"timestamp": "abc", "camera_id": "cam5", "locations": []}"""),
+      // gates: epoch 1970, missing ts, nan key
+      (v, """{"timestamp": 0, "camera_id": "cam1", "locations": []}"""),
+      (v, """{"camera_id": "cam1", "locations": []}"""),
+      (v, """{"timestamp": 1704067200000, "camera_id": "nan", "locations": []}"""),
+      // null value and non-JSON on a known topic: dead letters only
+      (v, null),
+      (v, """{definitely not json"""),
+      ("MLK_AIR_QUALITY", """{"timestamp": 1704070800000, "nicename": "downtown", "pm25": 12.5, "o3": 0.031}"""),
+      ("EPB_AIR_QUALITY", """{"timestamp": 1709251200000, "nicename": "riverside", "pm25": 3.0}"""),
+      // air-quality gates: NaN key, epoch 1970; then non-JSON
+      ("MLK_AIR_QUALITY", """{"timestamp": 1704070860000, "nicename": "NaN", "pm25": 1.0}"""),
+      ("MLK_AIR_QUALITY", """{"timestamp": 1000, "nicename": "downtown", "pm25": 2.0}"""),
+      ("EPB_AIR_QUALITY", """not json at all"""),
+      // a null topic dead-letters as __null__, like an unknown one
+      (null, """{"timestamp": 1704067200000}"""),
+      ("mystery_topic", """{"whatever": true}"""))
+    IngestPipeline.writer(input.toDF().toDF("topic", "value"), root, ckpt, availableNow = true)
+      .start().awaitTermination()
+
+    def rows(df: org.apache.spark.sql.DataFrame) = df.toJSON.collect().sorted.toSeq
+    val vision = spark.read.parquet(s"$root/vision")
+    val aq = spark.read.parquet(s"$root/air_quality")
+    val dead = spark.read.parquet(s"$root/_dead_letter")
+    // lake column order and types are part of the table contract
+    assert(vision.schema.toDDL ===
+      "timestamp BIGINT,locations ARRAY<STRUCT<x: DOUBLE, y: DOUBLE, label: STRING>>,hit_counts INT,locations_json STRING,ts TIMESTAMP,entity STRING,year INT,month INT")
+    assert(aq.schema.toDDL === "timestamp BIGINT,props STRING,ts TIMESTAMP,entity STRING,year INT,month INT")
+    assert(dead.schema.toDDL === "value STRING,reason STRING,topic STRING")
+    assert(rows(vision) === Seq(
+      """{"timestamp":1704067200000,"locations":[{"x":1.0,"y":2.0,"label":"car"}],"hit_counts":7,"locations_json":"[{\"x\":1.0,\"y\":2.0,\"label\":\"car\"}]","ts":"2024-01-01T00:00:00.000Z","entity":"cam1","year":2024,"month":1}""",
+      """{"timestamp":1704067260000,"locations":[{"x":1.0,"y":2.0,"label":"car"},{"x":3.0,"y":4.0,"label":"bus"},{"x":5.0,"y":6.0,"label":"van"}],"hit_counts":3,"locations_json":"[{\"x\":1.0,\"y\":2.0,\"label\":\"car\"},{\"x\":3.0,\"y\":4.0,\"label\":\"bus\"},{\"x\":5.0,\"y\":6.0,\"label\":\"van\"}]","ts":"2024-01-01T00:01:00.000Z","entity":"cam3","year":2024,"month":1}""",
+      """{"timestamp":1704067320000,"locations":[{"y":2.0,"label":"car"}],"hit_counts":1,"locations_json":"[{\"y\":2.0,\"label\":\"car\"}]","ts":"2024-01-01T00:02:00.000Z","entity":"cam4","year":2024,"month":1}""",
+      """{"timestamp":1706745600000,"locations":[{"x":1.0,"y":2.0,"label":"car"},{"x":3.0,"y":4.0,"label":"bus"}],"hit_counts":2,"locations_json":"[{\"x\":1.0,\"y\":2.0,\"label\":\"car\"},{\"x\":3.0,\"y\":4.0,\"label\":\"bus\"}]","ts":"2024-02-01T00:00:00.000Z","entity":"cam2","year":2024,"month":2}"""))
+    assert(rows(aq) === Seq(
+      """{"timestamp":1704070800000,"props":"{\"timestamp\": 1704070800000, \"nicename\": \"downtown\", \"pm25\": 12.5, \"o3\": 0.031}","ts":"2024-01-01T01:00:00.000Z","entity":"downtown","year":2024,"month":1}""",
+      """{"timestamp":1709251200000,"props":"{\"timestamp\": 1709251200000, \"nicename\": \"riverside\", \"pm25\": 3.0}","ts":"2024-03-01T00:00:00.000Z","entity":"riverside","year":2024,"month":3}"""))
+    // toJSON omits the null `value` of the null-value row
+    assert(rows(dead) === Seq(
+      """{"reason":"malformed_json","topic":"cuip_vision_events"}""",
+      """{"value":"not json at all","reason":"malformed_json","topic":"EPB_AIR_QUALITY"}""",
+      """{"value":"{\"timestamp\": 1704067200000}","reason":"unknown_topic","topic":"__null__"}""",
+      """{"value":"{\"timestamp\": 1704067260000, \"camera_id\": \"cam3\", \"locations\": [{\"x\":1.0,\"y\":2.0,\"label\":\"car\"},{\"x\":3.0,\"y\":4.0,\"label\":\"bus\"},{\"x\":5.0,\"y\":6.0,\"label\":\"van\"}], \"hit_counts\": \"x\"}","reason":"malformed_json","topic":"cuip_vision_events"}""",
+      """{"value":"{\"timestamp\": 1704067320000, \"camera_id\": \"cam4\", \"locations\": [{\"x\":\"far\",\"y\":2.0,\"label\":\"car\"}], \"hit_counts\": 1}","reason":"malformed_json","topic":"cuip_vision_events"}""",
+      """{"value":"{\"timestamp\": \"abc\", \"camera_id\": \"cam5\", \"locations\": []}","reason":"malformed_json","topic":"cuip_vision_events"}""",
+      """{"value":"{\"whatever\": true}","reason":"unknown_topic","topic":"mystery_topic"}""",
+      """{"value":"{definitely not json","reason":"malformed_json","topic":"cuip_vision_events"}"""))
+  }
+
+  test("dead letters spread over several input files commit one file per topic per batch") {
+    val root = Files.createTempDirectory("graft_lake_dl_").toString
+    val src = Files.createTempDirectory("graft_src_dl_").toString
+    (0 until 3).foreach { i =>
+      Files.write(java.nio.file.Paths.get(s"$src/part$i.json"), java.util.Arrays.asList(
+        s"""{"topic": "mystery_topic", "value": "{\\"n\\": $i}"}""",
+        s"""{"topic": "cuip_vision_events", "value": "not json $i"}""",
+        """{"topic": "cuip_vision_events", "value": "{\"timestamp\": 1704067200000, \"camera_id\": \"cam1\", \"locations\": []}"}"""))
+    }
+    val batch = spark.read.schema("topic STRING, value STRING").json(src)
+    assert(batch.rdd.getNumPartitions === 3)
+    IngestPipeline.routeAndWrite(batch, root)
+
+    val leaves = new java.io.File(s"$root/_dead_letter").listFiles().filter(_.isDirectory)
+    assert(leaves.map(_.getName).sorted ===
+      Array("topic=cuip_vision_events", "topic=mystery_topic"))
+    leaves.foreach { leaf =>
+      assert(leaf.listFiles().count(_.getName.endsWith(".parquet")) === 1, leaf.getName)
+    }
+    assert(IngestPipeline.readDeadLetter(spark, root).count() === 6)
+    assert(spark.read.parquet(s"$root/vision").count() === 3)
+  }
+
+  test("a failed table commit is rethrown after the others commit; no job or cache outlives it") {
+    val root = Files.createTempDirectory("graft_lake_fail_").toString
+    // a plain file where the air_quality table directory belongs
+    Files.write(java.nio.file.Paths.get(s"$root/air_quality"), "x".getBytes)
+    val batch = Seq(
+      ("cuip_vision_events",
+        """{"timestamp": 1704067200000, "camera_id": "cam1", "locations": [], "hit_counts": 1}"""),
+      ("MLK_AIR_QUALITY", """{"timestamp": 1704070800000, "nicename": "downtown", "pm25": 9.5}"""),
+      ("mystery_topic", """{"x": 1}""")).toDF("topic", "value")
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+
+    val e = intercept[Exception](IngestPipeline.routeAndWrite(batch, root))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains(s"$root/air_quality")), e)
+    org.apache.spark.ListenerBusAccess.settle(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === cachedBefore)
+    // the other tables committed
+    assert(spark.read.parquet(s"$root/vision").count() === 1)
+    assert(IngestPipeline.readDeadLetter(spark, root).count() === 1)
+  }
+
+  test("query.stop() during a table commit returns only after every write has ended") {
+    val dir = Files.createTempDirectory("graft_lake_stop_").toString
+    val ckpt = Files.createTempDirectory("graft_ckpt_stop_").toString
+    spark.sparkContext.hadoopConfiguration.set("fs.holdfs.impl", classOf[HoldCommitFs].getName)
+    HoldCommitFs.reset()
+    implicit val sqlCtx: org.apache.spark.sql.classic.SQLContext =
+      spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
+    val input = MemoryStream[(String, String)]
+    input.addData(
+      ("cuip_vision_events",
+        """{"timestamp": 1704067200000, "camera_id": "cam1", "locations": [], "hit_counts": 1}"""),
+      ("MLK_AIR_QUALITY", """{"timestamp": 1704070800000, "nicename": "downtown", "pm25": 9.5}"""),
+      ("mystery_topic", """{"x": 1}"""))
+    val query = IngestPipeline.writer(input.toDF().toDF("topic", "value"),
+      s"holdfs://lake$dir", ckpt, availableNow = true).start()
+    // the dead-letter commit is now held on a pool thread, on the driver
+    assert(HoldCommitFs.held.await(1, java.util.concurrent.TimeUnit.MINUTES), query.exception)
+    query.stop()
+
+    assert(HoldCommitFs.released, "stop() returned while a table commit was still running")
+    def listing(): Seq[String] = scala.util.Using.resource(Files.walk(java.nio.file.Paths.get(dir))) {
+      _.iterator().asScala.map(_.toString).toSeq.sorted }
+    val atStop = listing()
+    Thread.sleep(HoldCommitFs.holdMs + 500)
+    assert(listing() === atStop)
+    org.apache.spark.ListenerBusAccess.settle(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
   }
 
   test("O7 priorityTopics: two independent writers drain hot and rest topics") {
@@ -235,4 +381,42 @@ class StreamingIngestSpec extends SparkSpec {
 
     assert(spark.read.parquet(s"$root/vision").count() === 1)
   }
+}
+
+/** The local file system under the `holdfs` scheme, except that writing
+  * the `_dead_letter` table's `_SUCCESS` marker, the last step of that
+  * table's driver-side job commit, first sleeps `holdMs` regardless of
+  * interrupts. It gives a spec a commit that is still running when it
+  * calls `query.stop()`.
+  */
+class HoldCommitFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("holdfs://lake/")
+  override def getScheme: String = "holdfs"
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long, progress: Progressable): FSDataOutputStream =
+    held(f)(super.create(f, overwrite, bufferSize, replication, blockSize, progress))
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream =
+    held(f)(super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress))
+
+  private def held(f: Path)(create: => FSDataOutputStream): FSDataOutputStream = {
+    val hold = f.getName == "_SUCCESS" && f.getParent.getName == "_dead_letter"
+    if (hold) {
+      HoldCommitFs.held.countDown()
+      val until = System.nanoTime() + HoldCommitFs.holdMs * 1000000L
+      while (System.nanoTime() < until)
+        try Thread.sleep(10) catch { case _: InterruptedException => }
+    }
+    val out = create
+    if (hold) HoldCommitFs.released = true
+    out
+  }
+}
+
+object HoldCommitFs {
+  val holdMs = 2000L
+  @volatile var held = new java.util.concurrent.CountDownLatch(1)
+  @volatile var released = false
+  def reset(): Unit = { held = new java.util.concurrent.CountDownLatch(1); released = false }
 }
