@@ -26,7 +26,10 @@ package graft
   *     (old-generation collection count over the same region) are
   *     artifact columns — an outlier whose gc column carries the gap
   *     is an environment finding, adjudicable from the artifact alone
-  *     with no judge re-run.
+  *     with no judge re-run. `queries_compiles` counts the Janino
+  *     compiles (codegen cache misses) inside the same window: after
+  *     the warm pass it should be near 0, so a codegen-cache regression
+  *     (see [[GraftSession.codegenCacheEntries]]) shows in the artifact.
   *  2. Fresh-JVM chunking: the parent process runs NO Spark at all; it
   *     partitions the query list into ~`SPARK_GRAFT_BENCH_CHUNK`-sized
   *     chunks (default 30 → 9 JVMs for 242 queries) by HASH of the
@@ -69,7 +72,10 @@ object Bench {
   }.map(_.getCollectionCount).sum
 
   private case class QRes(name: String, min: Double, med: Double,
-                          gcSec: Double, majGc: Long)
+                          gcSec: Double, majGc: Long, compiles: Long)
+
+  private def compileCount: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private def d3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", v)
@@ -150,6 +156,7 @@ object Bench {
       }
       val gc0 = gcTimeMs
       val maj0 = majorGcCount
+      val cc0 = compileCount
       val first3 = (1 to 3).map(_ => pass())
       val times = (if (first3.min < 1.0) first3 ++ (1 to 2).map(_ => pass())
                    else first3).sorted
@@ -157,13 +164,14 @@ object Bench {
       // cleanup below, whose forced GC is protocol, not query cost
       val gcDelta = (gcTimeMs - gc0) / 1000.0
       val majDelta = majorGcCount - maj0
+      val ccDelta = compileCount - cc0
       // isolation boundary: drop every cached block this query left
       // (operator-internal persists, memoized index frames) and reap
       // dead references NOW — the next query starts from the same
       // clean slate a standalone run would
       spark.catalog.clearCache()
       System.gc()
-      QRes(name, times.head, times(times.length / 2), gcDelta, majDelta)
+      QRes(name, times.head, times(times.length / 2), gcDelta, majDelta, ccDelta)
     }
     val gcSec = gcTimeMs / 1000.0
     spark.stop()
@@ -184,6 +192,7 @@ object Bench {
       s""""gc_sec":${d3(gcSec)},"errors":$errJson,""" +
       s""""queries":${m(r => d3(r.min))},"queries_median":${m(r => d3(r.med))},""" +
       s""""queries_gc_sec":${m(r => d3(r.gcSec))},"queries_majgc":${m(_.majGc.toString)},""" +
+      s""""queries_compiles":${m(_.compiles.toString)},""" +
       s""""sf":"$sfDir"}"""
     println(json)
     // belt-and-braces artifact: the same line on disk survives any tail
@@ -196,7 +205,7 @@ object Bench {
   }
 
   // ---------------------------------------------------------------
-  // child protocol: one TSV row per query (Q name min med gc majgc,
+  // child protocol: one TSV row per query (Q name min med gc majgc compiles,
   // E name msg, G gcSec) — trivially mergeable, no JSON parsing
 
   private def childMain(sfDir: String, cpus: Int): Unit = {
@@ -205,7 +214,8 @@ object Bench {
     val (results, errors, gcSec) = runSuite(Some(names), exact = true,
       sfDir, cpus)
     val out = new StringBuilder
-    results.foreach(r => out ++= s"Q\t${r.name}\t${r.min}\t${r.med}\t${r.gcSec}\t${r.majGc}\n")
+    results.foreach(r =>
+      out ++= s"Q\t${r.name}\t${r.min}\t${r.med}\t${r.gcSec}\t${r.majGc}\t${r.compiles}\n")
     errors.foreach { case (k, v) =>
       out ++= s"E\t$k\t${v.replaceAll("[\\t\\n\\r]", " ")}\n" }
     out ++= s"G\t$gcSec\n"
@@ -268,9 +278,9 @@ object Bench {
         java.nio.charset.StandardCharsets.UTF_8)
         .linesIterator.filter(_.nonEmpty).foreach { line =>
           line.split("\t", -1) match {
-            case Array("Q", n, mn, md, gc, mj) =>
+            case Array("Q", n, mn, md, gc, mj, cc) =>
               results += QRes(n, mn.toDouble, md.toDouble, gc.toDouble,
-                mj.toLong)
+                mj.toLong, cc.toLong)
             case Array("E", n, msg) => errors(n) = msg
             case Array("G", g) => gcSec += g.toDouble
             case _ =>

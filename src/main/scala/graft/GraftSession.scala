@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Session configuration for the graft engine.
   *
@@ -10,8 +12,41 @@ import org.apache.spark.sql.SparkSession
   * which Spark's TimestampType (microsecond) cannot represent natively —
   * we read it as an epoch-nanos Long and truncate to micros in
   * [[Tables.events]], matching DuckDB's ns→µs truncation.
+  *
+  * Sessions are built through [[builder]], which also sizes the static
+  * codegen cache ([[codegenCacheEntries]]); runtime confs go through
+  * [[configure]].
   */
 object GraftSession {
+
+  /** `spark.sql.codegen.cache.maxEntries` for every session the engine
+    * builds. Spark keeps compiled whole-stage and expression classes in
+    * an LRU cache that is JVM-GLOBAL: `CodeGenerator` builds it once per
+    * JVM, sized from the conf of whichever session generates code first,
+    * and a static conf cannot change after that. At the default of 100
+    * entries the registry thrashes it — nine perfbench queries need 177
+    * classes, so each timed round recompiled all of them with Janino.
+    * The size comes from a measurement of the engine's working set: one
+    * in-JVM pass of all 244 registry queries at sf0.01 on 4 cores
+    * compiled 3.5–3.7k distinct classes, and 8,192 leaves headroom over
+    * that for about 30 MB more metaspace (BASELINE.md `codegen_cache`
+    * has the compile counts, wall times and metaspace at both sizes).
+    * It is not a bench setting. A value the launcher already set
+    * (spark-submit `--conf`, a `-Dspark.…` property) wins.
+    */
+  val codegenCacheEntries: Int = 8192
+
+  private val codegenCacheKey = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+
+  /** `SparkSession.builder()` carrying the engine's static confs (the
+    * codegen cache size) unless the launcher set them. Every main and
+    * [[local]] builds its session through this.
+    */
+  def builder(): SparkSession.Builder = {
+    val b = SparkSession.builder()
+    if (new SparkConf().contains(codegenCacheKey)) b
+    else b.config(codegenCacheKey, codegenCacheEntries.toLong)
+  }
 
   /** Apply graft runtime confs to an existing session (idempotent). */
   def configure(spark: SparkSession): SparkSession = {
@@ -74,8 +109,7 @@ object GraftSession {
     */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
     tuneForSmallFiles(configure(
-      SparkSession
-        .builder()
+      builder()
         .master(s"local[$cores]")
         .appName("graft")
         .config("spark.sql.shuffle.partitions", cores.toString)

@@ -43,37 +43,18 @@ object SparkEntry {
 
   /** Scratch-root key for the standing-sink queries (q200/q204/q231/
     * q232/q234): md5 over the query tag plus the dataset's CONTENT
-    * fingerprint — each backing file's name, byte length, and mtime —
-    * not the path string alone. A dataset REGENERATED at the same path
-    * must get a fresh scratch root, or the sinks' `_APPLIED` markers
-    * would short-circuit the folds and serve stale standing state
-    * (round-16 ADVICE); and two concurrent suites over different
-    * content no longer race one marker protocol. Besides metadata the
-    * key folds in each file's LAST 64 BYTES (the parquet footer tail:
-    * metadata length + stats offsets — content-sensitive even when a
-    * regeneration lands identical names/sizes inside one mtime tick,
-    * round-17 ADVICE), so the key still costs microseconds (one tail
-    * read per file, no data scan).
+    * fingerprint ([[Tables.fileIdentity]]: each backing file's name,
+    * byte length, mtime and footer tail), not the path string alone. A
+    * dataset REGENERATED at the same path must get a fresh scratch
+    * root, or the sinks' `_APPLIED` markers would short-circuit the
+    * folds and serve stale standing state (round-16 ADVICE); and two
+    * concurrent suites over different content no longer race one marker
+    * protocol. The footer tail keeps the key content-sensitive even when
+    * a regeneration lands identical names/sizes inside one mtime tick
+    * (round-17 ADVICE).
     */
   private def scratchKeyHex(tag: String, d: String, table: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.sortBy(_.getName).toSeq).getOrElse(Seq.empty)
-          .flatMap(walk)
-      else Seq(f)
-    def tail64(p: java.io.File): String = {
-      val raf = new java.io.RandomAccessFile(p, "r")
-      try {
-        val n = math.min(64L, raf.length).toInt
-        raf.seek(raf.length - n)
-        val buf = new Array[Byte](n)
-        raf.readFully(buf)
-        java.util.Base64.getEncoder.encodeToString(buf)
-      } finally raf.close()
-    }
-    val sig = walk(new java.io.File(d, s"$table.parquet"))
-      .map(p => s"${p.getName}|${p.length}|${p.lastModified}|${tail64(p)}")
-      .mkString(",")
+    val sig = Tables.fileIdentity(new java.io.File(d, s"$table.parquet"))
     java.security.MessageDigest.getInstance("MD5")
       .digest(s"$tag|$d|$sig".getBytes("UTF-8")).map("%02x".format(_)).mkString
   }

@@ -75,9 +75,11 @@ object PartitionedSink {
     * clock; each leaf's rewrite additionally parallelizes across the
     * cluster). Every queued leaf runs to completion (or failure) before
     * the pass returns; if any leaf failed, the first failure is rethrown
-    * AFTER the others finish — no compaction job keeps running detached
-    * past this method's return. Completed leaves stay compacted (the
-    * pass is idempotent — rerun it).
+    * AFTER the others finish; an interrupt skips the leaves not yet
+    * started and still waits for the running rewrites ([[AwaitAll]]) —
+    * no compaction job keeps running detached past this method's
+    * return. Completed leaves stay compacted (the pass is idempotent —
+    * rerun it).
     *
     * `format` must match what [[appendPartitioned]] wrote: parquet/orc
     * reads merge schemas across files (the dead-letter migration path); csv
@@ -235,21 +237,8 @@ object PartitionedSink {
     val allLeaves = leaves(rootPath)
     if (allLeaves.isEmpty) 0
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(parallelism, allLeaves.size))
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.util.{Failure, Success, Try}
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        // each leaf wrapped in Try: a failure must not fail-fast the
-        // sequence while queued leaves still run on the pool — await ALL
-        // outcomes, then rethrow, so nothing runs past this return
-        val rewrites = allLeaves.map(leaf => Future(Try(compactLeaf(leaf))))
-        val outcomes = Await.result(
-          Future.sequence(rewrites), scala.concurrent.duration.Duration.Inf)
-        outcomes.collectFirst { case Failure(e) => e }.foreach(e => throw e)
-        outcomes.count { case Success(rewrote) => rewrote; case _ => false }
-      } finally pool.shutdown()
+      AwaitAll(math.min(parallelism, allLeaves.size))(
+        allLeaves.map(leaf => () => compactLeaf(leaf))).count(identity)
     }
   }
 }

@@ -79,7 +79,7 @@ object CurationMain {
   def main(args: Array[String]): Unit = {
     val conf = IngestMain.parseArgs(args)
     val spark = GraftSession.configure(
-      SparkSession.builder().appName("graft-curation").getOrCreate())
+      GraftSession.builder().appName("graft-curation").getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     IngestMain.validateStorageConf(spark, conf)
     val q = startQuery(spark, conf)

@@ -188,7 +188,7 @@ object IngestMain {
   def main(args: Array[String]): Unit = {
     val conf = parseArgs(args)
     val spark = GraftSession.configure(
-      SparkSession.builder().appName("graft-ingest").getOrCreate())
+      GraftSession.builder().appName("graft-ingest").getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
 
     validateStorageConf(spark, conf)

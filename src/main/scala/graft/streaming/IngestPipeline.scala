@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors, TimeUnit}
-
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -9,7 +7,7 @@ import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.ops.EventOps
 import graft.schemas.TopicSchemas
-import graft.sinks.PartitionedSink
+import graft.sinks.{AwaitAll, PartitionedSink}
 
 /** The reference's whole job (SURVEY.md §3 E1/E2) as one Structured
   * Streaming pipeline (model: Armbrust et al., "Structured Streaming: A
@@ -199,34 +197,8 @@ object IngestPipeline {
       val writes = Seq(nVision -> writeVision _, nAq -> writeAirQuality _,
           nDead -> writeDeadLetters _)
         .collect { case (rows, write) if rows > 0 => write }
-      if (writes.nonEmpty) {
-        val pool = Executors.newFixedThreadPool(writes.size)
-        try {
-          // a FutureTask records any Throwable, fatal ones too, so every
-          // get() returns; one failure cannot abandon the other writes
-          val pending = writes.map(write => pool.submit((() => write()): Callable[Unit]))
-          val failures = pending.flatMap { f =>
-            try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
-          }
-          failures.headOption.foreach(e => throw e)
-        } finally awaitShutdown(pool)
-      }
+      if (writes.nonEmpty) AwaitAll(writes.size)(writes)
     } finally parsed.unpersist()
-  }
-
-  /** Shut `pool` down and wait until its writes have finished, also when
-    * this thread is interrupted: `query.stop()` interrupts the stream
-    * thread after cancelling its jobs, and must not return while a pool
-    * thread still commits files. The interrupt is restored afterwards.
-    */
-  private def awaitShutdown(pool: ExecutorService): Unit = {
-    pool.shutdown()
-    var interrupted = false
-    var done = false
-    while (!done)
-      try done = pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
-      catch { case _: InterruptedException => interrupted = true }
-    if (interrupted) Thread.currentThread().interrupt()
   }
 
   /** THE read path for the dead-letter table, across schema generations.

@@ -163,6 +163,37 @@ class SinkSpec extends SparkSpec {
       .as[(Long, Int, String, Int, Int)].collect().toSet === before)
   }
 
+  test("compaction: an interrupt returns only after the running leaf rewrite has ended") {
+    val dir = Files.createTempDirectory("graft_compact_stop_").toString
+    (0 until 3).foreach(i =>
+      PartitionedSink.appendPartitioned(sample.filter(col("id") === 1L)
+        .withColumn("id", col("id") + lit(i * 10L)), dir))
+    val before = spark.read.parquet(dir).as[(Long, Int, String, Int, Int)].collect().toSet
+    spark.sparkContext.hadoopConfiguration.set("fs.holdfs.impl", classOf[HoldCommitFs].getName)
+    // hold the commit point of the one leaf's swap, on a pool thread
+    HoldCommitFs.reset(_.getName == "_COMMITTED")
+    @volatile var outcome: Either[Throwable, Int] = null
+    @volatile var releasedAtReturn = false
+    val caller = new Thread(() => {
+      outcome =
+        try Right(PartitionedSink.compactPartitions(spark, s"holdfs://lake$dir"))
+        catch { case e: Throwable => Left(e) }
+      releasedAtReturn = HoldCommitFs.released
+    })
+    caller.start()
+    assert(HoldCommitFs.held.await(1, java.util.concurrent.TimeUnit.MINUTES))
+    caller.interrupt()
+    caller.join(60000)
+    assert(!caller.isAlive)
+    assert(releasedAtReturn, "compactPartitions returned while a leaf rewrite was still running")
+    assert(outcome.swap.exists(_.isInstanceOf[InterruptedException]), outcome)
+    // the held rewrite finished its swap: one file, no parked copies
+    val leaf = new java.io.File(s"$dir/entity=camA/year=2024/month=1")
+    assert(parquetFiles(leaf).length === 1)
+    assert(!new java.io.File(leaf, "_compact_old").exists())
+    assert(spark.read.parquet(dir).as[(Long, Int, String, Int, Int)].collect().toSet === before)
+  }
+
   test("orc lake: partitioned append + compaction round-trip (Spark-bundled columnar alternative)") {
     val dir = Files.createTempDirectory("graft_orc_").toString
     (0 until 3).foreach { i =>

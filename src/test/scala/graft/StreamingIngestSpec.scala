@@ -1,13 +1,8 @@
 package graft
 
-import java.net.URI
 import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
-import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.util.Progressable
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -381,42 +376,4 @@ class StreamingIngestSpec extends SparkSpec {
 
     assert(spark.read.parquet(s"$root/vision").count() === 1)
   }
-}
-
-/** The local file system under the `holdfs` scheme, except that writing
-  * the `_dead_letter` table's `_SUCCESS` marker, the last step of that
-  * table's driver-side job commit, first sleeps `holdMs` regardless of
-  * interrupts. It gives a spec a commit that is still running when it
-  * calls `query.stop()`.
-  */
-class HoldCommitFs extends RawLocalFileSystem {
-  override def getUri: URI = URI.create("holdfs://lake/")
-  override def getScheme: String = "holdfs"
-  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
-                      blockSize: Long, progress: Progressable): FSDataOutputStream =
-    held(f)(super.create(f, overwrite, bufferSize, replication, blockSize, progress))
-  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
-                      replication: Short, blockSize: Long,
-                      progress: Progressable): FSDataOutputStream =
-    held(f)(super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress))
-
-  private def held(f: Path)(create: => FSDataOutputStream): FSDataOutputStream = {
-    val hold = f.getName == "_SUCCESS" && f.getParent.getName == "_dead_letter"
-    if (hold) {
-      HoldCommitFs.held.countDown()
-      val until = System.nanoTime() + HoldCommitFs.holdMs * 1000000L
-      while (System.nanoTime() < until)
-        try Thread.sleep(10) catch { case _: InterruptedException => }
-    }
-    val out = create
-    if (hold) HoldCommitFs.released = true
-    out
-  }
-}
-
-object HoldCommitFs {
-  val holdMs = 2000L
-  @volatile var held = new java.util.concurrent.CountDownLatch(1)
-  @volatile var released = false
-  def reset(): Unit = { held = new java.util.concurrent.CountDownLatch(1); released = false }
 }
