@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.internal.StaticSQLConf
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 
 /** Session configuration for the graft engine.
   *
@@ -13,9 +13,9 @@ import org.apache.spark.sql.internal.StaticSQLConf
   * we read it as an epoch-nanos Long and truncate to micros in
   * [[Tables.events]], matching DuckDB's ns→µs truncation.
   *
-  * Sessions are built through [[builder]], which also sizes the static
-  * codegen cache ([[codegenCacheEntries]]); runtime confs go through
-  * [[configure]].
+  * Sessions are built through [[builder]], which applies the engine's
+  * build-time confs ([[staticConfs]]: the codegen cache size and no
+  * session artifact isolation); runtime confs go through [[configure]].
   */
 object GraftSession {
 
@@ -31,22 +31,46 @@ object GraftSession {
     * compiled 3.5–3.7k distinct classes, and 8,192 leaves headroom over
     * that for about 30 MB more metaspace (BASELINE.md `codegen_cache`
     * has the compile counts, wall times and metaspace at both sizes).
-    * It is not a bench setting. A value the launcher already set
-    * (spark-submit `--conf`, a `-Dspark.…` property) wins.
+    * It is not a bench setting; [[staticConfs]] applies it.
     */
   val codegenCacheEntries: Int = 8192
 
-  private val codegenCacheKey = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
-
-  /** `SparkSession.builder()` carrying the engine's static confs (the
-    * codegen cache size) unless the launcher set them. Every main and
-    * [[local]] builds its session through this.
+  /** The confs every session the engine builds carries, each with the
+    * engine's value. Spark reads each once (the cache size when the JVM
+    * first generates code, the isolation flag when a session first asks
+    * its artifact manager), so they go on the builder, not into
+    * [[configure]]:
+    *
+    *  - `spark.sql.codegen.cache.maxEntries`: [[codegenCacheEntries]].
+    *  - `spark.sql.artifact.isolation.enabled`: `false`. With isolation
+    *    on (Spark 4's default), every session UUID gets its own executor
+    *    class loader, and every streaming query runs on a cloned session
+    *    with a new UUID. `CodeGenerator`'s cache is keyed by class loader
+    *    and code, so each query missed it: Janino recompiled every
+    *    executor-side class of the ingest path (35 per later `drain` query,
+    *    BASELINE.md `streaming_classloader`), the JIT started them cold,
+    *    and the cache kept each dead loader's entries until LRU eviction.
+    *    Isolation separates the jars and classes that clients add to a
+    *    session (`addArtifact`); the engine adds none, so it buys
+    *    nothing here. Spark itself turns it off for Hive-enabled sessions.
     */
-  def builder(): SparkSession.Builder = {
-    val b = SparkSession.builder()
-    if (new SparkConf().contains(codegenCacheKey)) b
-    else b.config(codegenCacheKey, codegenCacheEntries.toLong)
-  }
+  private val engineConfs: Map[String, String] = Map(
+    StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key -> codegenCacheEntries.toString,
+    SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false")
+
+  /** The engine's build-time confs as [[builder]] applies them, given the
+    * launcher's `conf`: a key the launcher already set (spark-submit
+    * `--conf`, a `-Dspark.…` property) keeps the launcher's value; every
+    * other key gets the engine's.
+    */
+  def staticConfs(conf: SparkConf): Map[String, String] =
+    engineConfs.map { case (k, v) => k -> conf.get(k, v) }
+
+  /** `SparkSession.builder()` carrying [[staticConfs]] of the launcher's
+    * conf. Every main and [[local]] builds its session through this.
+    */
+  def builder(): SparkSession.Builder =
+    SparkSession.builder().config(staticConfs(new SparkConf()))
 
   /** Apply graft runtime confs to an existing session (idempotent). */
   def configure(spark: SparkSession): SparkSession = {

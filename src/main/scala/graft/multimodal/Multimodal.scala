@@ -36,6 +36,10 @@ object Multimodal {
   // All payloads here are in-memory byte arrays; the memory-backed
   // stream is strictly better. Executes once per JVM at first use of
   // any kernel in this object (driver and executors alike).
+  // The flag is PROCESS-GLOBAL JVM state, set as a side effect of this
+  // object loading: it also switches off the disk cache for every other
+  // ImageIO user in the JVM, and only reaches a read that starts after
+  // this object has loaded.
   javax.imageio.ImageIO.setUseCache(false)
 
   /** A media row: opaque payload + typed metadata. */

@@ -65,6 +65,15 @@ object Graph {
     * this materializes each round's ranks and costs one extra
     * rank-scale join per iteration, the classic trade for unknown
     * iteration counts.
+    *
+    * Eager: the call runs Spark jobs before it returns, not when the
+    * returned plan executes. It counts the distinct edges (which sizes
+    * the partition budget and fills the edge cache) and the nodes (the
+    * `1/n` literals), and with `convergeL1Units > 0` it also
+    * checkpoints and diffs every iteration's ranks. A caller that only
+    * builds or explains the plan pays these jobs, and their failures
+    * and timeouts surface from `pageRank` itself. These are iterative
+    * jobs that stay (ROADMAP item 2, kind (c)).
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iterations: Int = 5, dampingPct: Int = 85,

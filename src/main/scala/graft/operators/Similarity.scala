@@ -674,6 +674,15 @@ object Similarity {
     // `1 − round4(max over others of cos)` because x ↦ 1 − round4(x)
     // is monotone non-increasing (round4 is monotone, IEEE subtraction
     // from a constant is monotone) — SimilaritySpec pins the outputs.
+    // The kernel's null-ownIdx path (both elements null, where the old
+    // fold still computed `b`) must stay unreachable for a row that can
+    // score: every scored label appears in `cents`. It holds because
+    // `cent` and `base` both come from `clean`, and any row with a
+    // non-empty vector puts its label into the centroid tier through
+    // `posexplode`. A label missing from `cents` has only empty
+    // vectors, which score [null, null] with or without an own index.
+    // Derive the centroids from any frame other than `clean` and this
+    // breaks silently.
     val ownIdx = cents.zipWithIndex.foldLeft(lit(null).cast("int")) {
       case (acc, ((l, _), i)) => when(col("label") === lit(l), lit(i)).otherwise(acc)
     }
