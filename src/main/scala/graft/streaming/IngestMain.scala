@@ -119,8 +119,13 @@ object IngestMain {
     * independent streaming queries: the hot topics get their own query
     * (own subscription, own checkpoint, faster `priorityInterval`
     * trigger), everything else drains on the normal `interval`. Combined
-    * with `minPartitions=` (more tasks per hot Kafka partition) this is
-    * the whole prioritization surface.
+    * with `minPartitions=` (a hot Kafka partition read as several
+    * splits) this is the whole prioritization surface. The router caps
+    * each batch at the executor slot count
+    * ([[IngestPipeline.routeAndWrite]] coalesces it to
+    * `defaultParallelism`), so a larger `minPartitions` adds no tasks;
+    * a hot partition's splits still spread over the slots rather than
+    * queue behind one task.
     */
   def startQueries(spark: SparkSession, conf: Map[String, String]): Seq[StreamingQuery] = {
     val root = conf.getOrElse("root",

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -29,6 +30,16 @@ import graft.sinks.{AwaitAll, PartitionedSink}
   */
 object IngestPipeline {
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** What [[routeAndWrite]] saw in one batch: rows per route (before the
+    * validity gates) and dead letters per reason.
+    */
+  final case class BatchCounts(vision: Long, airQuality: Long,
+                               malformedJson: Long, unknownTopic: Long) {
+    def deadLetters: Long = malformedJson + unknownTopic
+  }
+
   /** O1 — the Kafka scan. `startingOffsets=earliest` mirrors
     * `auto.offset.reset: beginning` (`run.py:31`); `maxOffsetsPerTrigger`
     * bounds micro-batch size (the reference's flush threshold + queue
@@ -52,10 +63,11 @@ object IngestPipeline {
       .option("startingOffsets", "earliest")
       .option("maxOffsetsPerTrigger", maxOffsetsPerTrigger)
     // O7 (resource split, `run.py:88-105`): `minPartitions` over-splits
-    // Kafka partitions so a hot topic gets more than one task per
-    // partition — the engine-level half of topic prioritization. The
-    // scheduling half is two writers with separate triggers; see
-    // [[IngestMain]] `priorityTopics=`.
+    // Kafka partitions so a hot partition is spread over the executor
+    // slots ([[routeAndWrite]] caps a batch at the slot count) — the
+    // engine-level half of topic prioritization. The scheduling half is
+    // two writers with separate triggers; see [[IngestMain]]
+    // `priorityTopics=`.
     minPartitions.foldLeft(reader)((r, n) => r.option("minPartitions", n)).load()
   }
 
@@ -124,12 +136,18 @@ object IngestPipeline {
 
   /** O8/O22 — topic routing, one pass per micro-batch:
     *
+    *   - the batch is coalesced to at most `defaultParallelism`
+    *     partitions (a no-op when it is already that narrow), so the
+    *     router fans out no finer than the executor slots, however the
+    *     source split the batch (files, Kafka topic-partitions);
     *   - one projection parses each row's JSON once, against its topic
-    *     family's schema, and tags dead rows with a `reason`; only this
-    *     parsed frame is cached;
-    *   - one counting job over it fills the cache and sizes the routes;
-    *     a route with no rows writes nothing, so no empty table
-    *     directory appears;
+    *     family's schema, and tags dead rows with a `reason`;
+    *   - one job materializes that parsed frame as an eager local
+    *     checkpoint and, through an [[Observation]] on the same pass,
+    *     counts each route and each dead-letter reason. A route with no
+    *     rows writes nothing, so no empty table directory appears. The
+    *     checkpoint's blocks are released before this returns, on every
+    *     path;
     *   - the non-empty tables (vision, then its `stats` rollup;
     *     `air_quality`; `_dead_letter`) commit concurrently, one driver
     *     thread each. All of them run to completion before the first
@@ -140,19 +158,29 @@ object IngestPipeline {
     *   - dead letters are shuffled on `topic`, so each batch writes one
     *     file per topic.
     *
+    * A 30k-message batch so runs 7 jobs: the checkpoint, then a shuffle
+    * and a write per table.
+    *
     * Unknown topics AND unreadable rows on known topics land in the
     * dead-letter table with a `reason` (the reference logs-and-drops
     * unknowns, `df_manager.py:115-121`, and skips unreadable messages
     * visibly, `run.py:40-42`). A row that parses only partially (say, a
     * string where a number belongs) both lands with the fields that did
     * parse and is dead-lettered.
+    *
+    * @return the batch's rows per route and dead letters per reason
     */
   def routeAndWrite(batch: DataFrame, root: String, format: String = "parquet",
-                    stats: Boolean = false): Unit = {
+                    stats: Boolean = false): BatchCounts = {
     val value = col("value").cast("string")
     def malformed(record: String): Column =
       col(record).isNull || col(s"$record._corrupt").isNotNull
-    val parsed = batch.select(
+    def reasonIs(r: String): Column = count(when(col("reason") === r, 1)).as(r)
+    // unnamed: IngestMain's priorityTopics runs two queries on one
+    // session at once
+    val observed = Observation()
+    val parsed = batch.coalesce(batch.sparkSession.sparkContext.defaultParallelism)
+      .select(
         col("topic"), value.as("value"),
         when(isVision, rescuedJson(value, TopicSchemas.visionEvent)).as("vision"),
         when(isAq, rescuedJson(value, TopicSchemas.airQualityReading)).as("aq"))
@@ -160,10 +188,13 @@ object IngestPipeline {
         when(isVision, when(malformed("vision"), lit("malformed_json")))
           .when(isAq, when(malformed("aq"), lit("malformed_json")))
           .otherwise(lit("unknown_topic")))
-      .persist()
+      .observe(observed, count(when(isVision, 1)).as("vision"),
+        count(when(isAq, 1)).as("air_quality"),
+        reasonIs("malformed_json"), reasonIs("unknown_topic"))
+      .localCheckpoint(eager = true)
     try {
-      val Row(nVision: Long, nAq: Long, nDead: Long) = parsed.agg(
-        count(when(isVision, 1)), count(when(isAq, 1)), count(col("reason"))).head()
+      val m = observed.get.view.mapValues(_.asInstanceOf[Long])
+      val counts = BatchCounts(m("vision"), m("air_quality"), m("malformed_json"), m("unknown_topic"))
 
       def writeVision(): Unit = {
         // one output file per (entity, year, month) partition instead of
@@ -194,11 +225,16 @@ object IngestPipeline {
           .write.mode("append").partitionBy("topic").format(format)
           .save(s"$root/_dead_letter")
 
-      val writes = Seq(nVision -> writeVision _, nAq -> writeAirQuality _,
-          nDead -> writeDeadLetters _)
+      val writes = Seq(counts.vision -> writeVision _, counts.airQuality -> writeAirQuality _,
+          counts.deadLetters -> writeDeadLetters _)
         .collect { case (rows, write) if rows > 0 => write }
       if (writes.nonEmpty) AwaitAll(writes.size)(writes)
-    } finally parsed.unpersist()
+      counts
+    } finally parsed.queryExecution.logical match {
+      // Dataset.unpersist does not reach a checkpoint's RDD
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
   }
 
   /** THE read path for the dead-letter table, across schema generations.
@@ -221,7 +257,8 @@ object IngestPipeline {
   }
 
   /** Wire a Kafka-shaped stream (must have `topic` and `value` columns)
-    * to the routed sink. `availableNow = true` is CRON-drain mode (E2);
+    * to the routed sink, logging each batch's [[BatchCounts]] as one
+    * INFO line. `availableNow = true` is CRON-drain mode (E2);
     * false runs as a daemon with the given trigger interval.
     */
   def writer(stream: DataFrame, root: String, checkpoint: String,
@@ -230,6 +267,9 @@ object IngestPipeline {
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(interval))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        routeAndWrite(batch, root, format, stats) }
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val c = routeAndWrite(batch, root, format, stats)
+        log.info(s"batch $batchId: rows vision=${c.vision} air_quality=${c.airQuality}; " +
+          s"dead letters malformed_json=${c.malformedJson} unknown_topic=${c.unknownTopic}")
+      }
 }

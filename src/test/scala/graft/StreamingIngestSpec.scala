@@ -4,10 +4,15 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.streaming.IngestPipeline
+import graft.streaming.IngestPipeline.BatchCounts
 
 /** End-to-end streaming spec: a MemoryStream plays the Kafka source
   * (same (topic, value) shape, same JSON decode path), drained with
@@ -18,6 +23,35 @@ import graft.streaming.IngestPipeline
 class StreamingIngestSpec extends SparkSpec {
   private val sp = spark
   import sp.implicits._
+
+  private val v = "cuip_vision_events"
+  /** Every dirty case the router must handle, in one batch. */
+  private val dirtyCases: Seq[(String, String)] = Seq(
+    (v, """{"timestamp": 1704067200000, "camera_id": "cam1", "locations": [{"x":1.0,"y":2.0,"label":"car"}], "hit_counts": 7}"""),
+    (v, """{"timestamp": 1706745600000, "camera_id": "cam2", "locations": [{"x":1.0,"y":2.0,"label":"car"},{"x":3.0,"y":4.0,"label":"bus"}]}"""),
+    // wrong-typed fields parse partially: the row lands (hit_counts
+    // patched to size(locations); the bad nested x nulled) AND is
+    // dead-lettered
+    (v, """{"timestamp": 1704067260000, "camera_id": "cam3", "locations": [{"x":1.0,"y":2.0,"label":"car"},{"x":3.0,"y":4.0,"label":"bus"},{"x":5.0,"y":6.0,"label":"van"}], "hit_counts": "x"}"""),
+    (v, """{"timestamp": 1704067320000, "camera_id": "cam4", "locations": [{"x":"far","y":2.0,"label":"car"}], "hit_counts": 1}"""),
+    // a bad timestamp fails the null-ts gate AND is dead-lettered
+    (v, """{"timestamp": "abc", "camera_id": "cam5", "locations": []}"""),
+    // gates: epoch 1970, missing ts, nan key
+    (v, """{"timestamp": 0, "camera_id": "cam1", "locations": []}"""),
+    (v, """{"camera_id": "cam1", "locations": []}"""),
+    (v, """{"timestamp": 1704067200000, "camera_id": "nan", "locations": []}"""),
+    // null value and non-JSON on a known topic: dead letters only
+    (v, null),
+    (v, """{definitely not json"""),
+    ("MLK_AIR_QUALITY", """{"timestamp": 1704070800000, "nicename": "downtown", "pm25": 12.5, "o3": 0.031}"""),
+    ("EPB_AIR_QUALITY", """{"timestamp": 1709251200000, "nicename": "riverside", "pm25": 3.0}"""),
+    // air-quality gates: NaN key, epoch 1970; then non-JSON
+    ("MLK_AIR_QUALITY", """{"timestamp": 1704070860000, "nicename": "NaN", "pm25": 1.0}"""),
+    ("MLK_AIR_QUALITY", """{"timestamp": 1000, "nicename": "downtown", "pm25": 2.0}"""),
+    ("EPB_AIR_QUALITY", """not json at all"""),
+    // a null topic dead-letters as __null__, like an unknown one
+    (null, """{"timestamp": 1704067200000}"""),
+    ("mystery_topic", """{"whatever": true}"""))
 
   test("MemoryStream -> foreachBatch -> partitioned lake, AvailableNow drain") {
     val root = Files.createTempDirectory("graft_lake_").toString
@@ -82,33 +116,7 @@ class StreamingIngestSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.classic.SQLContext =
       spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
     val input = MemoryStream[(String, String)]
-    val v = "cuip_vision_events"
-    input.addData(
-      (v, """{"timestamp": 1704067200000, "camera_id": "cam1", "locations": [{"x":1.0,"y":2.0,"label":"car"}], "hit_counts": 7}"""),
-      (v, """{"timestamp": 1706745600000, "camera_id": "cam2", "locations": [{"x":1.0,"y":2.0,"label":"car"},{"x":3.0,"y":4.0,"label":"bus"}]}"""),
-      // wrong-typed fields parse partially: the row lands (hit_counts
-      // patched to size(locations); the bad nested x nulled) AND is
-      // dead-lettered
-      (v, """{"timestamp": 1704067260000, "camera_id": "cam3", "locations": [{"x":1.0,"y":2.0,"label":"car"},{"x":3.0,"y":4.0,"label":"bus"},{"x":5.0,"y":6.0,"label":"van"}], "hit_counts": "x"}"""),
-      (v, """{"timestamp": 1704067320000, "camera_id": "cam4", "locations": [{"x":"far","y":2.0,"label":"car"}], "hit_counts": 1}"""),
-      // a bad timestamp fails the null-ts gate AND is dead-lettered
-      (v, """{"timestamp": "abc", "camera_id": "cam5", "locations": []}"""),
-      // gates: epoch 1970, missing ts, nan key
-      (v, """{"timestamp": 0, "camera_id": "cam1", "locations": []}"""),
-      (v, """{"camera_id": "cam1", "locations": []}"""),
-      (v, """{"timestamp": 1704067200000, "camera_id": "nan", "locations": []}"""),
-      // null value and non-JSON on a known topic: dead letters only
-      (v, null),
-      (v, """{definitely not json"""),
-      ("MLK_AIR_QUALITY", """{"timestamp": 1704070800000, "nicename": "downtown", "pm25": 12.5, "o3": 0.031}"""),
-      ("EPB_AIR_QUALITY", """{"timestamp": 1709251200000, "nicename": "riverside", "pm25": 3.0}"""),
-      // air-quality gates: NaN key, epoch 1970; then non-JSON
-      ("MLK_AIR_QUALITY", """{"timestamp": 1704070860000, "nicename": "NaN", "pm25": 1.0}"""),
-      ("MLK_AIR_QUALITY", """{"timestamp": 1000, "nicename": "downtown", "pm25": 2.0}"""),
-      ("EPB_AIR_QUALITY", """not json at all"""),
-      // a null topic dead-letters as __null__, like an unknown one
-      (null, """{"timestamp": 1704067200000}"""),
-      ("mystery_topic", """{"whatever": true}"""))
+    input.addData(dirtyCases: _*)
     IngestPipeline.writer(input.toDF().toDF("topic", "value"), root, ckpt, availableNow = true)
       .start().awaitTermination()
 
@@ -162,6 +170,91 @@ class StreamingIngestSpec extends SparkSpec {
     }
     assert(IngestPipeline.readDeadLetter(spark, root).count() === 6)
     assert(spark.read.parquet(s"$root/vision").count() === 3)
+  }
+
+  /** `body`'s value and, per Spark job started while it ran, in job
+    * order, the task count of each of its stages.
+    */
+  private def jobsDuring[T](body: => T): (T, Seq[Seq[Int]]) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentSkipListMap[Int, Seq[Int]]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.put(e.jobId, e.stageInfos.map(_.numTasks))
+    }
+    ListenerBusAccess.settle(sc)
+    sc.addSparkListener(listener)
+    val value =
+      try { val v = body; ListenerBusAccess.settle(sc); v }
+      finally sc.removeSparkListener(listener)
+    (value, jobs.values.asScala.toSeq)
+  }
+
+  test("a batch wider than the slots is parsed in one job of at most defaultParallelism tasks") {
+    val root = Files.createTempDirectory("graft_lake_wide_").toString
+    val src = Files.createTempDirectory("graft_src_wide_").toString
+    val slots = spark.sparkContext.defaultParallelism
+    val n = 2 * slots + 1
+    (0 until n).foreach { i =>
+      Files.write(java.nio.file.Paths.get(s"$src/part$i.json"), java.util.Arrays.asList(
+        s"""{"topic": "cuip_vision_events", "value": "{\\"timestamp\\": ${1704067200000L + i * 60000L}, \\"camera_id\\": \\"cam${i % 3}\\", \\"locations\\": [], \\"hit_counts\\": $i}"}""",
+        s"""{"topic": "MLK_AIR_QUALITY", "value": "{\\"timestamp\\": ${1704070800000L + i * 60000L}, \\"nicename\\": \\"downtown\\", \\"pm25\\": $i}"}""",
+        s"""{"topic": "mystery_topic", "value": "{\\"n\\": $i}"}"""))
+    }
+    val batch = spark.read.schema("topic STRING, value STRING").json(src)
+    assert(batch.rdd.getNumPartitions === n)
+
+    val (counts, jobs) = jobsDuring(IngestPipeline.routeAndWrite(batch, root))
+    assert(counts === BatchCounts(vision = n, airQuality = n, malformedJson = 0, unknownTopic = n))
+    // one job parses and materializes the batch and yields the counts;
+    // then each of the three tables is one shuffle and one write
+    assert(jobs.size === 1 + 2 * 3, jobs)
+    assert(jobs.head.nonEmpty && jobs.head.forall(_ <= slots), jobs.head)
+
+    val leaves = Seq("vision/entity=cam0/year=2024/month=1", "vision/entity=cam1/year=2024/month=1",
+      "vision/entity=cam2/year=2024/month=1", "air_quality/entity=downtown/year=2024/month=1",
+      "_dead_letter/topic=mystery_topic")
+    leaves.foreach { leaf =>
+      val files = new java.io.File(s"$root/$leaf").listFiles()
+      assert(files != null && files.count(_.getName.endsWith(".parquet")) === 1, leaf)
+    }
+    val vision = spark.read.parquet(s"$root/vision")
+      .select("entity", "hit_counts", "timestamp").as[(String, Int, Long)].collect().sorted.toSeq
+    assert(vision === (0 until n).map(i => (s"cam${i % 3}", i, 1704067200000L + i * 60000L)).sorted)
+    val aq = spark.read.parquet(s"$root/air_quality")
+      .select("entity", "timestamp").as[(String, Long)].collect().sorted.toSeq
+    assert(aq === (0 until n).map(i => ("downtown", 1704070800000L + i * 60000L)))
+    val dead = IngestPipeline.readDeadLetter(spark, root)
+      .select("topic", "value", "reason").as[(String, String, String)].collect().sorted.toSeq
+    assert(dead === (0 until n).map(i => ("mystery_topic", s"""{"n": $i}""", "unknown_topic")).sorted)
+  }
+
+  test("routeAndWrite counts rows per route and dead letters per reason, with no extra job") {
+    val root = Files.createTempDirectory("graft_lake_counts_").toString
+    val (counts, jobs) = jobsDuring(
+      IngestPipeline.routeAndWrite(dirtyCases.toDF("topic", "value"), root))
+    assert(counts === BatchCounts(vision = 10, airQuality = 5, malformedJson = 6, unknownTopic = 2))
+    assert(jobs.size === 1 + 2 * 3, jobs)
+    val dead = IngestPipeline.readDeadLetter(spark, root)
+      .groupBy("reason").count().as[(String, Long)].collect().sorted.toSeq
+    assert(dead === Seq("malformed_json" -> 6L, "unknown_topic" -> 2L))
+  }
+
+  test("an empty batch of 0 or 4 partitions counts zero, writes no table and caches nothing") {
+    val sc = spark.sparkContext
+    val schema = StructType.fromDDL("topic STRING, value STRING")
+    val batches = Seq(spark.createDataFrame(sc.emptyRDD[Row], schema),
+      spark.createDataFrame(sc.parallelize(Seq.empty[Row], 4), schema))
+    assert(batches.map(_.rdd.getNumPartitions) === Seq(0, 4))
+    // an empty local relation too: the optimizer folds the projections
+    // over it, and the observed counts must still arrive
+    (batches :+ Seq.empty[(String, String)].toDF("topic", "value")).foreach { batch =>
+      val root = Files.createTempDirectory("graft_lake_empty_").toString
+      val cachedBefore = sc.getPersistentRDDs.keySet
+      assert(IngestPipeline.routeAndWrite(batch, root) === BatchCounts(0, 0, 0, 0))
+      assert(new java.io.File(root).list().isEmpty)
+      assert((sc.getPersistentRDDs.keySet -- cachedBefore).isEmpty)
+    }
   }
 
   test("a failed table commit is rethrown after the others commit; no job or cache outlives it") {
