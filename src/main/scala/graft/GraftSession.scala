@@ -14,8 +14,9 @@ import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
   * [[Tables.events]], matching DuckDB's ns→µs truncation.
   *
   * Sessions are built through [[builder]], which applies the engine's
-  * build-time confs ([[staticConfs]]: the codegen cache size and no
-  * session artifact isolation); runtime confs go through [[configure]].
+  * build-time confs ([[staticConfs]]: the codegen cache size, no
+  * session artifact isolation, and local file systems that do not start
+  * a process per file); runtime confs go through [[configure]].
   */
 object GraftSession {
 
@@ -38,8 +39,9 @@ object GraftSession {
   /** The confs every session the engine builds carries, each with the
     * engine's value. Spark reads each once (the cache size when the JVM
     * first generates code, the isolation flag when a session first asks
-    * its artifact manager), so they go on the builder, not into
-    * [[configure]]:
+    * its artifact manager, the `spark.hadoop.*` keys when the
+    * SparkContext builds its Hadoop conf), so they go on the builder, not
+    * into [[configure]]:
     *
     *  - `spark.sql.codegen.cache.maxEntries`: [[codegenCacheEntries]].
     *  - `spark.sql.artifact.isolation.enabled`: `false`. With isolation
@@ -53,10 +55,27 @@ object GraftSession {
     *    Isolation separates the jars and classes that clients add to a
     *    session (`addArtifact`); the engine adds none, so it buys
     *    nothing here. Spark itself turns it off for Hive-enabled sessions.
+    *  - `spark.hadoop.fs.file.impl` and
+    *    `spark.hadoop.fs.AbstractFileSystem.file.impl`:
+    *    [[graft.sinks.InProcessLocalFileSystem]] and
+    *    [[graft.sinks.InProcessLocalFs]], Hadoop's checksummed local file
+    *    systems with permissions set and links looked up in-process.
+    *    Without Hadoop's native library the stock ones start a `chmod`
+    *    process for every file and directory a write creates and a
+    *    `readlink` process for every checkpoint log commit, about 150
+    *    per 30k-message drain query (BASELINE.md `local_fs_forks`). The
+    *    first key serves `FileSystem` (the data files, their `.crc`
+    *    files, the job commit); the second serves `FileContext`, which
+    *    the streaming checkpoint commits through. Hadoop caches one
+    *    `FileSystem` per scheme, authority and user, whatever the conf,
+    *    so a `file:` file system obtained before the session exists
+    *    would keep the stock class: build the session first.
     */
   private val engineConfs: Map[String, String] = Map(
     StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key -> codegenCacheEntries.toString,
-    SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false")
+    SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false",
+    "spark.hadoop.fs.file.impl" -> classOf[graft.sinks.InProcessLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.sinks.InProcessLocalFs].getName)
 
   /** The engine's build-time confs as [[builder]] applies them, given the
     * launcher's `conf`: a key the launcher already set (spark-submit

@@ -140,38 +140,39 @@ object IncrementalAgg {
     // cut lineage AND pin the result BEFORE any directory surgery: the
     // merged plan reads `root`, so both the emptied-partition scan below
     // and the final write must run against materialized rows, not a
-    // plan that would re-read paths this fold is about to delete
-    val pinned = alive.localCheckpoint(eager = true)
-
-    // dynamic partition overwrite only replaces partitions PRESENT in
-    // the written data — a partition whose every key was retracted
-    // produces no output rows, so its stale files would silently
-    // survive the write. Delete those directories explicitly (touched
-    // minus surviving, partition-granular metadata again).
-    if (existing) {
-      val survived = pinned.select(partCols.map(col): _*).distinct().collect()
-        .map(_.toSeq).toSet
-      val emptied = touched.filterNot(r => survived.contains(r.toSeq))
-      emptied.foreach { r =>
-        val rel = partCols.zipWithIndex.map { case (c, i) =>
-          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .getPartitionPathString(c, String.valueOf(r.get(i)))
-        }.mkString("/")
-        fs.delete(new org.apache.hadoop.fs.Path(root, rel), true)
+    // plan that would re-read paths this fold is about to delete; the
+    // checkpoint is released once the write has committed
+    LocalCheckpoint.pinned(alive) { pinned =>
+      // dynamic partition overwrite only replaces partitions PRESENT in
+      // the written data — a partition whose every key was retracted
+      // produces no output rows, so its stale files would silently
+      // survive the write. Delete those directories explicitly (touched
+      // minus surviving, partition-granular metadata again).
+      if (existing) {
+        val survived = pinned.select(partCols.map(col): _*).distinct().collect()
+          .map(_.toSeq).toSet
+        val emptied = touched.filterNot(r => survived.contains(r.toSeq))
+        emptied.foreach { r =>
+          val rel = partCols.zipWithIndex.map { case (c, i) =>
+            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+              .getPartitionPathString(c, String.valueOf(r.get(i)))
+          }.mkString("/")
+          fs.delete(new org.apache.hadoop.fs.Path(root, rel), true)
+        }
       }
-    }
 
-    pinned.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCols: _*)
-      .parquet(root)
-    applied.foreach { marker =>
-      fs.create(marker, true).close()
-      val bdir = marker.getParent
-      fs.delete(new org.apache.hadoop.fs.Path(bdir, "snapshot"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(bdir, "_SNAPSHOT_DONE"), true)
+      pinned.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partCols: _*)
+        .parquet(root)
+      applied.foreach { marker =>
+        fs.create(marker, true).close()
+        val bdir = marker.getParent
+        fs.delete(new org.apache.hadoop.fs.Path(bdir, "snapshot"), true)
+        fs.delete(new org.apache.hadoop.fs.Path(bdir, "_SNAPSHOT_DONE"), true)
+      }
+      touched.length
     }
-    touched.length
   }
 
   /** Read the maintained aggregate with derived columns (mean). */

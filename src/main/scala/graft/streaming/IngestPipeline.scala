@@ -1,14 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.ops.EventOps
 import graft.schemas.TopicSchemas
-import graft.sinks.{AwaitAll, PartitionedSink}
+import graft.sinks.{AwaitAll, LocalCheckpoint, PartitionedSink}
 
 /** The reference's whole job (SURVEY.md §3 E1/E2) as one Structured
   * Streaming pipeline (model: Armbrust et al., "Structured Streaming: A
@@ -179,7 +178,7 @@ object IngestPipeline {
     // unnamed: IngestMain's priorityTopics runs two queries on one
     // session at once
     val observed = Observation()
-    val parsed = batch.coalesce(batch.sparkSession.sparkContext.defaultParallelism)
+    val parse = batch.coalesce(batch.sparkSession.sparkContext.defaultParallelism)
       .select(
         col("topic"), value.as("value"),
         when(isVision, rescuedJson(value, TopicSchemas.visionEvent)).as("vision"),
@@ -191,8 +190,7 @@ object IngestPipeline {
       .observe(observed, count(when(isVision, 1)).as("vision"),
         count(when(isAq, 1)).as("air_quality"),
         reasonIs("malformed_json"), reasonIs("unknown_topic"))
-      .localCheckpoint(eager = true)
-    try {
+    LocalCheckpoint.pinned(parse) { parsed =>
       val m = observed.get.view.mapValues(_.asInstanceOf[Long])
       val counts = BatchCounts(m("vision"), m("air_quality"), m("malformed_json"), m("unknown_topic"))
 
@@ -230,10 +228,6 @@ object IngestPipeline {
         .collect { case (rows, write) if rows > 0 => write }
       if (writes.nonEmpty) AwaitAll(writes.size)(writes)
       counts
-    } finally parsed.queryExecution.logical match {
-      // Dataset.unpersist does not reach a checkpoint's RDD
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
     }
   }
 

@@ -18,6 +18,11 @@ class CodegenCacheSpec extends SparkSpec {
 
   private val cacheKey = "spark.sql.codegen.cache.maxEntries"
   private val isolationKey = "spark.sql.artifact.isolation.enabled"
+  private val fsKey = "spark.hadoop.fs.file.impl"
+  private val fileContextKey = "spark.hadoop.fs.AbstractFileSystem.file.impl"
+  private val localFs = Map(
+    fsKey -> classOf[graft.sinks.InProcessLocalFileSystem].getName,
+    fileContextKey -> classOf[graft.sinks.InProcessLocalFs].getName)
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
   private def run(name: String): Unit =
@@ -34,14 +39,21 @@ class CodegenCacheSpec extends SparkSpec {
   test("staticConfs: unset keys get the engine's values") {
     assert(GraftSession.staticConfs(new SparkConf(false)) === Map(
       cacheKey -> GraftSession.codegenCacheEntries.toString,
-      isolationKey -> "false"))
+      isolationKey -> "false") ++ localFs)
   }
 
   test("staticConfs: a launcher-set value of either key wins") {
     assert(GraftSession.staticConfs(new SparkConf(false).set(cacheKey, "100")) === Map(
-      cacheKey -> "100", isolationKey -> "false"))
+      cacheKey -> "100", isolationKey -> "false") ++ localFs)
     assert(GraftSession.staticConfs(new SparkConf(false).set(isolationKey, "true")) === Map(
-      cacheKey -> GraftSession.codegenCacheEntries.toString, isolationKey -> "true"))
+      cacheKey -> GraftSession.codegenCacheEntries.toString, isolationKey -> "true") ++ localFs)
+  }
+
+  test("staticConfs: a launcher-set spark.hadoop.fs.file.impl wins") {
+    val stock = classOf[org.apache.hadoop.fs.LocalFileSystem].getName
+    assert(GraftSession.staticConfs(new SparkConf(false).set(fsKey, stock)) === Map(
+      cacheKey -> GraftSession.codegenCacheEntries.toString, isolationKey -> "false") ++
+      localFs.updated(fsKey, stock))
   }
 
   test("queries run again after a rotation of 177 classes compile nothing") {

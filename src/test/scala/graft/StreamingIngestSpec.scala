@@ -24,34 +24,7 @@ class StreamingIngestSpec extends SparkSpec {
   private val sp = spark
   import sp.implicits._
 
-  private val v = "cuip_vision_events"
-  /** Every dirty case the router must handle, in one batch. */
-  private val dirtyCases: Seq[(String, String)] = Seq(
-    (v, """{"timestamp": 1704067200000, "camera_id": "cam1", "locations": [{"x":1.0,"y":2.0,"label":"car"}], "hit_counts": 7}"""),
-    (v, """{"timestamp": 1706745600000, "camera_id": "cam2", "locations": [{"x":1.0,"y":2.0,"label":"car"},{"x":3.0,"y":4.0,"label":"bus"}]}"""),
-    // wrong-typed fields parse partially: the row lands (hit_counts
-    // patched to size(locations); the bad nested x nulled) AND is
-    // dead-lettered
-    (v, """{"timestamp": 1704067260000, "camera_id": "cam3", "locations": [{"x":1.0,"y":2.0,"label":"car"},{"x":3.0,"y":4.0,"label":"bus"},{"x":5.0,"y":6.0,"label":"van"}], "hit_counts": "x"}"""),
-    (v, """{"timestamp": 1704067320000, "camera_id": "cam4", "locations": [{"x":"far","y":2.0,"label":"car"}], "hit_counts": 1}"""),
-    // a bad timestamp fails the null-ts gate AND is dead-lettered
-    (v, """{"timestamp": "abc", "camera_id": "cam5", "locations": []}"""),
-    // gates: epoch 1970, missing ts, nan key
-    (v, """{"timestamp": 0, "camera_id": "cam1", "locations": []}"""),
-    (v, """{"camera_id": "cam1", "locations": []}"""),
-    (v, """{"timestamp": 1704067200000, "camera_id": "nan", "locations": []}"""),
-    // null value and non-JSON on a known topic: dead letters only
-    (v, null),
-    (v, """{definitely not json"""),
-    ("MLK_AIR_QUALITY", """{"timestamp": 1704070800000, "nicename": "downtown", "pm25": 12.5, "o3": 0.031}"""),
-    ("EPB_AIR_QUALITY", """{"timestamp": 1709251200000, "nicename": "riverside", "pm25": 3.0}"""),
-    // air-quality gates: NaN key, epoch 1970; then non-JSON
-    ("MLK_AIR_QUALITY", """{"timestamp": 1704070860000, "nicename": "NaN", "pm25": 1.0}"""),
-    ("MLK_AIR_QUALITY", """{"timestamp": 1000, "nicename": "downtown", "pm25": 2.0}"""),
-    ("EPB_AIR_QUALITY", """not json at all"""),
-    // a null topic dead-letters as __null__, like an unknown one
-    (null, """{"timestamp": 1704067200000}"""),
-    ("mystery_topic", """{"whatever": true}"""))
+  import StreamingIngestSpec.dirtyCases
 
   test("MemoryStream -> foreachBatch -> partitioned lake, AvailableNow drain") {
     val root = Files.createTempDirectory("graft_lake_").toString
@@ -453,6 +426,20 @@ class StreamingIngestSpec extends SparkSpec {
     assert(full === Seq(("cam1", 3L, 17L), ("cam2", 1L, 5L)))
   }
 
+  test("stats=true batches release the rollup fold's checkpoint") {
+    val root = Files.createTempDirectory("graft_lake_stats_ckpt_").toString
+    val sc = spark.sparkContext
+    val cachedBefore = sc.getPersistentRDDs.keySet
+    (1 to 3).foreach(_ =>
+      IngestPipeline.routeAndWrite(dirtyCases.toDF("topic", "value"), root, stats = true))
+    assert((sc.getPersistentRDDs.keySet -- cachedBefore).isEmpty,
+      sc.getPersistentRDDs.values.map(_.toDebugString))
+    // every folded vision row is counted once in the rollup
+    val rolled = graft.sinks.IncrementalAgg.read(spark, s"$root/_stats/vision")
+      .agg(sum("n")).as[Long].head()
+    assert(rolled === spark.read.parquet(s"$root/vision").count())
+  }
+
   test("AvailableNow restart is idempotent (checkpoint prevents reprocessing)") {
     val root = Files.createTempDirectory("graft_lake2_").toString
     val ckpt = Files.createTempDirectory("graft_ckpt2_").toString
@@ -469,4 +456,35 @@ class StreamingIngestSpec extends SparkSpec {
 
     assert(spark.read.parquet(s"$root/vision").count() === 1)
   }
+}
+
+object StreamingIngestSpec {
+  private val v = "cuip_vision_events"
+  /** Every dirty case the router must handle, in one batch. */
+  val dirtyCases: Seq[(String, String)] = Seq(
+    (v, """{"timestamp": 1704067200000, "camera_id": "cam1", "locations": [{"x":1.0,"y":2.0,"label":"car"}], "hit_counts": 7}"""),
+    (v, """{"timestamp": 1706745600000, "camera_id": "cam2", "locations": [{"x":1.0,"y":2.0,"label":"car"},{"x":3.0,"y":4.0,"label":"bus"}]}"""),
+    // wrong-typed fields parse partially: the row lands (hit_counts
+    // patched to size(locations); the bad nested x nulled) AND is
+    // dead-lettered
+    (v, """{"timestamp": 1704067260000, "camera_id": "cam3", "locations": [{"x":1.0,"y":2.0,"label":"car"},{"x":3.0,"y":4.0,"label":"bus"},{"x":5.0,"y":6.0,"label":"van"}], "hit_counts": "x"}"""),
+    (v, """{"timestamp": 1704067320000, "camera_id": "cam4", "locations": [{"x":"far","y":2.0,"label":"car"}], "hit_counts": 1}"""),
+    // a bad timestamp fails the null-ts gate AND is dead-lettered
+    (v, """{"timestamp": "abc", "camera_id": "cam5", "locations": []}"""),
+    // gates: epoch 1970, missing ts, nan key
+    (v, """{"timestamp": 0, "camera_id": "cam1", "locations": []}"""),
+    (v, """{"camera_id": "cam1", "locations": []}"""),
+    (v, """{"timestamp": 1704067200000, "camera_id": "nan", "locations": []}"""),
+    // null value and non-JSON on a known topic: dead letters only
+    (v, null),
+    (v, """{definitely not json"""),
+    ("MLK_AIR_QUALITY", """{"timestamp": 1704070800000, "nicename": "downtown", "pm25": 12.5, "o3": 0.031}"""),
+    ("EPB_AIR_QUALITY", """{"timestamp": 1709251200000, "nicename": "riverside", "pm25": 3.0}"""),
+    // air-quality gates: NaN key, epoch 1970; then non-JSON
+    ("MLK_AIR_QUALITY", """{"timestamp": 1704070860000, "nicename": "NaN", "pm25": 1.0}"""),
+    ("MLK_AIR_QUALITY", """{"timestamp": 1000, "nicename": "downtown", "pm25": 2.0}"""),
+    ("EPB_AIR_QUALITY", """not json at all"""),
+    // a null topic dead-letters as __null__, like an unknown one
+    (null, """{"timestamp": 1704067200000}"""),
+    ("mystery_topic", """{"whatever": true}"""))
 }
