@@ -1263,9 +1263,10 @@ object SparkEntry {
   def q101(s: SparkSession, d: String): DataFrame =
     // nProbe = 6 of 16 cells (multiprobe) + a 100-row shortlist +
     // RESIDUAL codes (books quantize v − centroid; ADC adds the
-    // per-(probe, cell) p·centroid bias): the PqRecallBench frontier
-    // point — recall@10 0.95 on the fixture vs 0.6–0.7 at the old
-    // (4, 50, raw-code) corner; scoring still touches only m-byte codes
+    // per-(probe, cell) p·centroid bias): BASELINE.md `pq_recall`'s
+    // frontier point — recall@10 0.95 on the fixture vs 0.6–0.7 at the
+    // old (4, 50, raw-code) corner; scoring still touches only m-byte
+    // codes
     graft.operators.Quantize.ivfPqTopK(emb(s, d), emb(s, d).filter(col("vec_id") < 5),
       "vec_id", "embedding", k = 10, nlist = 16, nProbe = 6,
       shortlist = 100, cacheKey = Some(d), residual = true)

@@ -200,9 +200,6 @@ object ArrayFunctions {
   import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
   import org.apache.spark.sql.Column
 
-  def stringArrayExceptSet(arr: Column, excluded: Array[String]): Column =
-    column(StringArrayExceptSet(expression(arr), excluded))
-
   /** Code-point length of the longest common prefix of two strings. */
   def commonPrefixLen(a: Column, b: Column): Column =
     column(CommonPrefixLen(expression(a), expression(b)))

@@ -185,34 +185,6 @@ object Multimodal {
     })
   }
 
-  /** Deterministic grayscale gradient PNG: `luma(x, y) = base +
-    * (x·sx + y·sy) % mod` (gray RGB, so BT.601 luma recovers the value
-    * exactly). The patterned counterpart of [[renderSolidPng]] —
-    * fixture images whose DIFFERENCE HASH is arithmetically
-    * predictable from the parameters, which is what lets q182's oracle
-    * replay perceptual dedup without a codec.
-    */
-  def renderGradientPng(w: Int, h: Int, base: Int, sx: Int, sy: Int,
-                        mod: Int): Array[Byte] = {
-    require(mod >= 1 && base >= 0 && base + mod - 1 <= 255,
-      s"luma range [base, base+mod) must fit 0..255, got base=$base mod=$mod")
-    val img = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val l = base + (x * sx + y * sy) % mod
-        img.setRGB(x, y, (l << 16) | (l << 8) | l)
-        x += 1
-      }
-      y += 1
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
-  }
-
   /** Quadratic-gradient grayscale PNG: `luma(x, y) = shift +
     * ((x + 9y + offset + 1)²·13) % 150`. Unlike a LINEAR gradient
     * (whose difference hash degenerates to near-all-ones — neighbors

@@ -25,14 +25,6 @@ object Dedup {
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Documents → (id, shingles) with distinct word n-gram shingles
-    * (one-pass [[graft.functions.WordShingles]]; value-identical to the
-    * composed split/transform/array_distinct chain, ~30 µs/row faster).
-    */
-  def shingled(docs: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame =
-    docs.select(col(idCol),
-      HashFunctions.wordShingles(col(textCol), n).as("shingles"))
-
   /** Shingle sets as sorted distinct 64-bit hashes via the one-pass
     * [[graft.functions.HashedWordNgrams]] expression. Set operations on
     * fixed-width longs are ~10× cheaper than on UTF8 strings, xxHash64
@@ -819,18 +811,6 @@ object Dedup {
       sh, idCol, thresholdNum, thresholdDen)
   }
 
-  /** The candidate-pair table [[setSimJoinPrefix]] verifies — exposed so
-    * the candidate economics (|candidates| ≪ n²/2) can be measured
-    * directly (`SetSimBench`, BASELINE.md `setsim`).
-    */
-  def setSimPrefixCandidates(docs: DataFrame, idCol: String, textCol: String,
-                             thresholdNum: Int, thresholdDen: Int,
-                             ngram: Int = 3): DataFrame =
-    prefixCandidates(
-      hashedShingles(docs, idCol, textCol, ngram)
-        .filter(size(col("shingles")) > 0),
-      idCol, thresholdNum, thresholdDen)
-
   /** Per-doc shingle arrays rebuilt in the global (df asc, h asc) order
     * — the rarest-first total order both prefix-filter joins key on.
     * `array_sort` on (df, h) structs is a per-doc, bounded-size sort;
@@ -1013,10 +993,6 @@ object Dedup {
       docs(idCol) === col("keep_id")).drop("keep_id")
   }
 
-  /** The candidate-pair table [[containmentJoinPrefix]] verifies —
-    * exposed so the asymmetric-prefix economics can be measured
-    * (`ContainBench`, BASELINE.md `containment`).
-    */
   /** Per-source dedup savings datasheet: how many documents and TOKENS
     * near-dup deduplication ([[dedupCorpus]], q37's exact pipeline)
     * would remove from each source — the number a data lead reads
@@ -1310,17 +1286,9 @@ object Dedup {
       Seq(idCol), struct(col("__neg"), col("nbr")), Seq("nbr", "jac"), k)
   }
 
-  def containmentPrefixCandidates(docs: DataFrame, idCol: String,
-                                  textCol: String, thresholdNum: Int,
-                                  thresholdDen: Int, ngram: Int = 3): DataFrame =
-    containmentCandidatesFrom(
-      hashedShingles(docs, idCol, textCol, ngram)
-        .filter(size(col("shingles")) > 0),
-      idCol, thresholdNum, thresholdDen)
-
   /** Asymmetric prefix candidates: A's prefix probes B's FULL postings
-    * with the one-sided size filter — shared by the join and its
-    * economics bench.
+    * with the one-sided size filter — the pairs [[containmentJoinPrefix]]
+    * verifies.
     */
   private def containmentCandidatesFrom(sh: DataFrame, idCol: String,
                                         thresholdNum: Int,

@@ -56,15 +56,15 @@ object TopKViaHeapRule extends Rule[LogicalPlan] {
   }
 
   /** Conf gate for the extensions-path auto-rewrite — DEFAULT OFF.
-    * Measured head-to-head ([[graft.SkewBench]]; `skew_topk` rows in
-    * BASELINE.md), the sort-based window plan (with Spark's own
-    * `InferWindowGroupLimit` pre-limit) beats the heap aggregate in every
-    * regime tried: fixture scale (many keys), 8 keys × 8M rows (1.6×),
-    * and the spill regime 4 keys × 50M rows under a 2 GB heap (1.5×) —
-    * the object-aggregate path's per-row cost outweighs the sorts it
-    * saves. The rewrite stays available for workloads that measure a win
-    * (set this conf to `true`, or call [[graft.operators.TopK]] directly),
-    * but an auto-rewrite that loses measured time must not be the default.
+    * Measured head-to-head (`skew_topk` rows in BASELINE.md), the
+    * sort-based window plan (with Spark's own `InferWindowGroupLimit`
+    * pre-limit) beats the heap aggregate in every regime tried: fixture
+    * scale (many keys), 8 keys × 8M rows (1.6×), and the spill regime
+    * 4 keys × 50M rows under a 2 GB heap (1.5×) — the object-aggregate
+    * path's per-row cost outweighs the sorts it saves. The rewrite stays
+    * available for workloads that measure a win (set this conf to
+    * `true`, or call [[graft.operators.TopK]] directly), but an
+    * auto-rewrite that loses measured time must not be the default.
     */
   val enabledConf = "spark.graft.topkHeapRewrite.enabled"
 

@@ -103,23 +103,6 @@ object DedupIndexSink {
   // ---------------------------------------------------------------
   // generations
 
-  private def writeSmall(fs: FileSystem, p: Path, text: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private def readSmall(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
-  }
-
   /** The current COMMITTED generation, if any: `(gen, maxFoldedId,
     * dir)`. Only `_COMMITTED` generations exist to readers; the one
     * with the largest id wins (older committed generations are
@@ -136,7 +119,7 @@ object DedupIndexSink {
         .filter { case (_, p) => fs.exists(new Path(p, "_COMMITTED")) }
         .sortBy(_._1)
       gens.lastOption.map { case (g, p) =>
-        val maxId = readSmall(fs, new Path(p, "_MANIFEST")).linesIterator
+        val maxId = SmallFiles.read(fs, new Path(p, "_MANIFEST")).linesIterator
           .collectFirst { case l if l.startsWith("max_id\t") =>
             l.stripPrefix("max_id\t").trim.toLong }
           .getOrElse(sys.error(
@@ -258,7 +241,7 @@ object DedupIndexSink {
       }
     }
 
-    writeSmall(fs, new Path(gDir, "_MANIFEST"),
+    SmallFiles.write(fs, new Path(gDir, "_MANIFEST"),
       (Seq(s"max_id\t$newMax") ++ gen.map(x => s"prev_gen\t${x._1}") ++
         tail.map(d => s"folded\t${d._1}")).mkString("\n") + "\n")
     fs.create(new Path(gDir, "_COMMITTED"), true).close() // commit point

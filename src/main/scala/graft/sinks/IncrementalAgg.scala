@@ -46,14 +46,19 @@ object IncrementalAgg {
     * dynamic overwrite is an idempotent rewrite from any crash point.
     * Without `batchId` the fold reads the live table directly (the
     * batch-job path, where re-running means re-adding by intent).
+    * `query` (the streaming query's id) scopes the markers to
+    * `root/_batches/<query>/<id>`, so a second checkpoint draining into
+    * the same table, whose ids restart at 0, still folds. Only the last
+    * `spark.sql.streaming.minBatchesToRetain` ids keep their markers.
     */
   def maintain(spark: SparkSession, batch: DataFrame, root: String,
                partCols: Seq[String], keyCols: Seq[String],
-               valueCol: String, batchId: Option[Long] = None): Int =
-    fold(spark,
+               valueCol: String, batchId: Option[Long] = None,
+               query: Option[String] = None): Int =
+    foldCounts(spark,
       batch.withColumn("__dn", lit(1L))
         .withColumn("__dv", col(valueCol).cast(DecimalType(18, 2))),
-      root, partCols, keyCols, batchId)
+      root, partCols, keyCols, batchId, query)
 
   /** Fold SIGNED deltas into the aggregate — the CDC path: feed it
     * [[graft.operators.Snapshot.toDeltas]] of a snapshot diff and the
@@ -69,27 +74,58 @@ object IncrementalAgg {
                      partCols: Seq[String], keyCols: Seq[String],
                      dnCol: String, dvCol: String,
                      batchId: Option[Long] = None): Int =
-    fold(spark,
+    foldCounts(spark,
       deltas.withColumn("__dn", col(dnCol).cast("long"))
         .withColumn("__dv", col(dvCol).cast(DecimalType(18, 2))),
-      root, partCols, keyCols, batchId)
+      root, partCols, keyCols, batchId, None)
 
-  private def fold(spark: SparkSession, batch: DataFrame, root: String,
-                   partCols: Seq[String], keyCols: Seq[String],
-                   batchId: Option[Long]): Int = {
+  private def foldCounts(spark: SparkSession, batch: DataFrame, root: String,
+                         partCols: Seq[String], keyCols: Seq[String],
+                         batchId: Option[Long], query: Option[String]): Int = {
     require(partCols.nonEmpty && partCols.forall(keyCols.contains),
       s"partCols $partCols must be a subset of keyCols $keyCols")
     // sum(decimal(18,2)) widens to decimal(28,2); pin the STORED type to
     // decimal(18,2) here so every batch writes the same parquet encoding
     // (mixed widths across partitions break later schema-inferred reads)
-    val partial = batch.groupBy(keyCols.map(col): _*)
-      .agg(sum(col("__dn")).cast("long").as("n"),
-        sum(col("__dv")).cast(DecimalType(18, 2)).as("sum_v"))
+    def counts(rows: DataFrame, n: String, v: String): DataFrame =
+      rows.groupBy(keyCols.map(col): _*)
+        .agg(sum(col(n)).cast("long").as("n"),
+          sum(col(v)).cast(DecimalType(18, 2)).as("sum_v"))
+    fold(spark, counts(batch, "__dn", "__dv"), root, partCols, batchId, query,
+      dropsRows = true)(rows =>
+      // fully-retracted keys (count folded to zero) leave the table, the
+      // way a recompute over the corrected source would drop them
+      counts(rows, "n", "sum_v").filter(col("n") =!= 0L))
+  }
 
+  /** The partition-granular fold every maintained view shares:
+    * `partial` is the batch's state rows, `merge` combines them with the
+    * touched partitions' current rows (unioned by name; the batch alone
+    * when the table does not exist yet) into the rows to write back.
+    * Returns the number of partitions rewritten.
+    *
+    * `batchId` runs the [[QuantileSink]] snapshot protocol: committed
+    * ids (`root/_batches/[<query>/]<id>/_APPLIED`) skip; otherwise the
+    * touched partitions' pre-batch rows are snapshotted and sealed
+    * before the live table is touched, and the merge reads the
+    * SNAPSHOT. A commit drops the marker `minBatchesToRetain` ids back:
+    * a streaming checkpoint keeps no more batches than that, so the
+    * marker can no longer be replayed.
+    *
+    * `dropsRows` says whether `merge` can filter a touched group out;
+    * only then can a touched partition end up empty and need the scan
+    * that deletes it.
+    */
+  private[sinks] def fold(spark: SparkSession, partial: DataFrame, root: String,
+                          partCols: Seq[String], batchId: Option[Long],
+                          query: Option[String], dropsRows: Boolean)
+                         (merge: DataFrame => DataFrame): Int = {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val batches = new org.apache.hadoop.fs.Path(root,
+      query.fold("_batches")(q => s"_batches/$q"))
     val applied = batchId.map(id =>
-      new org.apache.hadoop.fs.Path(root, s"_batches/$id/_APPLIED"))
+      new org.apache.hadoop.fs.Path(batches, s"$id/_APPLIED"))
     if (applied.exists(fs.exists)) return 0
 
     val touched: Array[Row] = partial.select(partCols.map(col): _*).distinct().collect()
@@ -110,45 +146,36 @@ object IncrementalAgg {
     // identical merged rows (the QuantileSink protocol)
     val current: Option[DataFrame] = batchId match {
       case Some(id) =>
-        val bdir = new org.apache.hadoop.fs.Path(root, s"_batches/$id")
+        val bdir = new org.apache.hadoop.fs.Path(batches, id.toString)
         val snapDir = new org.apache.hadoop.fs.Path(bdir, "snapshot")
         val snapDone = new org.apache.hadoop.fs.Path(bdir, "_SNAPSHOT_DONE")
-        if (!fs.exists(snapDone)) {
+        // a snapshot sealed by this call is read back with the schema it
+        // was written with, which saves the schema-inference job
+        val written = if (fs.exists(snapDone)) None else {
           if (fs.exists(snapDir)) fs.delete(snapDir, true) // partial copy
-          if (existing) liveTouched.write.mode("overwrite")
-            .parquet(snapDir.toString)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], partial.schema)
-            .write.mode("overwrite").parquet(snapDir.toString)
+          val rows = if (existing) liveTouched
+            else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], partial.schema)
+          rows.write.mode("overwrite").parquet(snapDir.toString)
           fs.create(snapDone, true).close()
+          Some(rows.schema)
         }
-        Some(spark.read.parquet(snapDir.toString))
+        Some(written.fold(spark.read)(spark.read.schema).parquet(snapDir.toString))
       case None => if (existing) Some(liveTouched) else None
     }
-    val merged = current match {
-      case Some(cur) =>
-        partial.unionByName(cur)
-          .groupBy(keyCols.map(col): _*)
-          .agg(sum(col("n")).cast("long").as("n"),
-            sum(col("sum_v")).cast(DecimalType(18, 2)).as("sum_v"))
-      case None => partial
-    }
-    // fully-retracted keys (count folded to zero) leave the table, the
-    // way a recompute over the corrected source would drop them
-    val alive = merged.filter(col("n") =!= 0L)
+    val merged = merge(current.fold(partial)(partial.unionByName(_)))
 
     // cut lineage AND pin the result BEFORE any directory surgery: the
     // merged plan reads `root`, so both the emptied-partition scan below
     // and the final write must run against materialized rows, not a
     // plan that would re-read paths this fold is about to delete; the
     // checkpoint is released once the write has committed
-    LocalCheckpoint.pinned(alive) { pinned =>
+    LocalCheckpoint.pinned(merged) { pinned =>
       // dynamic partition overwrite only replaces partitions PRESENT in
       // the written data — a partition whose every key was retracted
       // produces no output rows, so its stale files would silently
       // survive the write. Delete those directories explicitly (touched
       // minus surviving, partition-granular metadata again).
-      if (existing) {
+      if (existing && dropsRows) {
         val survived = pinned.select(partCols.map(col): _*).distinct().collect()
           .map(_.toSeq).toSet
         val emptied = touched.filterNot(r => survived.contains(r.toSeq))
@@ -170,6 +197,10 @@ object IncrementalAgg {
         val bdir = marker.getParent
         fs.delete(new org.apache.hadoop.fs.Path(bdir, "snapshot"), true)
         fs.delete(new org.apache.hadoop.fs.Path(bdir, "_SNAPSHOT_DONE"), true)
+        val expired = batchId.get -
+          spark.conf.get("spark.sql.streaming.minBatchesToRetain").toLong
+        if (expired >= 0)
+          fs.delete(new org.apache.hadoop.fs.Path(batches, expired.toString), true)
       }
       touched.length
     }

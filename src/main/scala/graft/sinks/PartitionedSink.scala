@@ -149,22 +149,6 @@ object PartitionedSink {
     def visibleFiles(leaf: Path) =
       fs.listStatus(leaf).filter(s => s.isFile && !isHidden(s.getPath))
 
-    def writeSmallFile(p: Path, text: String): Unit = {
-      val out = fs.create(p, true)
-      try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    def readSmallFile(p: Path): String = {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](8192)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
-    }
-
     // self-heal a leaf a previous pass crashed in (see scaladoc):
     // _COMMITTED decides; the manifest tells us exactly what to undo
     def recoverLeaf(leaf: Path): Unit = {
@@ -175,7 +159,7 @@ object PartitionedSink {
         val manifest  = new Path(old, "_MANIFEST")
         if (!committed && fs.exists(manifest)) {
           // crash between park and commit: roll the swap back
-          val swapIn = readSmallFile(manifest).linesIterator
+          val swapIn = SmallFiles.read(fs, manifest).linesIterator
             .collect { case s if s.startsWith("new\t") => s.stripPrefix("new\t") }
             .toSet
           visibleFiles(leaf).filter(f => swapIn(f.getPath.getName))
@@ -221,13 +205,13 @@ object PartitionedSink {
         val newFiles = fs.listStatus(tmp).filter(s => s.isFile && !isHidden(s.getPath))
         fs.mkdirs(old)
         // step 2: manifest first — recovery needs it to undo a partial swap
-        writeSmallFile(new Path(old, "_MANIFEST"),
+        SmallFiles.write(fs, new Path(old, "_MANIFEST"),
           (files.map(f => s"old\t${f.getPath.getName}") ++
            newFiles.map(f => s"new\t${f.getPath.getName}")).mkString("\n"))
         files.foreach(f => fs.rename(f.getPath, new Path(old, f.getPath.getName)))
         newFiles.foreach(nf => fs.rename(nf.getPath, new Path(leaf, nf.getPath.getName)))
         // step 5: the commit point — only now may the parked copies die
-        writeSmallFile(new Path(old, "_COMMITTED"), "")
+        SmallFiles.write(fs, new Path(old, "_COMMITTED"), "")
         fs.delete(tmp, true)
         fs.delete(old, true)
         true

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
@@ -76,62 +76,11 @@ object QuantileSink {
       .select(keyCols.map(col) :+ explode(col("__sk")): _*)
       .withColumnRenamed("key", "k").withColumnRenamed("value", "cnt")
 
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val applied = batchId.map(id =>
-      new org.apache.hadoop.fs.Path(root, s"_batches/$id/_APPLIED"))
-    if (applied.exists(fs.exists)) return 0
-
-    val touched: Array[Row] = partial.select(partCols.map(col): _*).distinct().collect()
-    if (touched.isEmpty) return 0
-
-    val existing = fs.exists(new org.apache.hadoop.fs.Path(root))
-    def liveTouched: DataFrame = {
-      val pruning = touched.map { r =>
-        partCols.zipWithIndex.map { case (c, i) => col(c) === lit(r.get(i)) }
-          .reduce(_ && _)
-      }.reduce(_ || _)
-      spark.read.parquet(root).filter(pruning)
-        .select(partial.columns.toIndexedSeq.map(col): _*)
-    }
-    val current: Option[DataFrame] = batchId match {
-      case Some(id) =>
-        val bdir = new org.apache.hadoop.fs.Path(root, s"_batches/$id")
-        val snapDir = new org.apache.hadoop.fs.Path(bdir, "snapshot")
-        val snapDone = new org.apache.hadoop.fs.Path(bdir, "_SNAPSHOT_DONE")
-        if (!fs.exists(snapDone)) {
-          if (fs.exists(snapDir)) fs.delete(snapDir, true) // partial copy
-          if (existing) liveTouched.write.mode("overwrite")
-            .parquet(snapDir.toString)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], partial.schema)
-            .write.mode("overwrite").parquet(snapDir.toString)
-          fs.create(snapDone, true).close()
-        }
-        Some(spark.read.parquet(snapDir.toString))
-      case None => if (existing) Some(liveTouched) else None
-    }
-    val merged = current match {
-      case Some(cur) =>
-        // bucket counts ADD — the whole mergeability contract
-        partial.unionByName(cur)
-          .groupBy((keyCols :+ "k").map(col): _*)
-          .agg(sum(col("cnt")).cast("long").as("cnt"))
-      case None => partial
-    }
-    // cut lineage before overwriting paths the plan reads
-    val pinned = merged.localCheckpoint(eager = true)
-    pinned.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCols: _*)
-      .parquet(root)
-    applied.foreach { marker =>
-      fs.create(marker, true).close()
-      val bdir = marker.getParent
-      fs.delete(new org.apache.hadoop.fs.Path(bdir, "snapshot"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(bdir, "_SNAPSHOT_DONE"), true)
-    }
-    touched.length
+    // bucket counts ADD — the whole mergeability contract
+    IncrementalAgg.fold(spark, partial, root, partCols, batchId, None,
+      dropsRows = false)(
+      _.groupBy((keyCols :+ "k").map(col): _*)
+        .agg(sum(col("cnt")).cast("long").as("cnt")))
   }
 
   /** Quantile estimates from the maintained table: `(keyCols…, q_pct,

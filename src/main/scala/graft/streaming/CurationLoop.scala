@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import graft.sinks.{DedupIndexSink, IncrementalAgg, Layout, LineDedupSink, QuantileSink, VocabSink}
+import graft.sinks.{DedupIndexSink, IncrementalAgg, Layout, LineDedupSink, QuantileSink, SmallFiles,
+  VocabSink}
 
 /** The production curation loop: ONE `foreachBatch` body that feeds
   * every arriving document micro-batch through the three certified
@@ -164,17 +165,6 @@ object CurationLoop {
   private def lakeFs(spark: SparkSession, root: String) =
     new Path(lakeRoot(root)).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def readSmall(fs: org.apache.hadoop.fs.FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
-  }
-
   /** The committed lake generation with the largest id, if any:
     * `(gen, maxFoldedId, dir)` — only `_COMMITTED` generations exist
     * to readers (the [[DedupIndexSink.committedGen]] discipline).
@@ -189,7 +179,7 @@ object CurationLoop {
       .filter { case (_, p) => fs.exists(new Path(p, "_COMMITTED")) }
       .sortBy(_._1).lastOption
       .map { case (g, p) =>
-        val maxId = readSmall(fs, new Path(p, "_MANIFEST")).linesIterator
+        val maxId = SmallFiles.read(fs, new Path(p, "_MANIFEST")).linesIterator
           .collectFirst { case l if l.startsWith("max_id\t") =>
             l.stripPrefix("max_id\t").trim.toLong }
           .getOrElse(sys.error(
@@ -293,12 +283,10 @@ object CurationLoop {
       }.getOrElse(tailFrame)
     Layout.similarityOrdered(all, textCol, new Path(gDir, "data").toString,
       nFiles = files, tieCols = Seq(col("ingest_batch"), col(idCol)))
-    val out = fs.create(new Path(gDir, "_MANIFEST"), true)
-    try out.write((s"max_id\t$newMax\n" +
+    SmallFiles.write(fs, new Path(gDir, "_MANIFEST"),
+      s"max_id\t$newMax\n" +
         gen.map(x => s"prev_gen\t${x._1}\n").getOrElse("") +
         tail.map(d => s"folded\t${d._1}").mkString("\n") + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
     fs.create(new Path(gDir, "_COMMITTED"), true).close() // commit point
     // cleanup after the commit — a crash here is healed by the sweep
     tail.foreach { case (_, d) => fs.delete(new Path(d), true) }

@@ -200,7 +200,8 @@ object IngestMain {
     val queries = startQueries(spark, conf)
 
     // the reference's SIGINT flush intent (run.py:126-131) without its
-    // leak: stop() checkpoints the in-flight batch; replay is idempotent
+    // leak: stop() ends the in-flight batch, and the checkpoint replays
+    // an uncommitted one (the lake is at-least-once, `_stats` exactly-once)
     sys.addShutdownHook {
       queries.foreach(q => if (q.isActive) q.stop())
     }

@@ -167,10 +167,19 @@ object IngestPipeline {
     * string where a number belongs) both lands with the fields that did
     * parse and is dead-lettered.
     *
+    * Replay: the lake and dead-letter tables are plain appends, so a
+    * batch that Structured Streaming replays lands in them again
+    * (at-least-once). The `stats` rollup is exactly-once per `batchId`
+    * ([[writer]] passes the `foreachBatch` id): a replayed id folds
+    * nothing. Without `batchId` every call folds. Inside a streaming
+    * query the fold keys its markers by the query's id as well (the id
+    * its checkpoint keeps across restarts), so a drain under a new
+    * checkpoint, whose ids restart at 0, still folds.
+    *
     * @return the batch's rows per route and dead letters per reason
     */
   def routeAndWrite(batch: DataFrame, root: String, format: String = "parquet",
-                    stats: Boolean = false): BatchCounts = {
+                    stats: Boolean = false, batchId: Option[Long] = None): BatchCounts = {
     val value = col("value").cast("string")
     def malformed(record: String): Column =
       col(record).isNull || col(s"$record._corrupt").isNotNull
@@ -178,6 +187,10 @@ object IngestPipeline {
     // unnamed: IngestMain's priorityTopics runs two queries on one
     // session at once
     val observed = Observation()
+    // set by Spark on the thread that runs a streaming query's batches;
+    // read here, before the table writes move to their own threads
+    val query = Option(batch.sparkSession.sparkContext.getLocalProperty(
+      org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY))
     val parse = batch.coalesce(batch.sparkSession.sparkContext.defaultParallelism)
       .select(
         col("topic"), value.as("value"),
@@ -205,11 +218,12 @@ object IngestPipeline {
         // stats=true additionally maintains the per-entity monthly
         // hit-count rollup incrementally — the derived table a
         // dashboard reads instead of re-aggregating the lake; each
-        // batch touches only its own partitions (IncrementalAgg)
+        // batch touches only its own partitions (IncrementalAgg), and
+        // a batch id folds at most once
         if (stats)
           graft.sinks.IncrementalAgg.maintain(batch.sparkSession, tv,
             s"$root/_stats/vision", Seq("entity"),
-            Seq("entity", "year", "month"), "hit_counts")
+            Seq("entity", "year", "month"), "hit_counts", batchId, query)
       }
       def writeAirQuality(): Unit =
         PartitionedSink.appendPartitioned(
@@ -262,7 +276,7 @@ object IngestPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(interval))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val c = routeAndWrite(batch, root, format, stats)
+        val c = routeAndWrite(batch, root, format, stats, Some(batchId))
         log.info(s"batch $batchId: rows vision=${c.vision} air_quality=${c.airQuality}; " +
           s"dead letters malformed_json=${c.malformedJson} unknown_topic=${c.unknownTopic}")
       }

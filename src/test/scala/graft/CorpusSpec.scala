@@ -982,6 +982,22 @@ class CorpusSpec extends SparkSpec {
     assert(!p.contains("Exchange"), s"row-wise DSIR scoring must not shuffle:\n$p")
   }
 
+  test("dsirScoreRowWise equals explode + score-table join + per-doc sum on the fixture corpus") {
+    val docs = Tables.documents(spark, sf0001)
+    val dim = 256
+    val su = Corpus.dsirScoreMap(docs, docs.filter($"source" === "src0"), "text", dim)
+    val rowWise = Corpus.dsirScoreRowWise(docs, "doc_id", "text", su, dim)
+      .select($"id", $"logw_units").as[(Long, Long)].collect().toMap
+    val joined = docs
+      .select($"doc_id", explode(graft.functions.TextFunctions.tokens($"text")).as("tok"))
+      .select($"doc_id",
+        graft.operators.QualityClassifier.featureBucket($"tok", dim).as("j"))
+      .join(su.toSeq.toDF("j", "u"), "j")
+      .groupBy($"doc_id").agg(sum($"u").as("logw_units"))
+      .as[(Long, Long)].collect().toMap
+    assert(rowWise.nonEmpty && rowWise === joined)
+  }
+
   test("dsirSelect: n_tokens matches tokenization; weights are finite; k caps output") {
     val target = Tables.documents(spark, sf0001).filter($"source" === "src0")
     val raw = Tables.documents(spark, sf0001).filter($"source" =!= "src0")

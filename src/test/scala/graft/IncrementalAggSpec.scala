@@ -141,6 +141,24 @@ class IncrementalAggSpec extends SparkSpec {
     assert(fs.exists(new org.apache.hadoop.fs.Path(bdir, "_APPLIED")))
   }
 
+  test("markers are kept per query, and a commit drops the one minBatchesToRetain ids back") {
+    val root = java.nio.file.Files.createTempDirectory("incrq").toString + "/agg"
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def fold(q: String, id: Long) = IncrementalAgg.maintain(spark, batch(("a", 1, 1.0)), root,
+      Seq("entity"), Seq("entity", "month"), "value", batchId = Some(id), query = Some(q))
+    val key = "spark.sql.streaming.minBatchesToRetain"
+    spark.conf.set(key, "2")
+    try (0L to 3L).foreach(fold("q1", _)) finally spark.conf.unset(key)
+    def marked(q: String, id: Long) =
+      fs.exists(new org.apache.hadoop.fs.Path(root, s"_batches/$q/$id/_APPLIED"))
+    assert((0L to 3L).map(marked("q1", _)) === Seq(false, false, true, true))
+    // a second query's batch 0 is not the first one's
+    assert(fold("q2", 0L) === 1)
+    assert(fold("q2", 0L) === 0)
+    assert(IncrementalAgg.read(spark, root).select("n").as[Long].collect().toSeq === Seq(5L))
+  }
+
   test("CDC deltas advance the view to exactly the recompute of the new snapshot") {
     import graft.operators.Snapshot
     def snap(rows: (Long, String, Double)*) =

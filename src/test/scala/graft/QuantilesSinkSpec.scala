@@ -187,4 +187,22 @@ class QuantilesSinkSpec extends SparkSpec {
       .as[(String, Long, Long, Double)].collect().toSet
     assert(quantRows(root, Seq(50, 90)) === oneShot)
   }
+
+  test("batch-id folds release their merge checkpoint") {
+    val root = java.nio.file.Files.createTempDirectory("qsinkp").toString + "/sk"
+    val sc = spark.sparkContext
+    val cachedBefore = sc.getPersistentRDDs.keySet
+    val batches = (0 until 3).map(b =>
+      (1 to 60).map(i => (s"g${i % 2}", math.exp((i * (b + 1) % 40) / 9.0))))
+    batches.zipWithIndex.foreach { case (rows, i) =>
+      QuantileSink.maintain(spark, rows.toDF("grp", "v"), root,
+        Seq("grp"), Seq("grp"), "v", batchId = Some(i.toLong))
+    }
+    assert((sc.getPersistentRDDs.keySet -- cachedBefore).isEmpty,
+      sc.getPersistentRDDs.values.map(_.toDebugString))
+    val oneShot = graft.operators.Sketches
+      .ddQuantiles(batches.flatten.toDF("grp", "v"), "grp", "v", Seq(50, 90))
+      .as[(String, Long, Long, Double)].collect().toSet
+    assert(quantRows(root, Seq(50, 90)) === oneShot)
+  }
 }

@@ -47,6 +47,24 @@ class SqlFunctionsSpec extends SparkSpec {
     assert(err.getMessage.toLowerCase.contains("literal"))
   }
 
+  test("string_array_except_set equals the filter/array_contains lambda on the fixture corpus") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.graft.ColumnBridge
+    val tk = Tables.documents(spark, sf0001)
+      .select(col("doc_id"), graft.functions.TextFunctions.tokens(col("text")).as("tk"))
+    // the 30 most frequent tokens: dense enough that most documents lose some
+    val stop = tk.select(explode(col("tk")).as("t")).groupBy("t").count()
+      .orderBy(col("count").desc, col("t")).limit(30).collect().map(_.getString(0))
+    def kept(c: org.apache.spark.sql.Column) =
+      tk.select(col("doc_id"), c.as("kept")).collect()
+        .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    val hof = kept(filter(col("tk"), t => !array_contains(typedlit(stop), t)))
+    val set = kept(ColumnBridge.column(graft.functions.StringArrayExceptSet(
+      ColumnBridge.expression(col("tk")), stop)))
+    assert(set === hof)
+    assert(hof.values.map(_.size).sum < tk.select(sum(size(col("tk")))).head().getLong(0))
+  }
+
   test("SQL function composes with tables (top-k cosine via spark.sql)") {
     GraftExtensions.register(spark)
     Tables.embeddings(spark, sf0001).createOrReplaceTempView("emb")

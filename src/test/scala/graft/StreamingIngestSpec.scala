@@ -440,6 +440,60 @@ class StreamingIngestSpec extends SparkSpec {
     assert(rolled === spark.read.parquet(s"$root/vision").count())
   }
 
+  private def rollup(root: String): Seq[String] =
+    graft.sinks.IncrementalAgg.read(spark, s"$root/_stats/vision")
+      .select("entity", "year", "month", "n", "sum_v").toJSON.collect().sorted.toSeq
+
+  test("a batch routed twice under one batch id folds the stats rollup once") {
+    val batch = dirtyCases.toDF("topic", "value")
+    val once = Files.createTempDirectory("graft_lake_stats_once_").toString
+    IngestPipeline.routeAndWrite(batch, once, stats = true, batchId = Some(0L))
+    val twice = Files.createTempDirectory("graft_lake_stats_twice_").toString
+    (1 to 2).foreach(_ =>
+      IngestPipeline.routeAndWrite(batch, twice, stats = true, batchId = Some(0L)))
+    assert(rollup(once).nonEmpty)
+    assert(rollup(twice) === rollup(once))
+  }
+
+  test("writer passes its batch id: a batch replayed after a lost commit folds the stats rollup once") {
+    val root = Files.createTempDirectory("graft_lake_replay_").toString
+    val ckpt = Files.createTempDirectory("graft_ckpt_replay_").toString
+    implicit val sqlCtx: org.apache.spark.sql.classic.SQLContext =
+      spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
+    val input = MemoryStream[(String, String)]
+    input.addData(dirtyCases: _*)
+    val stream = input.toDF().toDF("topic", "value")
+    IngestPipeline.writer(stream, root, ckpt, availableNow = true, stats = true)
+      .start().awaitTermination()
+    val once = rollup(root)
+    // a crash after the batch's writes but before its commit-log entry:
+    // the restart replays batch 0
+    Seq("0", ".0.crc").foreach(f =>
+      Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", f)))
+    val q = IngestPipeline.writer(stream, root, ckpt, availableNow = true, stats = true).start()
+    q.awaitTermination()
+    assert(q.recentProgress.exists(p => p.batchId == 0 && p.numInputRows == dirtyCases.size),
+      q.recentProgress.map(_.json).mkString("\n"))
+    assert(rollup(root) === once)
+  }
+
+  test("two checkpoints drained into one root both fold the stats rollup") {
+    val root = Files.createTempDirectory("graft_lake_two_ckpts_").toString
+    implicit val sqlCtx: org.apache.spark.sql.classic.SQLContext =
+      spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
+    for (cam <- Seq("camA", "camB")) {
+      val input = MemoryStream[(String, String)]
+      input.addData(("cuip_vision_events",
+        s"""{"timestamp": 1704067300000, "camera_id": "$cam", "locations": [], "hit_counts": 1}"""))
+      val ckpt = Files.createTempDirectory("graft_ckpt_two_").toString
+      IngestPipeline.writer(input.toDF().toDF("topic", "value"), root, ckpt,
+        availableNow = true, stats = true).start().awaitTermination()
+    }
+    // both drains ran batch id 0, each under its own query id
+    assert(rollup(root).map(r => (r.contains("camA"), r.contains("camB"))) ===
+      Seq((true, false), (false, true)))
+  }
+
   test("AvailableNow restart is idempotent (checkpoint prevents reprocessing)") {
     val root = Files.createTempDirectory("graft_lake2_").toString
     val ckpt = Files.createTempDirectory("graft_ckpt2_").toString
