@@ -137,7 +137,7 @@ object GraftSession {
     * (`hdfs://…`, `s3a://…`); the tmpdir default keeps local/test
     * behavior unchanged. Joined via hadoop [[org.apache.hadoop.fs
     * .Path]] so scheme-qualified roots survive (the [[graft.sinks
-    * .QuantileSink]] discipline).
+    * .BatchCommit]] discipline).
     */
   def scratchRoot(spark: SparkSession): String =
     spark.conf.get("spark.graft.scratchDir",

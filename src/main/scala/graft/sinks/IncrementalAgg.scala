@@ -38,14 +38,9 @@ object IncrementalAgg {
     * directory layout). Returns the number of partitions rewritten.
     *
     * `batchId` (streaming callers) makes the fold EXACTLY-ONCE under
-    * Structured Streaming's replay model, by the [[QuantileSink]]
-    * snapshot protocol: committed ids (`root/_batches/<id>/_APPLIED`)
-    * skip; otherwise the touched partitions' pre-batch rows are
-    * snapshotted and sealed before the live table is touched, the
-    * merge reads the SNAPSHOT (never the live partitions), and the
-    * dynamic overwrite is an idempotent rewrite from any crash point.
-    * Without `batchId` the fold reads the live table directly (the
-    * batch-job path, where re-running means re-adding by intent).
+    * Structured Streaming's replay model, by [[fold]]'s snapshot
+    * protocol. Without `batchId` the fold reads the live table directly
+    * (the batch-job path, where re-running means re-adding by intent).
     * `query` (the streaming query's id) scopes the markers to
     * `root/_batches/<query>/<id>`, so a second checkpoint draining into
     * the same table, whose ids restart at 0, still folds. Only the last
@@ -104,13 +99,33 @@ object IncrementalAgg {
     * when the table does not exist yet) into the rows to write back.
     * Returns the number of partitions rewritten.
     *
-    * `batchId` runs the [[QuantileSink]] snapshot protocol: committed
-    * ids (`root/_batches/[<query>/]<id>/_APPLIED`) skip; otherwise the
-    * touched partitions' pre-batch rows are snapshotted and sealed
-    * before the live table is touched, and the merge reads the
-    * SNAPSHOT. A commit drops the marker `minBatchesToRetain` ids back:
-    * a streaming checkpoint keeps no more batches than that, so the
-    * marker can no longer be replayed.
+    * `batchId` runs the snapshot protocol, exactly-once under
+    * Structured Streaming's replay model (a restart re-invokes
+    * `foreachBatch` with the same id and, for replayable sources, the
+    * same rows):
+    *
+    *   1. the [[BatchCommit.marker]] `root/_batches/[<query>/]<id>/_APPLIED`
+    *      present → the fold committed; skip. This alone is not enough
+    *      — a crash between the data write and the marker would
+    *      otherwise double-fold — so:
+    *   2. before touching the live table, the touched partitions'
+    *      CURRENT rows are snapshotted to `_batches/[<query>/]<id>/snapshot`,
+    *      sealed by `_SNAPSHOT_DONE`;
+    *   3. the merge reads the SNAPSHOT, never the live partitions, so
+    *      re-running after ANY crash point recomputes the identical
+    *      merged rows and the dynamic-partition overwrite is an
+    *      idempotent rewrite;
+    *   4. `_APPLIED` commits, the snapshot is dropped, and so is the
+    *      marker `minBatchesToRetain` ids back: a streaming checkpoint
+    *      keeps no more batches than that, so that id can no longer be
+    *      replayed.
+    *
+    * Crash replay matrix: before the snapshot seals → live is
+    * untouched, the snapshot rebuilds; after sealing, anywhere through
+    * the overwrite → the refold reads the sealed pre-batch state and
+    * converges; after `_APPLIED` → skipped.
+    * `_`-prefixed paths are invisible to parquet readers. Single-writer
+    * (the `foreachBatch` serialization contract) is assumed.
     *
     * `dropsRows` says whether `merge` can filter a touched group out;
     * only then can a touched partition end up empty and need the scan
@@ -120,12 +135,8 @@ object IncrementalAgg {
                           partCols: Seq[String], batchId: Option[Long],
                           query: Option[String], dropsRows: Boolean)
                          (merge: DataFrame => DataFrame): Int = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batches = new org.apache.hadoop.fs.Path(root,
-      query.fold("_batches")(q => s"_batches/$q"))
-    val applied = batchId.map(id =>
-      new org.apache.hadoop.fs.Path(batches, s"$id/_APPLIED"))
+    val fs = BatchCommit.fsOf(spark, root)
+    val applied = batchId.map(BatchCommit.marker(root, _, query))
     if (applied.exists(fs.exists)) return 0
 
     val touched: Array[Row] = partial.select(partCols.map(col): _*).distinct().collect()
@@ -143,10 +154,10 @@ object IncrementalAgg {
     }
     // streaming path: merge against a SEALED pre-batch snapshot of the
     // touched partitions, so any crash-point replay recomputes the
-    // identical merged rows (the QuantileSink protocol)
-    val current: Option[DataFrame] = batchId match {
-      case Some(id) =>
-        val bdir = new org.apache.hadoop.fs.Path(batches, id.toString)
+    // identical merged rows
+    val current: Option[DataFrame] = applied match {
+      case Some(marker) =>
+        val bdir = marker.getParent
         val snapDir = new org.apache.hadoop.fs.Path(bdir, "snapshot")
         val snapDone = new org.apache.hadoop.fs.Path(bdir, "_SNAPSHOT_DONE")
         // a snapshot sealed by this call is read back with the schema it
@@ -200,7 +211,7 @@ object IncrementalAgg {
         val expired = batchId.get -
           spark.conf.get("spark.sql.streaming.minBatchesToRetain").toLong
         if (expired >= 0)
-          fs.delete(new org.apache.hadoop.fs.Path(batches, expired.toString), true)
+          fs.delete(BatchCommit.marker(root, expired, query).getParent, true)
       }
       touched.length
     }

@@ -30,19 +30,16 @@ import graft.operators.Dedup
   * corpus-scale backfill is a one-shot [[Dedup.dedupLines]] job, not
   * one giant batch through this sink.
   *
-  * Protocol: everything is inherited from [[DedupIndexSink]]'s
-  * append-only machinery — per-batch hash directories at
-  * `root/ingest_batch=<id>/`, `_batches/<id>/_APPLIED` markers,
-  * generation folds under `_gen/<G>/` with `_MANIFEST` + `_COMMITTED`
-  * ([[compact]] delegates to the shared fold). A replay of a committed
-  * id recomputes its cleaned batch against exactly the same PRIOR state
-  * (the probe reads only sealed `ingest_batch < id` directories, never
-  * its own) and skips the fold, so any crash point converges.
-  * Single-writer, the `foreachBatch` serialization contract.
+  * Protocol: [[BatchCommit]]'s append-only batches and generations —
+  * per-batch hash directories at `root/ingest_batch=<id>/`,
+  * `_batches/<id>/_APPLIED` markers, generation folds under `_gen/<G>/`
+  * ([[compact]]). A replay of a committed id recomputes its cleaned
+  * batch against exactly the same PRIOR state (the probe reads only
+  * sealed `ingest_batch < id` directories, never its own) and skips the
+  * fold, so any crash point converges. Single-writer, the
+  * `foreachBatch` serialization contract.
   */
 object LineDedupSink {
-
-  import DedupIndexSink.{batchDirs => _, _}
 
   /** Clean `batch` against the standing line-hash set and fold its new
     * hashes in — exactly once per `batchId`. Returns the CLEANED batch:
@@ -62,17 +59,9 @@ object LineDedupSink {
                idCol: String, textCol: String, batchId: Long,
                minLineChars: Int = 2, normalize: Boolean = false): DataFrame = {
     require(minLineChars >= 1, s"minLineChars must be >= 1, got $minLineChars")
-    val fs = fsOf(spark, root)
-    val applied = join(root, "_batches", batchId.toString, "_APPLIED")
-    if (!fs.exists(applied)) {
-      // an unapplied batch must sit ABOVE the compaction horizon — an
-      // uncommitted batch below it cannot re-probe pre-batch state
-      val hz = horizon(spark, root)
-      require(hz < batchId,
-        s"batch $batchId has no _APPLIED marker but the line index is " +
-          s"compacted through $hz: restore a checkpoint at or above the " +
-          "horizon, or rebuild the index")
-    }
+    val fs = BatchCommit.fsOf(spark, root)
+    val applied = BatchCommit.committed(fs, root, batchId)
+    if (!applied) BatchCommit.requireReplayable(spark, root, batchId, "line index")
     val key = if (normalize)
       graft.functions.TextFunctions.normalize(col("__line"))
     else col("__line")
@@ -85,7 +74,7 @@ object LineDedupSink {
     val winners = batchWinners(lines).persist()
     try {
       // prior state: committed generation + sealed batch dirs < batchId
-      val prior = readMerged(spark, root, "state", root, Some(batchId))
+      val prior = BatchCommit.read(spark, root, "state", root, Some(batchId))
         .map(_.select(col("h").as("__h")))
       // PROBE DIRECTION (the q105/DedupIndexSink discipline, round-17
       // verdict fix): the standing set grows with the corpus, so it must
@@ -105,7 +94,7 @@ object LineDedupSink {
       // per batch the way the previous eager form did
       val matched = probeMatched(prior, winners).map(_.localCheckpoint(false))
       val drops = dropsFor(lines, winners, matched)
-      if (!fs.exists(applied)) {
+      if (!applied) {
         // fold ONLY batch-new hashes (a seen line's hash is already in
         // the standing set); overwrite is idempotent per id
         val newHashes = matched match {
@@ -114,8 +103,8 @@ object LineDedupSink {
         }
         newHashes.select(col("__h").as("h"))
           .write.mode("overwrite")
-          .parquet(join(root, s"ingest_batch=$batchId").toString)
-        fs.create(applied, true).close()
+          .parquet(BatchCommit.batchDir(root, batchId).toString)
+        BatchCommit.commit(fs, root, batchId)
       }
       // materialize the cleaned batch before the lines cache drops —
       // the returned frame must not lazily re-run the probe
@@ -169,19 +158,20 @@ object LineDedupSink {
   }
 
   /** Fold sealed batch directories into one generation —
-    * [[DedupIndexSink.compactSubs]] with the line sink's single `state`
-    * table; probe results are identical pre/post (pure data movement).
+    * [[BatchCommit.fold]] with the line sink's single `state` table;
+    * probe results are identical pre/post (pure data movement).
     * Returns the committed horizon.
     */
   def compact(spark: SparkSession, root: String, upTo: Long = Long.MaxValue,
               targetBytes: Long = 128L * 1024 * 1024): Long =
-    compactSubs(spark, root, Seq("state" -> root), upTo, targetBytes)
+    BatchCommit.fold(spark, root, Seq("state" -> root), upTo, targetBytes)(
+      BatchCommit.bySize)
 
   /** The standing hash set (`h`, `ingest_batch`) — committed state
     * only; exposed for audits and tests.
     */
   def read(spark: SparkSession, root: String): DataFrame =
-    readMerged(spark, root, "state", root, None)
+    BatchCommit.read(spark, root, "state", root, None)
       .reduceOption(_.unionByName(_))
       .getOrElse(spark.emptyDataFrame
         .withColumn("h", lit(null).cast("long"))

@@ -34,30 +34,11 @@ object QuantileSink {
     * number of partitions rewritten.
     *
     * `batchId` makes the fold EXACTLY-ONCE under Structured
-    * Streaming's replay model (restart re-invokes `foreachBatch` with
-    * the same id and — for replayable sources — the same rows):
-    *
-    *   1. `root/_batches/<id>/_APPLIED` present → the fold committed;
-    *      skip. This alone is not enough — a crash between the data
-    *      write and the marker would otherwise double-fold — so:
-    *   2. before touching the live table, the touched partitions'
-    *      CURRENT rows are snapshotted to `root/_batches/<id>/snapshot`
-    *      (sketch state is KB-scale per group, so this copy is cheap),
-    *      sealed by `_SNAPSHOT_DONE`;
-    *   3. the merge reads the SNAPSHOT, never the live partitions, so
-    *      re-running after ANY crash point recomputes the identical
-    *      merged rows and the dynamic-partition overwrite is an
-    *      idempotent rewrite;
-    *   4. `_APPLIED` commits, the snapshot is dropped.
-    *
-    * Crash replay matrix: before the snapshot seals → live is
-    * untouched, the snapshot rebuilds; after sealing, anywhere through
-    * the overwrite → the refold reads the sealed pre-batch state and
-    * converges; after `_APPLIED` → skipped. `_`-prefixed paths are
-    * invisible to parquet readers. Single-writer (the `foreachBatch`
-    * serialization contract) is assumed, as in [[IncrementalAgg]].
-    * Without `batchId` the fold reads the live table directly (the
-    * batch-job path, where re-running means re-adding by intent).
+    * Streaming's replay model, by [[IncrementalAgg.fold]]'s snapshot
+    * protocol (sketch state is KB-scale per group, so its snapshot copy
+    * is cheap). Without `batchId` the fold reads the live table
+    * directly (the batch-job path, where re-running means re-adding by
+    * intent).
     */
   def maintain(spark: SparkSession, batch: DataFrame, root: String,
                partCols: Seq[String], keyCols: Seq[String],

@@ -2,11 +2,12 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import graft.sinks.{DedupIndexSink, IncrementalAgg, Layout, LineDedupSink, QuantileSink, SmallFiles,
-  VocabSink}
+import graft.sinks.{BatchCommit, DedupIndexSink, IncrementalAgg, Layout, LineDedupSink, QuantileSink,
+  SmallFiles, VocabSink}
 
 /** The production curation loop: ONE `foreachBatch` body that feeds
   * every arriving document micro-batch through the three certified
@@ -45,13 +46,13 @@ import graft.sinks.{DedupIndexSink, IncrementalAgg, Layout, LineDedupSink, Quant
   * bytes when the stream carries near-dup mass, since parquet
   * compresses page-locally (33 % fewer bytes at 40 % dup mass,
   * BASELINE `layout_compress`; the `curation_scale` bench carries the
-  * loop-composed bytes column). Exactly-once per batch id on the same
-  * marker discipline as every other sink here; [[lake]] reads
+  * loop-composed bytes column). Exactly-once per batch id on the
+  * [[BatchCommit]] protocol the two indexes use; [[lake]] reads
   * committed batches only. [[optimizeLake]] is the maintenance pass
   * (Delta `OPTIMIZE` analogue): fold all committed batches into one
   * GLOBALLY similarity-ordered generation — cross-batch dup mass
   * becomes page-adjacent and the small per-batch files compact, under
-  * the generation/manifest crash protocol.
+  * [[BatchCommit.fold]]'s crash protocol.
   *
   * An optional SIXTH table is the standing LINE-dedup filter
   * ([[LineDedupSink]] — Dolma's pipeline dedups paragraphs BEFORE the
@@ -68,7 +69,8 @@ import graft.sinks.{DedupIndexSink, IncrementalAgg, Layout, LineDedupSink, Quant
   * Layout under `root` (all joins via hadoop [[Path]] — object-store
   * roots survive): `dedup_index/`, `quality_quantiles/`,
   * `corpus_stats/`, `vocabulary/` (when enabled), `doc_lake/` (when
-  * enabled), `line_index/` (when enabled).
+  * enabled), `line_index/` (when enabled), and `_QUERY_ID` (the
+  * streaming query that owns the root, see [[writer]]).
   */
 object CurationLoop {
 
@@ -130,82 +132,22 @@ object CurationLoop {
 
   /** The fifth sink's fold: batch → `doc_lake/ingest_batch=<id>/`,
     * similarity-ordered within the batch, exactly-once per id on the
-    * `_batches/<id>/_APPLIED` marker (a replay of a committed id skips;
-    * a crashed half-write has no marker, is invisible to [[lake]], and
-    * the replay's deterministic overwrite converges to identical
-    * bytes).
+    * [[BatchCommit]] marker (a replay of a committed id skips; a crashed
+    * half-write has no marker, is invisible to [[lake]], and the
+    * replay's deterministic overwrite converges to identical bytes).
     */
   private def maintainLake(spark: SparkSession, batch: DataFrame,
                            root: String, idCol: String, textCol: String,
                            batchId: Long, lakeFiles: Int): Unit = {
-    val lr = new Path(lakeRoot(root))
-    val fs = lr.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val applied = new Path(new Path(lr, "_batches"),
-      s"$batchId/_APPLIED")
-    if (!fs.exists(applied)) {
-      // an unapplied batch must sit ABOVE the optimize horizon — an
-      // uncommitted id below it cannot replay (its directory would be
-      // invisible to readers forever); only a checkpoint restored from
-      // before an optimize pass can produce this
-      val hz = lakeHorizon(spark, root)
-      require(hz < batchId,
-        s"lake batch $batchId has no _APPLIED marker but the lake is " +
-          s"optimized through $hz: restore a checkpoint at or above the " +
-          "horizon, or rebuild the lake")
-      Layout.similarityOrdered(batch,
-        textCol, new Path(lr, s"ingest_batch=$batchId").toString,
+    val lr = lakeRoot(root)
+    val fs = BatchCommit.fsOf(spark, lr)
+    if (!BatchCommit.committed(fs, lr, batchId)) {
+      BatchCommit.requireReplayable(spark, lr, batchId, "lake", "optimized")
+      Layout.similarityOrdered(batch, textCol,
+        BatchCommit.batchDir(lr, batchId).toString,
         nFiles = lakeFiles, tieCols = Seq(col(idCol)))
-      fs.create(applied, true).close()
+      BatchCommit.commit(fs, lr, batchId)
     }
-  }
-
-  // ---------------------------------------------------------------
-  // lake generations (the OPTIMIZE pass)
-
-  private def lakeFs(spark: SparkSession, root: String) =
-    new Path(lakeRoot(root)).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** The committed lake generation with the largest id, if any:
-    * `(gen, maxFoldedId, dir)` — only `_COMMITTED` generations exist
-    * to readers (the [[DedupIndexSink.committedGen]] discipline).
-    */
-  private def lakeGen(spark: SparkSession,
-                      root: String): Option[(Long, Long, Path)] = {
-    val fs = lakeFs(spark, root)
-    val base = new Path(lakeRoot(root), "_gen")
-    if (!fs.exists(base)) None
-    else fs.listStatus(base).toSeq.map(_.getPath)
-      .flatMap(p => scala.util.Try(p.getName.toLong).toOption.map((_, p)))
-      .filter { case (_, p) => fs.exists(new Path(p, "_COMMITTED")) }
-      .sortBy(_._1).lastOption
-      .map { case (g, p) =>
-        val maxId = SmallFiles.read(fs, new Path(p, "_MANIFEST")).linesIterator
-          .collectFirst { case l if l.startsWith("max_id\t") =>
-            l.stripPrefix("max_id\t").trim.toLong }
-          .getOrElse(sys.error(
-            s"lake generation $g under $root has no max_id in its manifest"))
-        (g, maxId, p)
-      }
-  }
-
-  /** Every batch id ≤ this is folded into the committed lake
-    * generation (-1 with no generation).
-    */
-  private def lakeHorizon(spark: SparkSession, root: String): Long =
-    lakeGen(spark, root).map(_._2).getOrElse(-1L)
-
-  private def committedBatchDirs(spark: SparkSession, root: String,
-                                 above: Long): Seq[(Long, String)] = {
-    val lr = new Path(lakeRoot(root))
-    val fs = lakeFs(spark, root)
-    if (!fs.exists(lr)) Seq.empty
-    else fs.listStatus(lr).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("ingest_batch="))
-      .map(p => (p.getName.stripPrefix("ingest_batch=").toLong, p.toString))
-      .filter(_._1 > above)
-      .filter { case (id, _) => fs.exists(new Path(new Path(lr, "_batches"),
-        s"$id/_APPLIED")) }
-      .sortBy(_._1)
   }
 
   /** OPTIMIZE the document lake (the Delta `OPTIMIZE ZORDER` analogue
@@ -220,103 +162,38 @@ object CurationLoop {
     * global re-cluster packs page-adjacent — fewer bytes AND
     * fewer/larger files (the small-files compaction in the same pass).
     *
-    * Crash protocol — the [[DedupIndexSink.compactSubs]] discipline:
-    * generation `G` writes `doc_lake/_gen/<G>/data/` (overwrite,
-    * idempotent), then `_MANIFEST`, commits with `_COMMITTED`, and only
-    * then deletes the folded batch directories and the previous
-    * generation; readers decide solely by `_COMMITTED`, so a crash at
-    * any point leaves the old view intact and the next pass converges.
-    * Pre-cleanup leftovers (batch dirs at or below the horizon,
-    * uncommitted generations) are swept at the next pass. `_batches`
-    * markers are kept forever, so a replay of a FOLDED id still
-    * short-circuits in [[apply]]. Single-writer, same as the loop.
-    * `nFiles = 0` (the default) sizes the generation by bytes —
-    * `ceil(source bytes / targetBytes)` files, the
-    * [[DedupIndexSink.compact]] discipline; pass an explicit `nFiles`
-    * to pin the layout (tests, benches). Returns the committed lake
-    * horizon.
+    * The generation is a [[BatchCommit.fold]] with the single sub
+    * `doc_lake/_gen/<G>/data/`, under its crash protocol; the `_batches`
+    * markers stay, so a replay of a FOLDED id still short-circuits in
+    * [[apply]]. Single-writer, same as the loop. `nFiles = 0` (the
+    * default) sizes the generation by bytes — `ceil(source bytes /
+    * targetBytes)` files; pass an explicit `nFiles` to pin the layout
+    * (tests, benches). Returns the committed lake horizon.
     */
   def optimizeLake(spark: SparkSession, root: String, idCol: String,
                    textCol: String, nFiles: Int = 0,
                    targetBytes: Long = 128L * 1024 * 1024): Long = {
     require(nFiles >= 0, s"file count must be >= 0 (0 = size by bytes), got $nFiles")
-    require(targetBytes >= 1, s"targetBytes must be >= 1, got $targetBytes")
-    val fs = lakeFs(spark, root)
-    val gen = lakeGen(spark, root)
-    val lo = gen.map(_._2).getOrElse(-1L)
-    // sweep a crashed prior pass: folded batch dirs below the horizon,
-    // generations other than the committed one
-    val lr = new Path(lakeRoot(root))
-    if (fs.exists(lr)) fs.listStatus(lr).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("ingest_batch="))
-      .filter(_.getName.stripPrefix("ingest_batch=").toLong <= lo)
-      .foreach(p => fs.delete(p, true))
-    val genBase = new Path(lr, "_gen")
-    if (fs.exists(genBase)) fs.listStatus(genBase).toSeq.map(_.getPath)
-      .filter(p => scala.util.Try(p.getName.toLong).toOption
-        .exists(g => gen.forall(_._1 != g)))
-      .foreach(p => fs.delete(p, true))
-
-    val tail = committedBatchDirs(spark, root, lo)
-    if (tail.isEmpty) return lo
-    val newMax = tail.map(_._1).max
-    val g = gen.map(_._1 + 1).getOrElse(0L)
-    val gDir = new Path(genBase, g.toString)
-    // nFiles = 0 ⇒ size the generation by bytes (the compactSubs
-    // discipline): ceil(source bytes / targetBytes) files
-    val files =
-      if (nFiles > 0) nFiles
-      else {
-        val bytes = gen.toSeq.map(gp =>
-            fs.getContentSummary(new Path(gp._3, "data")).getLength) ++
-          tail.map(d => fs.getContentSummary(new Path(d._2)).getLength)
-        math.max(1L, (bytes.sum + targetBytes - 1) / targetBytes).toInt
-      }
-
-    val tailFrame = spark.read.option("basePath", lr.toString)
-      .parquet(tail.map(_._2): _*)
-      .withColumn("ingest_batch", col("ingest_batch").cast("long"))
-    val all = gen.map { case (_, _, p) =>
-        spark.read.parquet(new Path(p, "data").toString)
-          .withColumn("ingest_batch", col("ingest_batch").cast("long"))
-          .unionByName(tailFrame)
-      }.getOrElse(tailFrame)
-    Layout.similarityOrdered(all, textCol, new Path(gDir, "data").toString,
-      nFiles = files, tieCols = Seq(col("ingest_batch"), col(idCol)))
-    SmallFiles.write(fs, new Path(gDir, "_MANIFEST"),
-      s"max_id\t$newMax\n" +
-        gen.map(x => s"prev_gen\t${x._1}\n").getOrElse("") +
-        tail.map(d => s"folded\t${d._1}").mkString("\n") + "\n")
-    fs.create(new Path(gDir, "_COMMITTED"), true).close() // commit point
-    // cleanup after the commit — a crash here is healed by the sweep
-    tail.foreach { case (_, d) => fs.delete(new Path(d), true) }
-    gen.foreach { case (_, _, p) => fs.delete(p, true) }
-    newMax
+    val lr = lakeRoot(root)
+    BatchCommit.fold(spark, lr, Seq("data" -> lr), Long.MaxValue, targetBytes) {
+      (all, path, bySize) =>
+        Layout.similarityOrdered(all, textCol, path,
+          nFiles = if (nFiles > 0) nFiles else bySize(),
+          tieCols = Seq(col("ingest_batch"), col(idCol)))
+    }
   }
 
-  /** Read the committed document lake: the committed generation (when
-    * [[optimizeLake]] has run) plus every post-horizon
-    * `ingest_batch=<id>/` directory whose `_APPLIED` marker exists,
-    * with the `ingest_batch` id as a LONG column (the
-    * [[DedupIndexSink]] reader discipline — uncommitted crash debris,
-    * half-written generations, and pre-cleanup leftovers below the
-    * horizon never surface). THROWS (`IllegalArgumentException`) when
-    * no committed batch exists — with zero batches there is no schema
-    * to hand back, so a loud failure beats a silently-empty schemaless
-    * frame (the [[DedupIndexSink.allMatches]] convention).
+  /** Read the committed document lake ([[BatchCommit.read]]: the
+    * committed generation plus every committed post-horizon
+    * `ingest_batch=<id>/` directory), with the `ingest_batch` id as a
+    * LONG column. THROWS (`IllegalArgumentException`) when no committed
+    * batch exists — with zero batches there is no schema to hand back,
+    * so a loud failure beats a silently-empty schemaless frame (the
+    * [[DedupIndexSink.allMatches]] convention).
     */
   def lake(spark: SparkSession, root: String): DataFrame = {
-    val lr = new Path(lakeRoot(root))
-    val gen = lakeGen(spark, root)
-    val lo = gen.map(_._2).getOrElse(-1L)
-    val tail = committedBatchDirs(spark, root, lo)
-    val frames = gen.toSeq.map { case (_, _, p) =>
-      spark.read.parquet(new Path(p, "data").toString)
-        .withColumn("ingest_batch", col("ingest_batch").cast("long"))
-    } ++ (if (tail.isEmpty) Nil
-          else Seq(spark.read.option("basePath", lr.toString)
-            .parquet(tail.map(_._2): _*)
-            .withColumn("ingest_batch", col("ingest_batch").cast("long"))))
+    val lr = lakeRoot(root)
+    val frames = BatchCommit.read(spark, lr, "data", lr, None)
     require(frames.nonEmpty,
       s"no committed lake batches under $lr — run the loop with lakeFiles > 0")
     frames.reduce(_.unionByName(_))
@@ -325,10 +202,10 @@ object CurationLoop {
   /** Periodic index maintenance (run from the same single writer, e.g.
     * weekly between drains): fold the dedup index's sealed per-batch
     * directories into one generation so probe cost stays flat as batch
-    * history grows — [[DedupIndexSink.compact]]'s manifest + marker
-    * protocol; readers see identical rows throughout. The line index
-    * (when the loop runs with `cleanLines = true`) folds under the
-    * same call — probe results are identical pre/post for both.
+    * history grows — a [[BatchCommit.fold]]; readers see identical
+    * rows throughout. The line index (when the loop runs with
+    * `cleanLines = true`) folds under the same call — probe results are
+    * identical pre/post for both.
     * Returns the dedup index's committed horizon.
     */
   def compact(spark: SparkSession, root: String,
@@ -349,6 +226,13 @@ object CurationLoop {
     * (BASELINE `curation_scale`). The fold runs AFTER the batch
     * commits, so a crash between them replays convergently (the
     * batch's markers short-circuit, the fold re-runs idempotently).
+    *
+    * The sinks key their markers by batch id alone, and a new checkpoint
+    * numbers its batches from 0 again, so every sink would skip them as
+    * already applied. A root therefore keeps its first query: the first
+    * batch records the streaming query's id (the one the checkpoint's
+    * `metadata` keeps across restarts) in `root/_QUERY_ID`, and a batch
+    * of any other query fails before it touches the root.
     */
   def writer(stream: DataFrame, root: String, checkpoint: String,
              idCol: String, textCol: String,
@@ -366,6 +250,7 @@ object CurationLoop {
                else Trigger.ProcessingTime(interval))
       .foreachBatch { (batch: DataFrame, id: Long) =>
         if (!batch.isEmpty) {
+          requireOwner(batch.sparkSession, root)
           apply(batch.sparkSession, batch, root, idCol, textCol,
             partCols, keyCols, valueCol, id, langCol, lakeFiles, cleanLines)
           if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
@@ -379,4 +264,19 @@ object CurationLoop {
           }
         }
       }
+
+  private def requireOwner(spark: SparkSession, root: String): Unit = {
+    val query = spark.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY)
+    val file = new Path(root, "_QUERY_ID")
+    val fs = BatchCommit.fsOf(spark, root)
+    if (!fs.exists(file)) SmallFiles.write(fs, file, query)
+    else {
+      val owner = SmallFiles.read(fs, file)
+      require(owner == query,
+        s"curation root $root was drained by streaming query $owner, not by " +
+          s"query $query: a new checkpoint restarts its batch ids at 0 and " +
+          s"every sink would skip them as already applied — restart from " +
+          s"the checkpoint of query $owner, or drain into a fresh root")
+    }
+  }
 }

@@ -319,6 +319,92 @@ class CurationLoopSpec extends SparkSpec {
     assert(ex.getMessage.contains("optimized through"))
   }
 
+  test("optimizeLake crash matrix: every protocol point converges") {
+    import org.apache.hadoop.fs.Path
+    val root = freshRoot("lake-crash")
+    Seq(0L, 1L, 2L).foreach { d =>
+      CurationLoop(spark, day(d), root, "doc_id", "text",
+        Seq("lang"), Seq("lang"), "quality", d, lakeFiles = 1)
+    }
+    def lakeRows() = CurationLoop.lake(spark, root)
+      .select(col("ingest_batch"), col("doc_id"), col("lang"),
+        col("text"), col("quality"))
+      .as[(Long, Long, String, String, Double)].collect().toSet
+    val before = lakeRows()
+    val lr = CurationLoop.lakeRoot(root)
+    val fs = new Path(lr).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+    // crash BEFORE commit: generation data + manifest written, no
+    // _COMMITTED — readers ignore it entirely, the retry commits it
+    CurationLoop.lake(spark, root).write.mode("overwrite")
+      .parquet(lr + "/_gen/0/data")
+    val mf = fs.create(new Path(lr, "_gen/0/_MANIFEST"), true)
+    mf.write("max_id\t2\n".getBytes("UTF-8")); mf.close()
+    assert(lakeRows() === before, "uncommitted generation must be invisible")
+    assert(CurationLoop.optimizeLake(spark, root, "doc_id", "text",
+      nFiles = 1) === 2L, "retry commits")
+    assert(fs.exists(new Path(lr, "_gen/0/_COMMITTED")))
+    assert(lakeRows() === before)
+    assert(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(lr, "_gen/0/_MANIFEST")), "UTF-8") ===
+      "max_id\t2\nfolded\t0\nfolded\t1\nfolded\t2\n",
+      "the committed manifest records the horizon and every folded id")
+
+    // crash AFTER commit, mid-cleanup: a folded batch dir survives
+    // below the horizon — readers exclude it by id, next pass sweeps it
+    val leftover = new Path(lr, "ingest_batch=1")
+    CurationLoop.lake(spark, root).filter(col("ingest_batch") === 1L)
+      .drop("ingest_batch").write.mode("overwrite").parquet(leftover.toString)
+    assert(lakeRows() === before, "sub-horizon leftovers must be invisible")
+    assert(CurationLoop.optimizeLake(spark, root, "doc_id", "text",
+      nFiles = 1) === 2L) // no new batches
+    assert(!fs.exists(leftover), "the next pass must sweep pre-cleanup leftovers")
+    assert(lakeRows() === before)
+  }
+
+  test("a second checkpoint draining into one root fails fast and leaves the root unchanged") {
+    val root = freshRoot("two-ck")
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val byDay = docs.as[(Long, String, String, Double)].collect()
+      .groupBy(r => r._1 / 10 - 1)
+    def start(d: Long) = {
+      val input = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[(Long, String, String, Double)]
+      input.addData(byDay(d).toSeq)
+      CurationLoop.writer(
+          input.toDF().toDF("doc_id", "lang", "text", "quality"),
+          root, freshRoot(s"two-ck-$d"), "doc_id", "text",
+          Seq("lang"), Seq("lang"), "quality",
+          availableNow = false, interval = "1 second", lakeFiles = 1)
+        .start()
+    }
+    def files() = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().sortBy(_.getName).toSeq.flatMap(walk)
+        else Seq(f)
+      walk(new java.io.File(root)).map(f => (f.getPath, f.length,
+        java.util.Arrays.hashCode(java.nio.file.Files.readAllBytes(f.toPath))))
+    }
+    val q1 = start(0L)
+    try q1.processAllAvailable() finally q1.stop()
+    val before = files()
+
+    // the second checkpoint numbers its first batch 0 again: on the
+    // first checkpoint's markers every sink would skip it silently
+    val q2 = start(1L)
+    val failure = try scala.util.Try(q2.processAllAvailable()).failed.toOption
+      finally q2.stop()
+    assert(failure.isDefined, "the second drain must fail, but its documents " +
+      "were silently skipped: the lake holds " + CurationLoop.lake(spark, root)
+        .select(col("doc_id")).as[Long].collect().sorted.mkString(","))
+    val msg = Iterator.iterate(failure.get)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(msg.contains(q1.id.toString) && msg.contains(q2.id.toString),
+      s"the failure must name both query ids, got: $msg")
+    assert(msg.contains("checkpoint"), s"the failure must name the remedy, got: $msg")
+    assert(files() === before, "the failed drain must leave the root unchanged")
+  }
+
   test("cleanLines adds the line filter as a sixth exactly-once sink; the lake lands cleaned text") {
     // default path: no line index directory at all
     val plain = freshRoot("lines-off")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sinks.DedupIndexSink
+import graft.sinks.{BatchCommit, DedupIndexSink}
 
 /** [[graft.sinks.DedupIndexSink]] — the self-maintaining streaming
   * dedup index: maintained matches equal the brute-force day-ordered
@@ -109,11 +109,11 @@ class DedupIndexSinkSpec extends SparkSpec {
     // the sink's whole point is an object-store lake root; java.io.File
     // would collapse "s3a://bucket" into "s3a:/bucket". Assert every
     // constructed path keeps its scheme + authority intact.
-    assert(DedupIndexSink.join("s3a://bucket/idx", "_matches",
+    assert(BatchCommit.join("s3a://bucket/idx", "_matches",
       "ingest_batch=5").toString === "s3a://bucket/idx/_matches/ingest_batch=5")
-    assert(DedupIndexSink.join("s3a://bucket/idx", "_batches", "7",
+    assert(BatchCommit.join("s3a://bucket/idx", "_batches", "7",
       "_APPLIED").toString === "s3a://bucket/idx/_batches/7/_APPLIED")
-    assert(DedupIndexSink.join("hdfs://nn:8020/lake/idx",
+    assert(BatchCommit.join("hdfs://nn:8020/lake/idx",
       "ingest_batch=0").toString === "hdfs://nn:8020/lake/idx/ingest_batch=0")
   }
 
@@ -135,11 +135,11 @@ class DedupIndexSinkSpec extends SparkSpec {
     val extra = Seq(40L -> sentence).toDF("doc_id", "text")
     graft.operators.Dedup.prepareNearDupIndex(extra, "doc_id", "text", 3, 128, 42L)
       .write.mode("overwrite")
-      .parquet(DedupIndexSink.join(root, "ingest_batch=3").toString)
+      .parquet(BatchCommit.join(root, "ingest_batch=3").toString)
     extra.select(col("doc_id").as("new_id"), lit(10L).as("old_id"),
         lit(1L).as("inter"), lit(1L).as("un"), lit(1.0).as("jac"))
       .write.mode("overwrite")
-      .parquet(DedupIndexSink.join(root, "_matches", "ingest_batch=3").toString)
+      .parquet(BatchCommit.join(root, "_matches", "ingest_batch=3").toString)
     // readers must not see the half-committed batch
     assert(matchSet(root) === m0)
     assert(DedupIndexSink.state(spark, root).count() === s0)
@@ -212,6 +212,10 @@ class DedupIndexSinkSpec extends SparkSpec {
     assert(DedupIndexSink.state(spark, root).count() === 8)
     assert(DedupIndexSink.compact(spark, root) === 2L, "retry commits")
     assert(matchSet(root) === m0)
+    assert(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(root, "_gen/0/_MANIFEST")), "UTF-8") ===
+      "max_id\t2\nfolded\t0\nfolded\t1\nfolded\t2\n",
+      "the committed manifest records the horizon and every folded id")
 
     // crash AFTER commit, mid-cleanup: a folded per-batch dir survives
     // below the horizon — readers exclude it by id, next pass sweeps it

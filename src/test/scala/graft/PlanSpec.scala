@@ -458,7 +458,7 @@ class PlanSpec extends SparkSpec {
     val lines = Seq((1L, 0, 100L), (1L, 1, 200L), (2L, 0, 100L))
       .toDF("__id", "__pos", "__h")
     val winners = graft.sinks.LineDedupSink.batchWinners(lines)
-    // standing state arrives as a parquet scan (what readMerged yields) —
+    // standing state arrives as a parquet scan (what BatchCommit.read yields) —
     // the gate must exercise that shape, not a local relation
     val dir = java.nio.file.Files.createTempDirectory("q240gate").toString
     Seq(100L, 300L).toDF("h").write.mode("overwrite").parquet(dir)
