@@ -22,7 +22,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
          new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", name),
          builder))
     }
-    e.injectOptimizerRule(_ => graft.plans.TopKViaHeapRule)
   }
 }
 

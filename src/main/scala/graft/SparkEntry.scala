@@ -4696,7 +4696,7 @@ object SparkEntry {
     * weights fold into a plan-literal map and the token array folds
     * against it per row — ZERO exchanges in the scoring plan
     * (PlanSpec-gated), so the pass streams unchanged
-    * (StatefulOpsSpec's gate twin). Exact oracle: the q148 integer
+    * (StreamComposeSpec's gate twin). Exact oracle: the q148 integer
     * replay plus one scoring pass.
     */
   def q150(s: SparkSession, d: String): DataFrame = {

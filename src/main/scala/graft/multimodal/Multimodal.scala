@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * partition-wise batch processing (`mapPartitions`, the JVM analogue of
   * arrow-batched UDF execution), deterministic outputs. All three media
   * codecs are real and zero-dependency: IMAGE via `javax.imageio` (JDK:
-  * [[imageMeta]] / [[resizeImages]] decode/re-encode PNG/JPEG/BMP/GIF),
+  * [[imageMeta]] decodes PNG/JPEG/BMP/GIF),
   * AUDIO via `javax.sound.sampled` (JDK: [[audioMeta]] decodes WAV/PCM,
   * [[renderPcmWav]] encodes it), and VIDEO via a hand-rolled YUV4MPEG2
   * (Y4M) container codec ([[videoMeta]] / [[videoFrameMeta]] parse,
@@ -74,9 +74,6 @@ object Multimodal {
     }
     sb.toString
   }
-
-  /** One sampled frame (video) / window (audio). */
-  case class Frame(media_id: Long, frame_idx: Int, offset: Long, frame: Array[Byte])
 
   /** Build a media table from any (id, bytes) source — e.g. documents as
     * stand-in blobs. Demonstrates the binary-column schema contract.
@@ -158,31 +155,6 @@ object Multimodal {
         }
       }
     }
-  }
-
-  /** Real resize: decode, bilinear-rescale to (w, h), re-encode as PNG.
-    * Rows that do not decode pass through unchanged (flagged by their
-    * untouched width/height) rather than failing the task.
-    */
-  def resizeImages(media: Dataset[MediaRow], w: Int, h: Int): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map { r =>
-      decodeImage(r.payload) match {
-        case Some(img) =>
-          val out = new java.awt.image.BufferedImage(w, h,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = out.createGraphics()
-          try {
-            g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-              java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-            g.drawImage(img, 0, 0, w, h, null)
-          } finally g.dispose()
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(out, "png", bos)
-          r.copy(payload = bos.toByteArray, width = w, height = h)
-        case None => r
-      }
-    })
   }
 
   /** Quadratic-gradient grayscale PNG: `luma(x, y) = shift +
@@ -835,79 +807,6 @@ object Multimodal {
     }
   }
 
-  /** Real audio resample: decode WAV through the JDK codec, rebuild the
-    * sample stream at `targetRate` by nearest-neighbor sample pick (the
-    * audio analogue of [[resizeImages]] / [[resizeVideos]] — a real
-    * production pipeline would low-pass filter first; nearest pick is
-    * the deterministic, dependency-free core), and re-encode 16-bit
-    * mono WAV. Multi-channel input is averaged to mono first (the
-    * standard ASR-pipeline shape). Undecodable payloads pass through
-    * unchanged.
-    */
-  def resampleAudio(media: Dataset[MediaRow], targetRate: Int): Dataset[MediaRow] = {
-    require(targetRate > 0, s"targetRate must be positive, got $targetRate")
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map { r =>
-      decodeAudio(r.payload) match {
-        case Some((fmt, data))
-            if (fmt.getSampleSizeInBits == 8 || fmt.getSampleSizeInBits == 16) &&
-               fmt.getChannels >= 1 &&
-               fmt.getSampleRate > 0 &&
-               (fmt.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED ||
-                fmt.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED) =>
-          val bits = fmt.getSampleSizeInBits
-          val ch = fmt.getChannels
-          val unsigned = fmt.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED
-          val bytesPer = bits / 8
-          val nIn = data.length / (bytesPer * ch)
-          def sampleAt(frame: Int, c: Int): Int = {
-            val i = frame * ch + c
-            if (bits == 8) {
-              // widen to the 16-bit range (×256) so amplitude is preserved
-              // across bit depths, matching the RMS-preserving 16-bit path
-              val v = if (unsigned) (data(i) & 0xFF) - 128 else data(i).toInt
-              v << 8
-            } else {
-              val off = i * 2
-              val b0 = data(off) & 0xFF; val b1 = data(off + 1) & 0xFF
-              val raw = if (fmt.isBigEndian) (b0 << 8) | b1 else (b1 << 8) | b0
-              if (unsigned) raw - 32768 else raw.toShort.toInt
-            }
-          }
-          val srcRate = fmt.getSampleRate.toDouble
-          // Long math: nIn * targetRate overflows Int for clips past ~2.6M
-          // frames at 44.1 kHz (nIn*rate > 2^31) — compute the output length
-          // in Long and only then narrow, refusing sizes a JVM array can't hold
-          val nOutL = math.max(0L, math.round(nIn.toLong * targetRate / srcRate))
-          if (nOutL > (Int.MaxValue - 64L) / 2) r // output exceeds max byte[]
-          else {
-            val nOut = nOutL.toInt
-            val pcm = new Array[Byte](nOut * 2)
-            var k = 0
-            while (k < nOut) {
-              val frame = math.min(nIn - 1, (k * srcRate / targetRate).toInt)
-              var acc = 0
-              var c = 0
-              while (c < ch) { acc += sampleAt(frame, c); c += 1 }
-              val v = acc / ch
-              pcm(2 * k) = (v & 0xFF).toByte
-              pcm(2 * k + 1) = ((v >> 8) & 0xFF).toByte
-              k += 1
-            }
-            val outFmt = new javax.sound.sampled.AudioFormat(
-              targetRate.toFloat, 16, 1, /*signed=*/ true, /*bigEndian=*/ false)
-            val ais = new javax.sound.sampled.AudioInputStream(
-              new java.io.ByteArrayInputStream(pcm), outFmt, nOut.toLong)
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.sound.sampled.AudioSystem.write(
-              ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-            r.copy(payload = bos.toByteArray, sample_rate = targetRate)
-          }
-        case _ => r
-      }
-    })
-  }
-
   // ---- REAL VIDEO KERNEL (hand-rolled YUV4MPEG2 — no external deps) ------
   // Y4M is the raw-video interchange format (mjpegtools; emitted/consumed
   // by ffmpeg, x264, libvpx): an ASCII one-line stream header
@@ -991,22 +890,19 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** Chroma plane dimensions, or None for an unsupported colorspace tag
-    * (or dims the tag's subsampling cannot represent). 420 halves both
-    * axes (even dims required, per the Y4M spec), 422 halves width only,
-    * 444 is full-size, mono has no chroma.
+  /** Bytes in one chroma plane, or None for an unsupported colorspace
+    * tag (or dims the tag's subsampling cannot represent). 420 halves
+    * both axes (even dims required, per the Y4M spec), 422 halves width
+    * only, 444 is full-size, mono has no chroma.
     */
-  private def chromaDims(cs: String, w: Int, h: Int): Option[(Int, Int)] = cs match {
-    case "mono" => Some((0, 0))
+  private def chromaPlaneSize(cs: String, w: Int, h: Int): Option[Int] = cs match {
+    case "mono" => Some(0)
     case "420" | "420jpeg" | "420mpeg2" | "420paldv" =>
-      if (w % 2 == 0 && h % 2 == 0) Some((w / 2, h / 2)) else None
-    case "422" => if (w % 2 == 0) Some((w / 2, h)) else None
-    case "444" => Some((w, h))
+      if (w % 2 == 0 && h % 2 == 0) Some((w / 2) * (h / 2)) else None
+    case "422" => if (w % 2 == 0) Some((w / 2) * h) else None
+    case "444" => Some(w * h)
     case _ => None
   }
-
-  private def chromaPlaneSize(cs: String, w: Int, h: Int): Option[Int] =
-    chromaDims(cs, w, h).map { case (cw, ch) => cw * ch }
 
   /** Parse a Y4M payload: validate the stream header, walk the FRAME
     * markers, record each frame's Y-plane offset. Returns None on
@@ -1397,50 +1293,6 @@ object Multimodal {
         col("coverage_r"))
   }
 
-  /** Real video resize: parse the Y4M stream, nearest-neighbor-rescale
-    * every plane of every frame (Y at the target dims, chroma at the
-    * colorspace's subsampling of them), and re-encode — the video
-    * analogue of [[resizeImages]], decode → transform → encode with no
-    * external codec. Target dims must be representable in the stream's
-    * own colorspace (even, for subsampled chroma); payloads that do not
-    * parse pass through unchanged, same contract as [[resizeImages]].
-    */
-  def resizeVideos(media: Dataset[MediaRow], w2: Int, h2: Int): Dataset[MediaRow] = {
-    require(w2 > 0 && h2 > 0, s"target dims must be positive: $w2 x $h2")
-    import media.sparkSession.implicits._
-
-    def scalePlane(src: Array[Byte], off: Int, sw: Int, sh: Int,
-                   dst: java.io.ByteArrayOutputStream, dw: Int, dh: Int): Unit = {
-      var y = 0
-      while (y < dh) {
-        val sy = y * sh / dh
-        var x = 0
-        while (x < dw) { dst.write(src(off + sy * sw + x * sw / dw)); x += 1 }
-        y += 1
-      }
-    }
-
-    media.mapPartitions(_.map { r =>
-      parseY4m(r.payload).flatMap { v =>
-        chromaDims(v.cs, w2, h2).map { case (cw2, ch2) =>
-          val (cw, ch) = chromaDims(v.cs, v.w, v.h).get // parse guaranteed it
-          val bos = new java.io.ByteArrayOutputStream()
-          bos.write(s"YUV4MPEG2 W$w2 H$h2 F${v.fpsNum}:${v.fpsDen} Ip A1:1 C${v.cs}\n"
-            .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-          v.yOffsets.foreach { off =>
-            bos.write("FRAME\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-            scalePlane(r.payload, off, v.w, v.h, bos, w2, h2)
-            if (v.chromaSize > 0) {
-              scalePlane(r.payload, off + v.ySize, cw, ch, bos, cw2, ch2)
-              scalePlane(r.payload, off + v.ySize + v.chromaSize, cw, ch, bos, cw2, ch2)
-            }
-          }
-          r.copy(payload = bos.toByteArray, width = w2, height = h2)
-        }
-      }.getOrElse(r) // not parseable (or dims invalid for its colorspace): unchanged
-    })
-  }
-
   // ---- FEATURE KERNEL (real, codec-backed 64-bin content histogram) ----
 
   /** Real 64-bin content histogram, decoded per modality through the
@@ -1542,21 +1394,6 @@ object Multimodal {
         while (i < r.payload.length) { crc = crc * 31 + (r.payload(i) & 0xFF); i += 1 }
         MediaFeatures(r.media_id, r.kind, r.payload.length.toLong, crc,
           feature64(r.payload))
-      }
-    }
-  }
-
-  /** Frame sampling: every `stride` bytes emit a `frameLen`-byte frame —
-    * the flatMap (1 → N rows) shape of video-frame extraction, with
-    * offsets preserved for downstream alignment.
-    */
-  def sampleFrames(media: Dataset[MediaRow], stride: Int, frameLen: Int): Dataset[Frame] = {
-    import media.sparkSession.implicits._
-    media.flatMap { r =>
-      (0 until r.payload.length by stride).iterator.zipWithIndex.map {
-        case (off, idx) =>
-          val end = math.min(off + frameLen, r.payload.length)
-          Frame(r.media_id, idx, off.toLong, java.util.Arrays.copyOfRange(r.payload, off, end))
       }
     }
   }

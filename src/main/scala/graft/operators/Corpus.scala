@@ -1610,31 +1610,6 @@ object Corpus {
     if (kept.isEmpty) Seq(rows.head) else kept.toSeq
   }
 
-  // learned merge tables keyed by (application, corpus key, numMerges):
-  // driver-side metadata, the train-once / tokenize-many lifecycle
-  private val learnedMerges =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(String, String)]]()
-
-  /** [[learnBpe]] memoized per (session application, `key`, numMerges),
-    * returning the merge list ready for
-    * [[graft.functions.BpeFunctions.bpeSymbols]].
-    */
-  def learnBpeCached(key: String, docs: DataFrame, textCol: String,
-                     numMerges: Int): Array[(String, String)] = {
-    val app = docs.sparkSession.sparkContext.applicationId
-    val full = s"$app|$key|$textCol|$numMerges"
-    val hit = learnedMerges.get(full)
-    if (hit != null) hit
-    else {
-      val it = learnedMerges.keySet.iterator()
-      while (it.hasNext) { if (!it.next().startsWith(app + "|")) it.remove() }
-      learnedMerges.computeIfAbsent(full, _ =>
-        learnBpe(docs, textCol, numMerges)
-          .orderBy("rank").collect()
-          .map(r => (r.getString(1), r.getString(2))))
-    }
-  }
-
   /** Document-frequency-cap token pruning — the CCNet/RefinedWeb-style
     * boilerplate pass: any token present in MORE than `maxDfPct` percent
     * of documents is dropped from every document, and the text is

@@ -92,7 +92,7 @@ object NaiveBayes {
 
   // trained models keyed by (application, corpus key, params): driver
   // metadata (K·dim longs), the train-once / classify-many lifecycle
-  // shared with QualityClassifier.trainCached / Corpus.learnBpeCached.
+  // shared with QualityClassifier.trainCached.
   private val trainedModels =
     new java.util.concurrent.ConcurrentHashMap[String, NbModel]()
 

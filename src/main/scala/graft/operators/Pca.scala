@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * aggregation (count + per-dim sums + upper-triangular Gram matrix) via
   * a typed [[Aggregator]], eigen-decomposition of the resulting d × d
   * covariance on the driver (cyclic Jacobi — the matrix is METADATA,
-  * d² doubles, not data), and projection as a map-side dot product
-  * against eigenvector literals.
+  * d² doubles, not data), and [[powerProject]]'s exact-integer power
+  * iteration with map-side projection.
   *
   * Scale design: the only shuffle is the aggregator's merge — each
   * partition contributes one buffer of `1 + d + d(d+1)/2` doubles (for
@@ -98,11 +98,11 @@ object Pca {
   /** Fitted PCA: top-k eigenvectors (row-major [k][d], each sign-fixed
     * so its largest-magnitude entry is positive — eigenvectors are
     * sign-ambiguous, pinning makes projections reproducible),
-    * eigenvalues descending, total variance, and the corpus means (for
-    * centering at projection time). All from ONE moments pass.
+    * eigenvalues descending, and total variance. All from ONE moments
+    * pass.
     */
   final case class Model(components: Array[Array[Double]], eigenvalues: Array[Double],
-                         totalVariance: Double, means: Array[Double])
+                         totalVariance: Double)
 
   /** Top-`k` principal components of the corpus. Cyclic Jacobi on the
     * driver — deterministic, O(d³ · sweeps) on d² metadata.
@@ -122,7 +122,7 @@ object Pca {
       val mx = v.indices.maxBy(i => math.abs(v(i)))
       if (v(mx) < 0) v.map(-_) else v
     }
-    Model(top, order.map(vals), vals.sum, s.map(_ / n))
+    Model(top, order.map(vals), vals.sum)
   }
 
   /** Cyclic Jacobi eigen-decomposition of a symmetric matrix: returns
@@ -184,26 +184,6 @@ object Pca {
     var s = 0.0
     for (i <- a.indices; j <- a.indices if i != j) s += a(i)(j) * a(i)(j)
     s
-  }
-
-  /** Project every vector onto the given components: map-side dot
-    * products against eigenvector literals — no join, no shuffle.
-    * Output: (id, pc1..pck). Vectors are centered by the corpus means
-    * implied in `means` before projection (PCA is defined on centered
-    * data).
-    */
-  def project(embeddings: DataFrame, idCol: String, vecCol: String,
-              model: Model): DataFrame = {
-    import graft.functions.VectorFunctions
-    val v = col(vecCol).cast("array<double>")
-    val pcs = model.components.zipWithIndex.map { case (pc, i) =>
-      // dot(v - mean, pc) = dot(v, pc) - dot(mean, pc): the second term
-      // is a plan-time constant, so no per-row vector subtraction
-      val shift = pc.zip(model.means).map { case (p, m) => p * m }.sum
-      (VectorFunctions.dot(v, typedLit(pc.toSeq)) - lit(shift)).as(s"pc${i + 1}")
-    }
-    embeddings.filter(v.isNotNull)
-      .select((col(idCol) +: pcs.toSeq): _*)
   }
 
   /** Top-2 spectral projection by FIXED-POINT POWER ITERATION — the

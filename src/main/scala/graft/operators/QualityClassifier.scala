@@ -180,7 +180,7 @@ object QualityClassifier {
 
   // trained weight vectors keyed by (application, corpus key, params):
   // driver-side longs (dim ≤ 64k entries), the train-once / score-many
-  // lifecycle shared with Corpus.learnBpeCached / Quantize.fitPqCached.
+  // lifecycle shared with Quantize.fitPqCached.
   // Entries from dead applications drop lazily on the next train.
   private val trainedWeights =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()

@@ -201,44 +201,6 @@ object Similarity {
           .as("outlier_score_r"))
   }
 
-  /** The PROBE-BATCHED sweep [[knnOutlierScores]]'s scaladoc promises:
-    * score an unbounded probe set by hash-splitting it into
-    * ~`batchSize`-probe slices, each slice riding the same bounded
-    * broadcast contract, results unioned. The plan is one corpus scan
-    * PER SLICE — the honest full-sweep cost (`ceil(n/batchSize)`
-    * corpus passes); the broadcast never exceeds a slice, so executor
-    * memory is bounded at any probe count. Slicing is md5-free
-    * xxhash64 on the id — deterministic, so the union equals the
-    * single-broadcast result bit-for-bit (SimilaritySpec pins it).
-    * The slice count is metadata (one count job); per-slice size is
-    * the EXPECTED bound (hash splits are even, not exact). Full
-    * corpus-against-itself at lake scale still belongs to the ANN
-    * tier first — this is the exact path for audit-sized sweeps that
-    * outgrow one broadcast.
-    */
-  def knnOutlierScoresBatched(corpus: DataFrame, probes: DataFrame,
-                              idCol: String, vecCol: String, k: Int,
-                              batchSize: Int = 50000,
-                              maxSlices: Int = 256): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
-    val n = probes.count()
-    val slices = math.max(1L, (n + batchSize - 1) / batchSize)
-    require(slices <= maxSlices,
-      s"$n probes at batchSize=$batchSize need $slices corpus passes " +
-        s"(> $maxSlices): this sweep belongs to the ANN tier, or raise " +
-        s"batchSize/maxSlices deliberately")
-    // per-slice guard stays on (an adversarially hash-skewed id set
-    // must still fail fast, not OOM a broadcast) with a generous
-    // even-split allowance; its limit-bounded count is cheap per slice
-    val sliceCap = math.min(4L * batchSize, Int.MaxValue.toLong).toInt
-    (0L until slices).map { i =>
-        knnOutlierScores(corpus,
-          probes.filter(pmod(xxhash64(col(idCol)), lit(slices)) === i),
-          idCol, vecCol, k, maxProbes = sliceCap)
-      }.reduce(_.unionByName(_))
-  }
-
   /** Rank-biased overlap between two per-key rankings (Webber, Moffat
     * & Zobel, "A similarity measure for indefinite rankings", TOIS
     * 2010), truncated at `depth` with persistence `p = pNum/pDen` —

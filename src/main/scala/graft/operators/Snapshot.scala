@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
   * change-data-capture diff a pipeline runs between two loads of an
   * upstream table. The reference re-reads and appends whole partitions
   * per cycle (`df_manager.py:59-84`); the diff is the set-level
-  * generalization that tells you WHAT moved, feeding incremental
-  * maintenance ([[graft.sinks.IncrementalAgg]]) instead of a blind
+  * generalization that tells you WHAT moved instead of a blind
   * rewrite.
   *
   * Scale design (100 TB): exactly one FULL OUTER shuffle join on the
@@ -59,22 +58,4 @@ object Snapshot {
   def changes(oldDf: DataFrame, newDf: DataFrame, keyCols: Seq[String],
               compareCols: Seq[String]): DataFrame =
     diff(oldDf, newDf, keyCols, compareCols).filter(col("status") =!= "unchanged")
-
-  /** Diff rows → signed (count, value) deltas that fold a keyed
-    * count/sum view forward: added = (+1, +value), removed =
-    * (−1, −value), changed = (0, new − old). Feed the result to
-    * [[graft.sinks.IncrementalAgg.maintainDeltas]] — the CDC →
-    * materialized-view bridge: the view advances from the delta alone,
-    * no history replay. Map-side projection over the diff.
-    */
-  def toDeltas(changeRows: DataFrame, keyCols: Seq[String],
-               compareCol: String): DataFrame = {
-    val o = coalesce(col(s"old_$compareCol").cast("double"), lit(0.0))
-    val n = coalesce(col(s"new_$compareCol").cast("double"), lit(0.0))
-    changeRows.select(keyCols.map(col) :+
-      when(col("status") === "added", 1L)
-        .when(col("status") === "removed", -1L)
-        .otherwise(0L).as("dn") :+
-      (n - o).as("dv"): _*)
-  }
 }

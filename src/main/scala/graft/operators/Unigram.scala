@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.functions.{TextFunctions, UnigramFunctions, UnigramKernel}
 
@@ -124,25 +123,6 @@ object Unigram {
         .map { case (p, n) => VocabEntry(p, n, vocab(p)) }
         .sortBy(e => (-e.cnt, e.piece))
     } finally dict.unpersist(blocking = false)
-  }
-
-  /** [[learnUnigram]] as a DataFrame `(rank, piece, cnt, cost_units)`
-    * — the display/persist face. */
-  def learnUnigramDf(docs: DataFrame, textCol: String, vocabSize: Int = 256,
-                     maxPieceLen: Int = 4, iters: Int = 2,
-                     seedFactor: Int = 4): DataFrame = {
-    val spark = docs.sparkSession
-    val entries = learnUnigram(docs, textCol, vocabSize, maxPieceLen, iters, seedFactor)
-    val rows = entries.zipWithIndex.map { case (e, i) =>
-      Row((i + 1).toLong, e.piece, e.cnt, e.costUnits)
-    }
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*),
-      StructType(Seq(
-        StructField("rank", LongType, nullable = false),
-        StructField("piece", StringType, nullable = false),
-        StructField("cnt", LongType, nullable = false),
-        StructField("cost_units", LongType, nullable = false))))
   }
 
   /** Keep every alphabet single (zero-count singles included — they

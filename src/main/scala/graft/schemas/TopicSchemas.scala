@@ -36,6 +36,4 @@ object TopicSchemas {
   val airQualityReading: StructType = StructType(Seq(
     StructField("timestamp", LongType, nullable = true),
     StructField("nicename", StringType, nullable = true)))
-
-  def isAirQuality(topic: String): Boolean = topic.endsWith(airQualitySuffix)
 }

@@ -2,13 +2,15 @@ package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions._
 
 /** The batch/generation commit protocol of the append-only tables: the
   * near-dup index ([[DedupIndexSink]]), the line index
   * ([[LineDedupSink]]) and the curation loop's document lake
   * ([[graft.streaming.CurationLoop]]). Every `_batches`, `_gen`,
-  * `_MANIFEST` and `_COMMITTED` path of those tables is built here.
+  * `_MANIFEST`, `_COMMITTED` and `_QUERY_ID` path of those tables is
+  * built here.
   *
   * Batches: batch `id` writes each sub table's
   * `<dirRoot>/ingest_batch=<id>/` (overwrite — idempotent per id), then
@@ -63,6 +65,32 @@ private[graft] object BatchCommit {
 
   def commit(fs: FileSystem, root: String, id: Long): Unit =
     fs.create(marker(root, id), true).close()
+
+  /** A root keeps the streaming query that first drained into it. The
+    * markers are keyed by batch id alone, and a new checkpoint numbers
+    * its batches from 0 again, so every one of them would skip as
+    * already applied. The first batch records the streaming query's id
+    * (the one the checkpoint's `metadata` keeps across restarts) in
+    * `root/_QUERY_ID`; a batch of any other query fails before it
+    * writes. Outside a streaming query (`StreamExecution.QUERY_ID_KEY`
+    * unset) it does nothing: batch callers number their own batches.
+    */
+  def requireOwner(spark: SparkSession, root: String): Unit = {
+    val query = spark.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY)
+    if (query != null) {
+      val file = new Path(root, "_QUERY_ID")
+      val fs = fsOf(spark, root)
+      if (!fs.exists(file)) SmallFiles.write(fs, file, query)
+      else {
+        val owner = SmallFiles.read(fs, file)
+        require(owner == query,
+          s"$root was drained by streaming query $owner, not by query " +
+            s"$query: a new checkpoint restarts its batch ids at 0 and " +
+            s"every batch would skip as already applied — restart from " +
+            s"the checkpoint of query $owner, or drain into a fresh root")
+      }
+    }
+  }
 
   /** An uncommitted batch must sit ABOVE the folded horizon: a replay
     * below it cannot re-read its pre-batch state (its own rows are

@@ -47,7 +47,9 @@ import graft.operators.Dedup
   * `stream.writeStream.foreachBatch((b, id) => maintain(spark, b, root,
   * "doc_id", "text", id))`, with `compact(spark, root)` as the
   * periodic (e.g. weekly) maintenance pass from the same single
-  * writer.
+  * writer. The root keeps the streaming query that first drained it
+  * ([[BatchCommit.requireOwner]]): a batch under a second checkpoint
+  * fails before it writes.
   */
 object DedupIndexSink {
 
@@ -85,6 +87,7 @@ object DedupIndexSink {
                numHashes: Int = 128, bands: Int = 32,
                thresholdNum: Int = 7, thresholdDen: Int = 10,
                ngram: Int = 3, seed: Long = 42L): DataFrame = {
+    BatchCommit.requireOwner(spark, root)
     val fs = fsOf(spark, root)
     if (!BatchCommit.committed(fs, root, batchId)) {
       BatchCommit.requireReplayable(spark, root, batchId, "index")

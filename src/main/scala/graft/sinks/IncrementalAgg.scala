@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -49,48 +49,18 @@ object IncrementalAgg {
   def maintain(spark: SparkSession, batch: DataFrame, root: String,
                partCols: Seq[String], keyCols: Seq[String],
                valueCol: String, batchId: Option[Long] = None,
-               query: Option[String] = None): Int =
-    foldCounts(spark,
-      batch.withColumn("__dn", lit(1L))
-        .withColumn("__dv", col(valueCol).cast(DecimalType(18, 2))),
-      root, partCols, keyCols, batchId, query)
-
-  /** Fold SIGNED deltas into the aggregate — the CDC path: feed it
-    * [[graft.operators.Snapshot.toDeltas]] of a snapshot diff and the
-    * view moves forward WITHOUT replaying history (added = +1/+value,
-    * removed = −1/−value, changed = 0/value-shift). Because the state
-    * is a mergeable (count, exact decimal sum), applying the delta is
-    * associative with the original folds — maintained ≡ recomputed, the
-    * invariant `IncrementalAggSpec` proves. Groups whose count reaches
-    * zero are dropped from the rewritten partitions (a fully-retracted
-    * key disappears, as a recompute would make it).
-    */
-  def maintainDeltas(spark: SparkSession, deltas: DataFrame, root: String,
-                     partCols: Seq[String], keyCols: Seq[String],
-                     dnCol: String, dvCol: String,
-                     batchId: Option[Long] = None): Int =
-    foldCounts(spark,
-      deltas.withColumn("__dn", col(dnCol).cast("long"))
-        .withColumn("__dv", col(dvCol).cast(DecimalType(18, 2))),
-      root, partCols, keyCols, batchId, None)
-
-  private def foldCounts(spark: SparkSession, batch: DataFrame, root: String,
-                         partCols: Seq[String], keyCols: Seq[String],
-                         batchId: Option[Long], query: Option[String]): Int = {
+               query: Option[String] = None): Int = {
     require(partCols.nonEmpty && partCols.forall(keyCols.contains),
       s"partCols $partCols must be a subset of keyCols $keyCols")
     // sum(decimal(18,2)) widens to decimal(28,2); pin the STORED type to
     // decimal(18,2) here so every batch writes the same parquet encoding
     // (mixed widths across partitions break later schema-inferred reads)
-    def counts(rows: DataFrame, n: String, v: String): DataFrame =
+    def counts(rows: DataFrame, n: Column, v: Column): DataFrame =
       rows.groupBy(keyCols.map(col): _*)
-        .agg(sum(col(n)).cast("long").as("n"),
-          sum(col(v)).cast(DecimalType(18, 2)).as("sum_v"))
-    fold(spark, counts(batch, "__dn", "__dv"), root, partCols, batchId, query,
-      dropsRows = true)(rows =>
-      // fully-retracted keys (count folded to zero) leave the table, the
-      // way a recompute over the corrected source would drop them
-      counts(rows, "n", "sum_v").filter(col("n") =!= 0L))
+        .agg(sum(n).cast("long").as("n"),
+          sum(v).cast(DecimalType(18, 2)).as("sum_v"))
+    fold(spark, counts(batch, lit(1L), col(valueCol).cast(DecimalType(18, 2))),
+      root, partCols, batchId, query)(rows => counts(rows, col("n"), col("sum_v")))
   }
 
   /** The partition-granular fold every maintained view shares:
@@ -126,14 +96,10 @@ object IncrementalAgg {
     * converges; after `_APPLIED` → skipped.
     * `_`-prefixed paths are invisible to parquet readers. Single-writer
     * (the `foreachBatch` serialization contract) is assumed.
-    *
-    * `dropsRows` says whether `merge` can filter a touched group out;
-    * only then can a touched partition end up empty and need the scan
-    * that deletes it.
     */
   private[sinks] def fold(spark: SparkSession, partial: DataFrame, root: String,
                           partCols: Seq[String], batchId: Option[Long],
-                          query: Option[String], dropsRows: Boolean)
+                          query: Option[String])
                          (merge: DataFrame => DataFrame): Int = {
     val fs = BatchCommit.fsOf(spark, root)
     val applied = batchId.map(BatchCommit.marker(root, _, query))
@@ -175,30 +141,11 @@ object IncrementalAgg {
     }
     val merged = merge(current.fold(partial)(partial.unionByName(_)))
 
-    // cut lineage AND pin the result BEFORE any directory surgery: the
-    // merged plan reads `root`, so both the emptied-partition scan below
-    // and the final write must run against materialized rows, not a
-    // plan that would re-read paths this fold is about to delete; the
-    // checkpoint is released once the write has committed
+    // cut lineage AND pin the result BEFORE the write: the merged plan
+    // reads `root`, which the overwrite replaces, so the write must run
+    // against materialized rows; the checkpoint is released once the
+    // write has committed
     LocalCheckpoint.pinned(merged) { pinned =>
-      // dynamic partition overwrite only replaces partitions PRESENT in
-      // the written data — a partition whose every key was retracted
-      // produces no output rows, so its stale files would silently
-      // survive the write. Delete those directories explicitly (touched
-      // minus surviving, partition-granular metadata again).
-      if (existing && dropsRows) {
-        val survived = pinned.select(partCols.map(col): _*).distinct().collect()
-          .map(_.toSeq).toSet
-        val emptied = touched.filterNot(r => survived.contains(r.toSeq))
-        emptied.foreach { r =>
-          val rel = partCols.zipWithIndex.map { case (c, i) =>
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .getPartitionPathString(c, String.valueOf(r.get(i)))
-          }.mkString("/")
-          fs.delete(new org.apache.hadoop.fs.Path(root, rel), true)
-        }
-      }
-
       pinned.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partCols: _*)

@@ -37,7 +37,8 @@ import graft.operators.Dedup
   * batch against exactly the same PRIOR state (the probe reads only
   * sealed `ingest_batch < id` directories, never its own) and skips the
   * fold, so any crash point converges. Single-writer, the
-  * `foreachBatch` serialization contract.
+  * `foreachBatch` serialization contract; the root keeps the streaming
+  * query that first drained it ([[BatchCommit.requireOwner]]).
   */
 object LineDedupSink {
 
@@ -59,6 +60,7 @@ object LineDedupSink {
                idCol: String, textCol: String, batchId: Long,
                minLineChars: Int = 2, normalize: Boolean = false): DataFrame = {
     require(minLineChars >= 1, s"minLineChars must be >= 1, got $minLineChars")
+    BatchCommit.requireOwner(spark, root)
     val fs = BatchCommit.fsOf(spark, root)
     val applied = BatchCommit.committed(fs, root, batchId)
     if (!applied) BatchCommit.requireReplayable(spark, root, batchId, "line index")

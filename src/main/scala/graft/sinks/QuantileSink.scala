@@ -58,8 +58,7 @@ object QuantileSink {
       .withColumnRenamed("key", "k").withColumnRenamed("value", "cnt")
 
     // bucket counts ADD — the whole mergeability contract
-    IncrementalAgg.fold(spark, partial, root, partCols, batchId, None,
-      dropsRows = false)(
+    IncrementalAgg.fold(spark, partial, root, partCols, batchId, None)(
       _.groupBy((keyCols :+ "k").map(col): _*)
         .agg(sum(col("cnt")).cast("long").as("cnt")))
   }

@@ -2,12 +2,11 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.sinks.{BatchCommit, DedupIndexSink, IncrementalAgg, Layout, LineDedupSink, QuantileSink,
-  SmallFiles, VocabSink}
+  VocabSink}
 
 /** The production curation loop: ONE `foreachBatch` body that feeds
   * every arriving document micro-batch through the three certified
@@ -227,12 +226,9 @@ object CurationLoop {
     * commits, so a crash between them replays convergently (the
     * batch's markers short-circuit, the fold re-runs idempotently).
     *
-    * The sinks key their markers by batch id alone, and a new checkpoint
-    * numbers its batches from 0 again, so every sink would skip them as
-    * already applied. A root therefore keeps its first query: the first
-    * batch records the streaming query's id (the one the checkpoint's
-    * `metadata` keeps across restarts) in `root/_QUERY_ID`, and a batch
-    * of any other query fails before it touches the root.
+    * A root keeps its first streaming query ([[BatchCommit.requireOwner]]
+    * on `root/_QUERY_ID`): a batch of any other query fails before it
+    * touches the root.
     */
   def writer(stream: DataFrame, root: String, checkpoint: String,
              idCol: String, textCol: String,
@@ -250,7 +246,7 @@ object CurationLoop {
                else Trigger.ProcessingTime(interval))
       .foreachBatch { (batch: DataFrame, id: Long) =>
         if (!batch.isEmpty) {
-          requireOwner(batch.sparkSession, root)
+          BatchCommit.requireOwner(batch.sparkSession, root)
           apply(batch.sparkSession, batch, root, idCol, textCol,
             partCols, keyCols, valueCol, id, langCol, lakeFiles, cleanLines)
           if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
@@ -264,19 +260,4 @@ object CurationLoop {
           }
         }
       }
-
-  private def requireOwner(spark: SparkSession, root: String): Unit = {
-    val query = spark.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY)
-    val file = new Path(root, "_QUERY_ID")
-    val fs = BatchCommit.fsOf(spark, root)
-    if (!fs.exists(file)) SmallFiles.write(fs, file, query)
-    else {
-      val owner = SmallFiles.read(fs, file)
-      require(owner == query,
-        s"curation root $root was drained by streaming query $owner, not by " +
-          s"query $query: a new checkpoint restarts its batch ids at 0 and " +
-          s"every sink would skip them as already applied — restart from " +
-          s"the checkpoint of query $owner, or drain into a fresh root")
-    }
-  }
 }

@@ -36,12 +36,6 @@ object ColumnBridge {
     * rank-ordered top-k wants — see `graft.operators.TopK`).
     */
   def collectTopK(child: Column, k: Int, reverse: Boolean = false): Column =
-    column(collectTopKExpr(expression(child), k, reverse))
-
-  /** Expression-level variant for optimizer rules (CollectTopK is
-    * `private[sql]`, so `graft.plans` must route through this package).
-    */
-  def collectTopKExpr(child: Expression, k: Int, reverse: Boolean): Expression =
-    new org.apache.spark.sql.catalyst.expressions.aggregate
-      .CollectTopK(child, k, reverse).toAggregateExpression()
+    column(new org.apache.spark.sql.catalyst.expressions.aggregate
+      .CollectTopK(expression(child), k, reverse).toAggregateExpression())
 }

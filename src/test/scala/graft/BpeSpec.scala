@@ -144,14 +144,13 @@ class BpeSpec extends SparkSpec {
       .select("id", "n_subwords", "n_chars").as[(Long, Long, Long)].collect()
     // with no merges every non-whitespace code point is its own subword
     assert(zero.forall { case (_, subs, chars) => subs === chars })
-    val merges = Corpus.learnBpeCached("bpespec", docs, "text", 6)
+    val merges = Corpus.learnBpe(docs, "text", 6).orderBy("rank").collect()
+      .map(r => (r.getString(1), r.getString(2)))
     val six = Corpus.bpeStats(docs, "doc_id", "text", merges)
       .select("id", "n_subwords").as[(Long, Long)].collect().toMap
     val zeroMap = zero.map(r => r._1 -> r._2).toMap
     assert(six.forall { case (id, n) => n <= zeroMap(id) })
     assert(six.values.sum < zeroMap.values.sum) // the merges actually fired
-    // cached learner returns the identical table without retraining
-    assert(Corpus.learnBpeCached("bpespec", docs, "text", 6) eq merges)
   }
 
   test("q102 tokenizes the fixture under the pinned merge table; ratio >= 1 everywhere") {

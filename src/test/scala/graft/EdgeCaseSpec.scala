@@ -418,7 +418,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("round-16 operators on degenerate inputs") {
-    import graft.operators.{Corpus, Dedup, Eval, Similarity}
+    import graft.operators.{Corpus, Dedup, Eval}
     // selfBleu2: empty corpus and sub-bigram docs emit nothing;
     // a single multi-bigram doc scores 0 (no other holder of any gram)
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
@@ -465,13 +465,6 @@ class EdgeCaseSpec extends SparkSpec {
       .as[(Long, Long, Long, Double)].collect()
     assert(p1.length === 1 && p1(0)._1 === 50L && p1(0)._4 === 5.0)
     assert(p1(0)._3 <= 10L && p1(0)._3 >= 1L) // zero-weight resamples drop
-
-    // knnOutlierScoresBatched: empty probes -> empty result
-    val vecs = (1L to 5L).map(i => (i, Array(1.0, 0.0)))
-      .toDF("vec_id", "embedding")
-    assert(Similarity.knnOutlierScoresBatched(vecs,
-      vecs.filter(col("vec_id") < 0), "vec_id", "embedding", k = 2)
-      .count() === 0)
 
     // fleissKappa: empty ratings -> empty frame
     assert(Eval.fleissKappa(Seq.empty[(String, Long, Int, String)]

@@ -158,39 +158,4 @@ class IncrementalAggSpec extends SparkSpec {
     assert(fold("q2", 0L) === 0)
     assert(IncrementalAgg.read(spark, root).select("n").as[Long].collect().toSeq === Seq(5L))
   }
-
-  test("CDC deltas advance the view to exactly the recompute of the new snapshot") {
-    import graft.operators.Snapshot
-    def snap(rows: (Long, String, Double)*) =
-      rows.toDF("id", "entity", "value")
-    // old snapshot: entity a (2 rows), b (1), c (1)
-    val old = snap((1L, "a", 10.0), (2L, "a", 5.0), (3L, "b", 7.0), (4L, "c", 2.0))
-    // new snapshot: row 2 repriced, row 3 (all of b!) removed, row 5 added
-    val neu = snap((1L, "a", 10.0), (2L, "a", 8.5), (4L, "c", 2.0), (5L, "c", 1.5))
-
-    // view keyed by entity, maintained from the OLD snapshot
-    val viaCdc = java.nio.file.Files.createTempDirectory("cdc1").toString + "/agg"
-    IncrementalAgg.maintain(spark, old.select("entity", "value"), viaCdc,
-      Seq("entity"), Seq("entity"), "value")
-    // ... then advanced by the diff ALONE — no history replay
-    val deltas = Snapshot.toDeltas(
-      Snapshot.changes(old, neu, Seq("id"), Seq("entity", "value"))
-        .withColumn("entity", coalesce(col("new_entity"), col("old_entity"))),
-      Seq("entity"), "value")
-    IncrementalAgg.maintainDeltas(spark, deltas, viaCdc,
-      Seq("entity"), Seq("entity"), "dn", "dv")
-
-    val viaFull = java.nio.file.Files.createTempDirectory("cdc2").toString + "/agg"
-    IncrementalAgg.maintain(spark, neu.select("entity", "value"), viaFull,
-      Seq("entity"), Seq("entity"), "value")
-
-    def state(root: String) = IncrementalAgg.read(spark, root)
-      .select(col("entity"), col("n"), col("sum_v").cast("double"))
-      .as[(String, Long, Double)].collect().sorted.toSeq
-    assert(state(viaCdc) === state(viaFull),
-      "CDC-maintained view diverged from the recompute")
-    // the fully-retracted entity is GONE, not a zero-count tombstone
-    assert(!state(viaCdc).exists(_._1 == "b"))
-    assert(state(viaCdc) === Seq(("a", 2L, 18.5), ("c", 2L, 3.5)))
-  }
 }

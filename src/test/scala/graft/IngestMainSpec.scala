@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import graft.streaming.IngestMain
 
 /** O25 — CLI argument/config validation error paths (the reference
@@ -8,6 +10,8 @@ import graft.streaming.IngestMain
   * crash later inside a stream).
   */
 class IngestMainSpec extends SparkSpec {
+  private val sp = spark
+  import sp.implicits._
 
   test("parseArgs: key=value pairs parse; values may contain '='") {
     val conf = IngestMain.parseArgs(Array(
@@ -56,5 +60,62 @@ class IngestMainSpec extends SparkSpec {
     h.set("fs.s3a.aws.credentials.provider", "com.example.Provider")
     try IngestMain.validateStorageConf(spark, Map("root" -> "s3a://bucket/lake"))
     finally h.unset("fs.s3a.aws.credentials.provider")
+  }
+
+  test("compactLake: compact=true after a multi-batch drain leaves one data file per leaf, rows unchanged") {
+    // three CRON runs over one `dir:` source and checkpoint: each drains
+    // the file that arrived since the last, so each lake leaf holds one
+    // data file per run
+    val src = Files.createTempDirectory("graft_compact_src_").toString
+    def conf(tag: String) = Map("source" -> s"dir:$src",
+      "root" -> Files.createTempDirectory(s"graft_compact_lake_$tag").toString,
+      "checkpoint" -> Files.createTempDirectory(s"graft_compact_ck_$tag").toString)
+    val compacted = conf("on")
+    val plain = conf("off")
+    (0 until 3).foreach { i =>
+      Files.write(Paths.get(s"$src/part$i.json"), java.util.Arrays.asList(
+        s"""{"topic": "cuip_vision_events", "value": "{\\"timestamp\\": ${1704067200000L + i * 60000L}, \\"camera_id\\": \\"cam${i % 2}\\", \\"locations\\": [], \\"hit_counts\\": $i}"}""",
+        s"""{"topic": "cuip_vision_events", "value": "{\\"timestamp\\": ${1704067230000L + i * 60000L}, \\"camera_id\\": \\"cam${(i + 1) % 2}\\", \\"locations\\": [], \\"hit_counts\\": $i}"}""",
+        s"""{"topic": "MLK_AIR_QUALITY", "value": "{\\"timestamp\\": ${1704070800000L + i * 60000L}, \\"nicename\\": \\"downtown\\", \\"pm25\\": $i}"}"""))
+      Seq(compacted, plain).foreach { c =>
+        IngestMain.startQueries(spark, c + ("mode" -> "drain")).foreach(_.awaitTermination())
+      }
+    }
+    // data files per leaf directory of the two lake tables
+    def dataFiles(c: Map[String, String]): Map[String, Seq[String]] = {
+      def walk(d: java.io.File): Seq[java.io.File] =
+        if (d.isDirectory && !d.getName.startsWith("_"))
+          d.listFiles().sortBy(_.getName).toSeq.flatMap(walk)
+        else if (d.isFile && d.getName.endsWith(".parquet")) Seq(d)
+        else Seq.empty
+      Seq("vision", "air_quality").flatMap(t => walk(new java.io.File(s"${c("root")}/$t")))
+        .groupBy(_.getParentFile.getPath.stripPrefix(c("root")))
+        .map { case (leaf, fs) => leaf -> fs.map(_.getName) }
+    }
+    def rows(c: Map[String, String]) = (
+      spark.read.parquet(s"${c("root")}/vision")
+        .select("entity", "timestamp", "hit_counts", "year", "month")
+        .as[(String, Long, Int, Int, Int)].collect().sorted.toSeq,
+      spark.read.parquet(s"${c("root")}/air_quality")
+        .select("entity", "timestamp", "year", "month")
+        .as[(String, Long, Int, Int)].collect().sorted.toSeq)
+    val drained = dataFiles(compacted)
+    assert(drained.keySet === Set("/vision/entity=cam0/year=2024/month=1",
+      "/vision/entity=cam1/year=2024/month=1", "/air_quality/entity=downtown/year=2024/month=1"))
+    assert(drained.values.forall(_.size === 3), drained)
+
+    // only `mode=drain compact=true` compacts: a daemon run and a drain
+    // without compact= leave every file as it was
+    IngestMain.compactLake(spark, compacted + ("mode" -> "daemon") + ("compact" -> "true"))
+    assert(dataFiles(compacted) === drained)
+    IngestMain.compactLake(spark, plain)
+    assert(dataFiles(plain).values.forall(_.size === 3))
+
+    IngestMain.compactLake(spark, compacted + ("mode" -> "drain") + ("compact" -> "true"))
+    val after = dataFiles(compacted)
+    assert(after.keySet === drained.keySet)
+    assert(after.values.forall(_.size === 1), after)
+    assert(rows(compacted) === rows(plain))
+    assert(rows(plain)._1.size === 6 && rows(plain)._2.size === 3)
   }
 }

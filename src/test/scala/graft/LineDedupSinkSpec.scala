@@ -165,4 +165,46 @@ class LineDedupSinkSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("compacted through"))
   }
+
+  test("a second checkpoint draining straight into one line index fails fast and leaves it unchanged") {
+    val root = freshRoot("two-ck")
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    def start(d: Long) = {
+      val input = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[(Long, String)]
+      input.addData(day(d).as[(Long, String)].collect().toSeq)
+      input.toDF().toDF("doc_id", "text").writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          LineDedupSink.maintain(spark, b, root, "doc_id", "text", id); ()
+        }
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("linededup-ck").toString)
+        .start()
+    }
+    def files() = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().sortBy(_.getName).toSeq.flatMap(walk)
+        else Seq(f)
+      walk(new java.io.File(root)).map(f => (f.getPath, f.length,
+        java.util.Arrays.hashCode(java.nio.file.Files.readAllBytes(f.toPath))))
+    }
+    val q1 = start(0L)
+    try q1.processAllAvailable() finally q1.stop()
+    val before = files()
+
+    // the second checkpoint numbers its first batch 0 again: on the
+    // first checkpoint's marker the sink would skip it silently
+    val q2 = start(1L)
+    val failure = try scala.util.Try(q2.processAllAvailable()).failed.toOption
+      finally q2.stop()
+    assert(failure.isDefined, "the second drain must fail, but its batch was " +
+      s"silently skipped: the index holds ${hashes(root).size} hashes, " +
+      s"all of day 0's")
+    val msg = Iterator.iterate(failure.get)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(msg.contains(q1.id.toString) && msg.contains(q2.id.toString),
+      s"the failure must name both query ids, got: $msg")
+    assert(msg.contains("checkpoint"), s"the failure must name the remedy, got: $msg")
+    assert(files() === before, "the failed drain must leave the index unchanged")
+  }
 }

@@ -52,20 +52,6 @@ class MultimodalSpec extends SparkSpec {
     assert(!metas(2).decoded && metas(2).width === -1 && metas(2).mean_luma.isNaN)
   }
 
-  test("resizeImages: real bilinear rescale + PNG re-encode; corrupt rows pass through") {
-    val orig = "not an image".getBytes("UTF-8")
-    val out = Multimodal.resizeImages(imageTable(Seq(
-        1L -> pngBytes(32, 16, 0x4080C0), 2L -> orig)), 8, 4)
-      .collect().sortBy(_.media_id)
-
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(out(0).payload))
-    assert(img.getWidth === 8 && img.getHeight === 4)
-    assert(out(0).width === 8 && out(0).height === 4)
-    // bilinear rescale of a constant image stays that constant color
-    assert((img.getRGB(3, 2) & 0xFFFFFF) === 0x4080C0)
-    assert(out(1).payload === orig) // undecodable: unchanged, not dropped
-  }
-
   test("imageDHash: re-encode and brightness-shift copies collide; corrupt rows flag") {
     // planted duplicate classes: 1/2 share a pattern (2 is brightness-
     // shifted), 3 is the identity-resize RE-ENCODE of 1 (different PNG
@@ -446,58 +432,6 @@ class MultimodalSpec extends SparkSpec {
       metas(1).n_samples === 6L && metas(1).rms === 1000.0)
   }
 
-  test("resampleAudio: real rate conversion — frame count scales, square-wave RMS preserved") {
-    // 40 frames at 8 kHz -> 16 kHz doubles the frame count; nearest-pick
-    // of a ±A square wave stays ±A, so RMS is exactly A after resample
-    val src = Multimodal.renderPcmWav(nSamples = 40, sampleRate = 8000, amplitude = 1200)
-    val junk = "not audio".getBytes("UTF-8")
-    val out = Multimodal.resampleAudio(imageTable(Seq(1L -> src, 2L -> junk)), 16000)
-      .collect().sortBy(_.media_id)
-    val meta = Multimodal.audioMeta(imageTable(Seq(1L -> out(0).payload))).collect().head
-    assert(meta.decoded && meta.sample_rate === 16000 && meta.n_samples === 80L)
-    assert(meta.rms === 1200.0 && meta.peak === 1200)
-    assert(out(0).sample_rate === 16000)
-    assert(out(1).payload === junk) // undecodable: unchanged
-
-    // downsample: 40 @ 8k -> 10 @ 2k, amplitude still exact
-    val down = Multimodal.resampleAudio(imageTable(Seq(1L -> src)), 2000).collect().head
-    val dm = Multimodal.audioMeta(imageTable(Seq(1L -> down.payload))).collect().head
-    assert(dm.decoded && dm.sample_rate === 2000 && dm.n_samples === 10L && dm.peak === 1200)
-  }
-
-  test("resampleAudio: 8-bit input is widened to the 16-bit range (×256), amplitude preserved") {
-    def wav(fmt: javax.sound.sampled.AudioFormat, pcm: Array[Byte], frames: Long) = {
-      val ais = new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(pcm), fmt, frames)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.sound.sampled.AudioSystem.write(
-        ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-      bos.toByteArray
-    }
-    // 8-bit unsigned ±50 square wave = -48 dBFS relative to 8-bit full scale;
-    // widened ×256 the 16-bit output must sit at the SAME relative level: ±12800
-    val fmt8 = new javax.sound.sampled.AudioFormat(8000f, 8, 1, false, false)
-    val pcm8 = Array.tabulate[Byte](40)(i =>
-      if (i % 2 == 0) (128 + 50).toByte else (128 - 50).toByte)
-    val out = Multimodal.resampleAudio(imageTable(Seq(1L -> wav(fmt8, pcm8, 40))), 8000)
-      .collect().head
-    val m = Multimodal.audioMeta(imageTable(Seq(1L -> out.payload))).collect().head
-    assert(m.decoded && m.sample_rate === 8000 && m.n_samples === 40L)
-    assert(m.peak === 12800 && m.rms === 12800.0)
-  }
-
-  test("resampleAudio: multi-million-frame clip upsampled without Int overflow in the length math") {
-    // 1M frames × 44100 = 4.41e10 > 2^31: the old Int-arithmetic nOut
-    // overflowed here. 1M @ 8 kHz -> 44.1 kHz must yield exactly
-    // round(1e6 * 44100 / 8000) = 5_512_500 frames.
-    val src = Multimodal.renderPcmWav(nSamples = 1000000, sampleRate = 8000, amplitude = 700)
-    val up = Multimodal.resampleAudio(imageTable(Seq(1L -> src)), 44100).collect().head
-    val m = Multimodal.audioMeta(imageTable(Seq(1L -> up.payload))).collect().head
-    assert(m.decoded && m.sample_rate === 44100)
-    assert(m.n_samples === 5512500L)
-    assert(m.peak === 700) // nearest-pick of a square wave keeps amplitude
-  }
-
   test("videoMeta: real Y4M parse — dims, fps, frame count, luma stats, corrupt rows flagged") {
     val metas = Multimodal.videoMeta(imageTable(Seq(
         1L -> Multimodal.renderY4m(6, 4, Array(10, 200, 45), fpsNum = 30, fpsDen = 1),
@@ -558,37 +492,6 @@ class MultimodalSpec extends SparkSpec {
     assert(!Multimodal.videoMeta(imageTable(Seq(1L -> overflow))).collect().head.decoded)
   }
 
-  test("resizeVideos: real per-plane nearest-neighbor rescale, re-parseable output") {
-    // hand-build a NON-constant mono stream: 2x2 Y plane per frame
-    val header = "YUV4MPEG2 W2 H2 F25:1 Cmono\n"
-    val frame = Array[Byte](0, 100, -56, -1) // unsigned: 0,100,200,255
-    val payload = (header.getBytes("US-ASCII") ++ "FRAME\n".getBytes("US-ASCII") ++ frame)
-    val junk = "junk".getBytes("UTF-8")
-    val out = Multimodal.resizeVideos(
-        imageTable(Seq(1L -> payload, 2L -> junk)), 4, 4)
-      .collect().sortBy(_.media_id)
-
-    // upscaled stream re-parses at the new dims with the mean preserved
-    // (2x nearest-neighbor replicates each pixel into a quadrant)
-    val meta = Multimodal.videoMeta(imageTable(Seq(1L -> out(0).payload))).collect().head
-    assert(meta.decoded && meta.width === 4 && meta.height === 4 && meta.n_frames === 1)
-    assert(meta.mean_luma === (0.0 + 100 + 200 + 255) / 4)
-    assert(meta.min_luma === 0 && meta.max_luma === 255)
-    // exact quadrant layout: row 0 = 0,0,100,100
-    val y0 = out(0).payload.length - 16
-    assert(out(0).payload.slice(y0, y0 + 4).map(_ & 0xFF).toSeq === Seq(0, 0, 100, 100))
-    assert(out(1).payload === junk) // undecodable: unchanged, not dropped
-
-    // chroma planes rescale at their own subsampled dims and stay valid
-    val c420 = Multimodal.renderY4m(4, 2, Array(64), colorspace = "420jpeg")
-    val up = Multimodal.resizeVideos(imageTable(Seq(1L -> c420)), 8, 6).collect().head
-    val m420 = Multimodal.videoMeta(imageTable(Seq(1L -> up.payload))).collect().head
-    assert(m420.decoded && m420.width === 8 && m420.height === 6 && m420.mean_luma === 64.0)
-    // a 420 stream cannot resize to odd dims — unchanged passthrough
-    val odd = Multimodal.resizeVideos(imageTable(Seq(1L -> c420)), 7, 5).collect().head
-    assert(odd.payload === c420)
-  }
-
   test("asMediaTable: binary payload column with typed metadata") {
     val m = media
     assert(m.schema("payload").dataType.typeName === "binary")
@@ -629,19 +532,6 @@ class MultimodalSpec extends SparkSpec {
     assert(raw(16 >> 2) === 1.0f)
     // empty payload: all-zero vector, no NaNs
     assert(featOf(Array.emptyByteArray).forall(_ === 0.0f))
-  }
-
-  test("sampleFrames: 1->N expansion with aligned offsets") {
-    val frames = Multimodal.sampleFrames(media.limit(5), stride = 64, frameLen = 32).collect()
-    assert(frames.nonEmpty)
-    assert(frames.forall(f => f.offset % 64 === 0 && f.frame.length <= 32))
-    // frame count per media = ceil(len/stride)
-    val byId = frames.groupBy(_.media_id)
-    val lens = Multimodal.extractFeatures(media.limit(5)).collect()
-      .map(f => f.media_id -> f.n_bytes).toMap
-    byId.foreach { case (id, fs) =>
-      assert(fs.length === math.ceil(lens(id).toDouble / 64).toInt)
-    }
   }
 
   test("q106: decode->featurize->top-k pinned arithmetically from planted lumas") {

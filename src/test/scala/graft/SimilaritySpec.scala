@@ -358,33 +358,6 @@ class SimilaritySpec extends SparkSpec {
     assert(got.values.filter(_._1 != 99L).forall(_._4 < top._4))
   }
 
-  test("knnOutlierScoresBatched ≡ single-broadcast scores at any slice count") {
-    def v(axis: Int, jit: Double): Array[Double] = {
-      val a = Array.fill(4)(0.05); a(axis) = 1.0; a(1) += jit; a
-    }
-    val pool = (1L to 40L).map(i => (i, v((i % 3).toInt, 0.01 * i)))
-    val poolDf = pool.toDF("vec_id", "embedding")
-    val whole = Similarity.knnOutlierScores(poolDf, poolDf,
-        "vec_id", "embedding", k = 3)
-      .as[(Long, Long, Double, Double)].collect().toSet
-    // batchSize 7 → 6 hash slices; union must be bit-identical
-    val sliced = Similarity.knnOutlierScoresBatched(poolDf, poolDf,
-        "vec_id", "embedding", k = 3, batchSize = 7)
-      .as[(Long, Long, Double, Double)].collect().toSet
-    assert(sliced === whole)
-    // one slice degenerates to the plain path
-    val one = Similarity.knnOutlierScoresBatched(poolDf, poolDf,
-        "vec_id", "embedding", k = 3, batchSize = 1000)
-      .as[(Long, Long, Double, Double)].collect().toSet
-    assert(one === whole)
-    // a sweep that would need too many corpus passes refuses loudly
-    val ex = intercept[IllegalArgumentException] {
-      Similarity.knnOutlierScoresBatched(poolDf, poolDf,
-        "vec_id", "embedding", k = 3, batchSize = 1, maxSlices = 8)
-    }
-    assert(ex.getMessage.contains("ANN tier"))
-  }
-
   test("rbo: identical rankings score 1, disjoint 0, head agreement outweighs tail") {
     def ranking(q: String, items: Seq[Long]) =
       items.zipWithIndex.map { case (it, i) => (q, it, (i + 1).toLong) }

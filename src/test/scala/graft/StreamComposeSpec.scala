@@ -6,13 +6,14 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.streaming.StatefulOps
-import graft.streaming.StatefulOps.KeyedEvent
+/** One keyed, timestamped event of a test stream. */
+case class KeyedEvent(entity: String, event_id: Long, ts: Timestamp)
 
-/** Stateful streaming specs: replay-dedup keeps first occurrence across
-  * micro-batches; watermarked window agg matches the batch twin.
+/** Streaming specs: Spark's built-in watermarked replay dedup, and
+  * batch operators composed per micro-batch (`foreachBatch` state or a
+  * row-local projection) that match their batch recompute.
   */
-class StatefulOpsSpec extends SparkSpec {
+class StreamComposeSpec extends SparkSpec {
   private val sp = spark
   import sp.implicits._
 
@@ -21,119 +22,8 @@ class StatefulOpsSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  test("dedupByKey drops replayed event_ids across micro-batches") {
-    val input = MemoryStream[KeyedEvent]
-    val deduped = StatefulOps.dedupByKey(input.toDS())
-    val q = deduped.writeStream.format("memory").queryName("dedup_out")
-      .outputMode(OutputMode.Append()).start()
-
-    input.addData(
-      KeyedEvent("camA", 1L, ts("2024-01-01 00:00:00")),
-      KeyedEvent("camA", 2L, ts("2024-01-01 00:00:01")),
-      KeyedEvent("camB", 1L, ts("2024-01-01 00:00:02")))
-    q.processAllAvailable()
-    // replay batch: ids 1,2 again on camA (crash-replay shape) + one new
-    input.addData(
-      KeyedEvent("camA", 1L, ts("2024-01-01 00:00:00")),
-      KeyedEvent("camA", 2L, ts("2024-01-01 00:00:01")),
-      KeyedEvent("camA", 3L, ts("2024-01-01 00:00:03")))
-    q.processAllAvailable()
-    q.stop()
-
-    val out = spark.table("dedup_out").select("entity", "event_id")
-      .as[(String, Long)].collect().sorted.toSeq
-    assert(out === Seq(("camA", 1L), ("camA", 2L), ("camA", 3L), ("camB", 1L)))
-  }
-
-  test("rollingAnomalies: O(1)-state streaming z-score, batch-boundary invariant") {
-    import graft.streaming.StatefulOps.{Reading, Scored}
-    def run(name: String, batches: Seq[Seq[Reading]]): Seq[Scored] = {
-      val input = MemoryStream[Reading]
-      val q = StatefulOps.rollingAnomalies(input.toDS(), threshold = 1.0)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      batches.foreach { b => input.addData(b); q.processAllAvailable() }
-      q.stop()
-      spark.table(name).as[Scored].collect().sortBy(r => (r.entity, r.seq)).toSeq
-    }
-    val rows = Seq(
-      Reading("s1", 1, 10.0), Reading("s1", 2, 10.0), Reading("s1", 3, 10.0),
-      Reading("s1", 4, 50.0),  // scored vs mean 10, std 0 → unscored (zero var)
-      Reading("s1", 5, 10.0),  // now history {10,10,10,50} has spread → scored
-      Reading("s2", 1, 1.0), Reading("s2", 2, 2.0))
-    val oneBatch = run("roll_a", Seq(rows))
-    val perRow = run("roll_b", rows.map(Seq(_)))
-    // batch boundaries cannot change a single score
-    assert(oneBatch === perRow)
-    val s1 = oneBatch.filter(_.entity == "s1")
-    // first two readings lack history (n<2); third sees zero variance
-    assert(s1.take(4).forall(_.zscore.isEmpty))
-    // reading 5 scores against {10,10,10,50}: mean 20, std 20 → z = -0.5
-    assert(s1(4).zscore === Some(-0.5) && !s1(4).is_anomaly)
-    // s2's 2 readings never accumulate n>=2 history before scoring
-    assert(oneBatch.filter(_.entity == "s2").forall(_.zscore.isEmpty))
-  }
-
-  test("intervalJoin: stream-stream join matches only rows inside the time interval") {
-    val clicks = MemoryStream[KeyedEvent]
-    val imps = MemoryStream[KeyedEvent]
-    val joined = StatefulOps.intervalJoin(
-      clicks.toDS().toDF("entity", "click_id", "cts"),
-      imps.toDS().toDF("entity", "imp_id", "its"),
-      keys = Seq("entity"), leftTs = "cts", rightTs = "its",
-      before = "5 MINUTES", after = "1 MINUTES")
-    val q = joined.writeStream.format("memory").queryName("ssj_out")
-      .outputMode(OutputMode.Append()).start()
-
-    clicks.addData(
-      KeyedEvent("camA", 10L, ts("2024-01-01 10:10:00")),
-      KeyedEvent("camB", 11L, ts("2024-01-01 10:10:00")))
-    imps.addData(
-      KeyedEvent("camA", 1L, ts("2024-01-01 10:06:00")), // 4 min before: in
-      KeyedEvent("camA", 2L, ts("2024-01-01 10:04:00")), // 6 min before: out
-      KeyedEvent("camA", 3L, ts("2024-01-01 10:10:30")), // 30 s after: in
-      KeyedEvent("camA", 4L, ts("2024-01-01 10:12:00")), // 2 min after: out
-      KeyedEvent("camB", 5L, ts("2024-01-01 10:09:00")), // other key: in for camB only
-      KeyedEvent("camC", 6L, ts("2024-01-01 10:10:00"))) // key never clicked
-    q.processAllAvailable()
-    q.stop()
-
-    val got = spark.table("ssj_out").select("entity", "click_id", "imp_id")
-      .as[(String, Long, Long)].collect().toSet
-    assert(got === Set(("camA", 10L, 1L), ("camA", 10L, 3L), ("camB", 11L, 5L)))
-
-    // the plan must be the stateful symmetric-hash stream join with a
-    // state watermark on both sides (bounded buffers), not a batch join
-    val p = joined.queryExecution.analyzed.toString
-    assert(p.contains("EventTimeWatermark"), s"watermarks missing from:\n$p")
-  }
-
-  test("sessionCounts: native session windows merge bursts and split on the gap") {
-    val input = MemoryStream[KeyedEvent]
-    val sessions = StatefulOps.sessionCounts(input.toDS().toDF(), gap = "30 minutes")
-    val q = sessions.writeStream.format("memory").queryName("sess_out")
-      .outputMode(OutputMode.Complete()).start()
-
-    input.addData(
-      // camA burst 1: three events within the gap → one session of 3
-      KeyedEvent("camA", 1L, ts("2024-01-01 10:00:00")),
-      KeyedEvent("camA", 2L, ts("2024-01-01 10:10:00")),
-      KeyedEvent("camA", 3L, ts("2024-01-01 10:35:00")),
-      // camA burst 2: 31 min after the last → new session
-      KeyedEvent("camA", 4L, ts("2024-01-01 11:06:00")),
-      // camB: one lone event
-      KeyedEvent("camB", 5L, ts("2024-01-01 10:00:00")))
-    q.processAllAvailable()
-    q.stop()
-
-    val got = spark.table("sess_out")
-      .select(date_format(col("sstart"), "HH:mm").as("s"), col("entity"), col("n"))
-      .as[(String, String, Long)].collect().toSet
-    assert(got === Set(("10:00", "camA", 3L), ("11:06", "camA", 1L), ("10:00", "camB", 1L)))
-  }
-
   test("dropDuplicatesWithinWatermark: built-in replay-dedup with bounded state") {
-    // the built-in twin of dedupByKey: state for an id is only retained
+    // the built-in replay dedup: state for an id is only retained
     // within the watermark horizon, the operational default for replay
     // windows measured in minutes, not the whole-stream Set
     val input = MemoryStream[KeyedEvent]
@@ -156,27 +46,6 @@ class StatefulOpsSpec extends SparkSpec {
     val out = spark.table("ddww_out").select("entity", "event_id")
       .as[(String, Long)].collect().sorted.toSeq
     assert(out === Seq(("camA", 1L), ("camA", 2L), ("camA", 3L)))
-  }
-
-  test("hourlyCounts (streaming, watermarked) matches the batch twin") {
-    val input = MemoryStream[KeyedEvent]
-    val counts = StatefulOps.hourlyCounts(
-      input.toDS().toDF().withColumnRenamed("entity", "event_type"), keyCol = "event_type")
-    val q = counts.writeStream.format("memory").queryName("hourly_out")
-      .outputMode(OutputMode.Complete()).start()
-
-    input.addData(
-      KeyedEvent("click", 1L, ts("2024-01-01 10:05:00")),
-      KeyedEvent("click", 2L, ts("2024-01-01 10:55:00")),
-      KeyedEvent("click", 3L, ts("2024-01-01 11:05:00")),
-      KeyedEvent("view", 4L, ts("2024-01-01 10:30:00")))
-    q.processAllAvailable()
-    q.stop()
-
-    val got = spark.table("hourly_out")
-      .select(date_format(col("wstart"), "HH:mm").as("w"), col("event_type"), col("n"))
-      .as[(String, String, Long)].collect().toSet
-    assert(got === Set(("10:00", "click", 2L), ("11:00", "click", 1L), ("10:00", "view", 1L)))
   }
 
   test("streams compose: per-trigger (source, shingle) sets accumulate to the batch contamination matrix (q110)") {
@@ -232,34 +101,6 @@ class StatefulOpsSpec extends SparkSpec {
     assert(matrix(state) === batchAll, "final state must equal the batch recompute")
     assert(batchAll.exists { case (a, b, n) => a == "srcA" && b == "srcB" && n > 0 })
     assert(batchAll.size === 3, "t2 must create all three source pairs")
-  }
-
-  test("debounceByKey matches the batch debounce across micro-batch boundaries") {
-    val input = MemoryStream[KeyedEvent]
-    val out = StatefulOps.debounceByKey(input.toDS(), gapMs = 5000L)
-    val q = out.writeStream.format("memory").queryName("debounce_out")
-      .outputMode(OutputMode.Append()).start()
-    // burst for e1 split ACROSS two triggers: 0s,3s | 6s,100s — the 6s
-    // row chains off the 3s row held in state, so only 0s and 100s lead
-    val t1 = Seq(
-      KeyedEvent("e1", 1L, ts("2024-01-01 00:00:00")),
-      KeyedEvent("e1", 2L, ts("2024-01-01 00:00:03")),
-      KeyedEvent("e2", 5L, ts("2024-01-01 00:00:01")))
-    val t2 = Seq(
-      KeyedEvent("e1", 3L, ts("2024-01-01 00:00:06")),
-      KeyedEvent("e1", 4L, ts("2024-01-01 00:01:40")))
-    input.addData(t1: _*); q.processAllAvailable()
-    input.addData(t2: _*); q.processAllAvailable()
-    q.stop()
-    val got = spark.table("debounce_out")
-      .select("event_id").as[Long].collect().toSet
-    assert(got === Set(1L, 4L, 5L))
-    // the batch operator on the union agrees event for event
-    val batch = graft.operators.TimeSeries.debounce(
-        (t1 ++ t2).toDF("entity", "event_id", "ts"),
-        Seq("entity"), "ts", "event_id", gapSeconds = 5L)
-      .select("event_id").as[Long].collect().toSet
-    assert(got === batch)
   }
 
   test("streams compose: per-trigger min-merged first-occurrences accumulate to the batch Heaps curve (q131)") {

@@ -200,16 +200,6 @@ class UnigramSpec extends SparkSpec {
     assert(one === many)
   }
 
-  test("learnUnigramDf face carries rank order (cnt desc, piece asc)") {
-    val texts = Seq.fill(10)("aa ab ba")
-    val df = Unigram.learnUnigramDf(texts.toDF("text"), "text", vocabSize = 6,
-      maxPieceLen = 2, iters = 1).collect()
-    val ranks = df.map(_.getLong(0)).toSeq
-    assert(ranks === (1L to df.length))
-    val pairs = df.map(r => (r.getLong(2), r.getString(1))).toSeq
-    assert(pairs === pairs.sortBy { case (n, p) => (-n, p) })
-  }
-
   test("unigramStats: empty and pieceless docs keep exact zero rows") {
     val docs = Seq((1L, "table join"), (2L, ""), (3L, "   ")).toDF("doc_id", "text")
     val got = Unigram.unigramStats(docs, "doc_id", "text",
