@@ -127,9 +127,9 @@ object GraftSession {
   }
 
   /** Root directory for the engine's memoized materialized copies —
-    * prepared near-dup indexes ([[graft.operators.Dedup
-    * .prepareNearDupIndexStored]]) and the [[graft.sinks.Layout]]
-    * z-order / bucketed / Hive-partitioned copies: the
+    * the [[Memo.scratchDir]] copies (prepared near-dup indexes, the
+    * z-order and Hive-partitioned layouts) and the
+    * [[graft.sinks.Layout.bucketedTable]] tables: the
     * `spark.graft.scratchDir` conf when set, else the JVM tmpdir. At
     * cluster scale the default is WRONG — a driver-local tmpdir is
     * invisible to executors reading back the copy — so production

@@ -53,11 +53,8 @@ object SparkEntry {
     * a regeneration lands identical names/sizes inside one mtime tick
     * (round-17 ADVICE).
     */
-  private def scratchKeyHex(tag: String, d: String, table: String): String = {
-    val sig = Tables.fileIdentity(new java.io.File(d, s"$table.parquet"))
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$tag|$d|$sig".getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
+  private def scratchKeyHex(tag: String, d: String, table: String): String =
+    Memo.hex(tag, d, Tables.fileIdentity(new java.io.File(d, s"$table.parquet")))
 
   // ---- reference-surface queries (SURVEY §2.2) --------------------------
 

@@ -5,16 +5,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
-    GraftSession.configure(spark)
-    GraftSession.tuneForSmallFiles(spark)
     new java.io.File(outDir).mkdirs()
     // Optional local-iteration filter: SPARK_GRAFT_ONLY=q127,q128 dumps
     // just those queries (the driver never sets it — full run).

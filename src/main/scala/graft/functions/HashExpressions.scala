@@ -352,7 +352,7 @@ case class CharWindowHashes(child: Expression, width: Int, seed: Long)
     // code-point start offsets (one extra slot holds the end sentinel);
     // UTF-8 start bytes are every byte not matching the 10xxxxxx
     // continuation pattern
-    var starts = new Array[Int](math.max(8, len + 1))
+    val starts = new Array[Int](math.max(8, len + 1))
     var nCp = 0
     var i = 0
     while (i < len) {

@@ -90,29 +90,14 @@ object NaiveBayes {
     NbModel(classes, prior, su)
   }
 
-  // trained models keyed by (application, corpus key, params): driver
-  // metadata (K·dim longs), the train-once / classify-many lifecycle
-  // shared with QualityClassifier.trainCached.
-  private val trainedModels =
-    new java.util.concurrent.ConcurrentHashMap[String, NbModel]()
-
-  /** [[nbTrain]] memoized per (session application, `key`, params) —
-    * the prediction query and its evaluation report share one training
-    * run per session instead of silently retraining.
+  /** [[nbTrain]] built once per (session application, `key`, params)
+    * ([[graft.Memo]]) — the prediction query and its evaluation report
+    * share one training run per session instead of silently retraining.
     */
   def nbTrainCached(key: String, docs: DataFrame, textCol: String,
-                    labelCol: String, dim: Int = 128): NbModel = {
-    val app = docs.sparkSession.sparkContext.applicationId
-    val full = s"$app|$key|$textCol|$labelCol|$dim"
-    val hit = trainedModels.get(full)
-    if (hit != null) hit
-    else {
-      val it = trainedModels.keySet.iterator()
-      while (it.hasNext) { if (!it.next().startsWith(app + "|")) it.remove() }
-      trainedModels.computeIfAbsent(full, _ =>
-        nbTrain(docs, textCol, labelCol, dim))
-    }
-  }
+                    labelCol: String, dim: Int = 128): NbModel =
+    graft.Memo.inApp(docs.sparkSession, "NaiveBayes.nbTrain", key, textCol,
+      labelCol, dim)(nbTrain(docs, textCol, labelCol, dim))
 
   /** Score every document under a trained model — map-side only
     * (per-class plan-literal folds, argmax over K structs). Returns

@@ -178,15 +178,8 @@ object QualityClassifier {
       .orderBy(col("feat"))
   }
 
-  // trained weight vectors keyed by (application, corpus key, params):
-  // driver-side longs (dim ≤ 64k entries), the train-once / score-many
-  // lifecycle shared with Quantize.fitPqCached.
-  // Entries from dead applications drop lazily on the next train.
-  private val trainedWeights =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-
-  /** [[train]] memoized per (session application, `key`, params),
-    * returning the weight vector ready for [[scoreWith]] /
+  /** [[train]] built once per (session application, `key`, params)
+    * ([[graft.Memo]]), returning the weight vector ready for [[scoreWith]] /
     * [[scoreRowWise]]. The whole evaluation family of a model (score,
     * calibration, AUC, uncertainty sampling) shares ONE training run
     * per session instead of each query silently retraining the
@@ -196,19 +189,12 @@ object QualityClassifier {
     */
   def trainCached(key: String, docs: DataFrame, idCol: String, textCol: String,
                   dim: Int = 64, iterations: Int = 3, etaDen: Long = 64L)
-      : Array[Long] = {
-    val app = docs.sparkSession.sparkContext.applicationId
-    val full = s"$app|$key|$idCol|$textCol|$dim|$iterations|$etaDen"
-    val hit = trainedWeights.get(full)
-    if (hit != null) hit
-    else {
-      val it = trainedWeights.keySet.iterator()
-      while (it.hasNext) { if (!it.next().startsWith(app + "|")) it.remove() }
-      trainedWeights.computeIfAbsent(full, _ =>
-        train(docs, idCol, textCol, dim, iterations, etaDen)
-          .orderBy(col("feat")).collect().map(_.getLong(1)))
+      : Array[Long] =
+    graft.Memo.inApp(docs.sparkSession, "QualityClassifier.train", key, idCol,
+        textCol, dim, iterations, etaDen) {
+      train(docs, idCol, textCol, dim, iterations, etaDen)
+        .orderBy(col("feat")).collect().map(_.getLong(1))
     }
-  }
 
   /** Score docs with a trained weight vector: `(id, y, z_units,
     * p_units)` — the inference pass (map-side only; the spec's

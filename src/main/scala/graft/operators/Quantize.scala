@@ -134,32 +134,15 @@ object Quantize {
     books
   }
 
-  // trained codebooks keyed by (application, corpus key, params): plain
-  // driver-side arrays (KB-scale), so unlike [[IvfIndex.fitCached]] there
-  // are no cached DataFrames to evict — entries for dead applications are
-  // dropped lazily whenever a new application trains, bounding growth in
-  // a long-lived multi-session JVM.
-  private val fittedBooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
-
-  /** [[fitPq]] memoized per (session application, `key`, params): the
-    * build-once / probe-many index lifecycle — a bench loop or probe
-    * stream reuses the trained codebooks instead of re-running Lloyd
-    * rounds per call.
+  /** [[fitPq]] built once per (session application, `key`, params)
+    * ([[graft.Memo]]): the build-once / probe-many index lifecycle — a
+    * bench loop or probe stream reuses the trained codebooks instead of
+    * re-running Lloyd rounds per call.
     */
   def fitPqCached(key: String, embeddings: DataFrame, idCol: String, vecCol: String,
-                  m: Int = 8, ksub: Int = 16, iters: Int = 5): Array[Array[Array[Double]]] = {
-    val app = embeddings.sparkSession.sparkContext.applicationId
-    val full = s"$app|$key|$m|$ksub|$iters"
-    val hit = fittedBooks.get(full)
-    if (hit != null) hit
-    else {
-      val it = fittedBooks.keySet.iterator()
-      while (it.hasNext) { if (!it.next().startsWith(app + "|")) it.remove() }
-      fittedBooks.computeIfAbsent(full,
-        _ => fitPq(embeddings, idCol, vecCol, m, ksub, iters))
-    }
-  }
+                  m: Int = 8, ksub: Int = 16, iters: Int = 5): Array[Array[Array[Double]]] =
+    graft.Memo.inApp(embeddings.sparkSession, "Quantize.fitPq", key, idCol, vecCol,
+      m, ksub, iters)(fitPq(embeddings, idCol, vecCol, m, ksub, iters))
 
   /** Encode the corpus against trained codebooks: `(id, codes)` where
     * `codes(s)` is the nearest (L2) centroid of subspace `s` — a pure

@@ -154,8 +154,6 @@ object SuffixArray {
   private[graft] def positionMatches(train: DataFrame, eval: DataFrame,
                                      idCol: String, textCol: String,
                                      maxOrder: Int): (DataFrame, () => Unit) = {
-    val spark = train.sparkSession
-
     def positions(docs: DataFrame, src: Int): DataFrame =
       docs.filter(col(textCol).isNotNull && length(col(textCol)) > 0)
         .select(lit(src).as("__src"), col(idCol).as("doc_id"),

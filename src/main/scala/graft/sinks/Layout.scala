@@ -145,41 +145,29 @@ object Layout {
     least(lit((1L << bits) - 1), scaled)
   }
 
-  /** JVM-lifetime cache of (copy dir, persisted stats manifest) per key —
-    * the lake-layout lifecycle in miniature: cluster once per compaction
-    * pass, serve every subsequent query from the manifest. The manifest
-    * is materialized exactly once; re-deriving it per query would
-    * re-scan the copy and defeat the skipping.
-    */
-  private val copies =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
-
   /** Z-order `df` on `zCols` (domain-normalized via [[scaleToBits]] —
     * per-column maxes come from one metadata-scale aggregate, the same
-    * scan the layout write itself pays) into a cached temp copy, and
-    * return (copy dir, per-file min/max manifest for `zCols`).
+    * scan the layout write itself pays) into a scratch copy, and return
+    * (copy dir, per-file min/max manifest for `zCols`) — the lake-layout
+    * lifecycle in miniature: cluster once per compaction pass, serve
+    * every later query from the manifest. The copy is written once per
+    * JVM per (`cacheKey`, layout parameters, scratch root)
+    * ([[graft.Memo.scratchDir]]); the manifest is derived once per
+    * session application and kept persisted ([[graft.Memo.frame]]), since
+    * re-deriving it per query would re-scan the copy and defeat the
+    * skipping.
     *
     * SINGLE-WRITER contract, like any compaction job: the copy lives at
-    * a deterministic per-key path (md5 of the full key — collision-proof
-    * dir identity, and repeated JVM runs reuse one path instead of
-    * accumulating temp copies), so two processes laying out the same key
-    * concurrently would race on it, exactly as two compactors racing on
-    * one table partition would. Run layout passes one at a time per key.
+    * a deterministic per-key path, so two processes laying out the same
+    * key concurrently would race on it, exactly as two compactors racing
+    * on one table partition would. Run layout passes one at a time per
+    * key.
     */
   def zOrderedWithStats(df: DataFrame, cacheKey: String, zCols: Seq[String],
-                        nFiles: Int, bits: Int = 16): (String, DataFrame) =
-    // the layout parameters are part of the identity: the same string
-    // key with different zCols/nFiles/bits must not serve a stale copy
-    // the resolved scratch root rides in the memo key: relocating
-    // spark.graft.scratchDir must rebuild, not serve the old root
-    copies.computeIfAbsent(
-      s"${graft.GraftSession.scratchRoot(df.sparkSession)}|" +
-        s"$cacheKey|${zCols.mkString(",")}|$nFiles|$bits", fullKey => {
-      val keyHex = java.security.MessageDigest.getInstance("MD5")
-        .digest(fullKey.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      // the overwrite-mode write wipes any stale copy from a prior run
-      val dir = graft.GraftSession.scratchPath(df.sparkSession,
-        s"graft-zorder-$keyHex/lake")
+                        nFiles: Int, bits: Int = 16): (String, DataFrame) = {
+    val spark = df.sparkSession
+    val dir = graft.Memo.scratchDir(spark, "graft-zorder", cacheKey, zCols,
+        nFiles, bits) { dir =>
       val maxRow = df.agg(
         max(col(zCols.head)).cast("long").as("m0"),
         zCols.tail.zipWithIndex.map { case (c, i) =>
@@ -190,10 +178,9 @@ object Layout {
         if (maxRow.isNullAt(i)) 0L else math.max(0L, maxRow.getLong(i)))
       val scaled = zCols.indices.map(i => scaleToBits(col(zCols(i)), maxes(i), bits))
       writeZOrdered(df, scaled, dir, nFiles, bits)
-      val st = fileStats(df.sparkSession, dir, zCols).persist()
-      st.count()
-      (dir, st)
-    })
+    }
+    (dir, graft.Memo.frame(spark, "Layout.fileStats", dir, zCols)(fileStats(spark, dir, zCols)))
+  }
 
   /** Read only the files whose [min, max] band intersects `[lo, hi]` on
     * `column`, then apply the exact predicate. The stats join is
@@ -235,10 +222,8 @@ object Layout {
     require(nBuckets >= 1, s"bucket count must be >= 1, got $nBuckets")
     // scratch root in the identity: a relocated root names a different
     // catalog table, so the existence check cannot serve the old path
-    val fullKey = s"${graft.GraftSession.scratchRoot(df.sparkSession)}|" +
-      s"$cacheKey|$bucketCol|$nBuckets"
-    val keyHex = java.security.MessageDigest.getInstance("MD5")
-      .digest(fullKey.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val keyHex = graft.Memo.hex(graft.GraftSession.scratchRoot(df.sparkSession),
+      cacheKey, bucketCol, nBuckets)
     val name = s"graft_bucketed_$keyHex"
     this.synchronized {
       if (!df.sparkSession.catalog.tableExists(name)) {
@@ -253,25 +238,15 @@ object Layout {
     name
   }
 
-  // Hive-partitioned copies, same once-per-key lifecycle as [[copies]]
-  private val partCopies =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Write `df` once as a Hive-partitioned parquet layout
-    * (`dir/<partCol>=<v>/...`) at a deterministic per-key path and
-    * return the directory — the layout that makes PARTITION pruning
-    * (static and dynamic) available to every later read. Same
-    * single-writer contract as [[zOrderedWithStats]].
+  /** Write `df` as a Hive-partitioned parquet layout
+    * (`dir/<partCol>=<v>/...`) once per JVM per (`cacheKey`, `partCol`,
+    * scratch root) ([[graft.Memo.scratchDir]]) and return the directory
+    * — the layout that makes PARTITION pruning (static and dynamic)
+    * available to every later read. Same single-writer contract as
+    * [[zOrderedWithStats]].
     */
   def partitionedCopy(df: DataFrame, cacheKey: String, partCol: String): String =
-    partCopies.computeIfAbsent(
-      s"${graft.GraftSession.scratchRoot(df.sparkSession)}|" +
-        s"$cacheKey|$partCol", fullKey => {
-      val keyHex = java.security.MessageDigest.getInstance("MD5")
-        .digest(fullKey.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val dir = graft.GraftSession.scratchPath(df.sparkSession,
-        s"graft-hivepart-$keyHex/lake")
+    graft.Memo.scratchDir(df.sparkSession, "graft-hivepart", cacheKey, partCol) { dir =>
       df.write.mode("overwrite").partitionBy(partCol).parquet(dir)
-      dir
-    })
+    }
 }

@@ -121,6 +121,15 @@ class LayoutSpec extends SparkSpec {
     assert(d1 !== d2, "different zCols must not share a cached copy")
   }
 
+  test("zOrderedWithStats: the manifest is persisted again after clearCache") {
+    val (d1, s1) = Layout.zOrderedWithStats(data, "spec-clear", Seq("x", "y"), nFiles = 4)
+    spark.catalog.clearCache()
+    val (d2, s2) = Layout.zOrderedWithStats(data, "spec-clear", Seq("x", "y"), nFiles = 4)
+    assert(d2 === d1 && (s2 eq s1), "a hit must serve the built copy and manifest")
+    assert(s2.storageLevel !== org.apache.spark.storage.StorageLevel.NONE,
+      "a hit after clearCache must persist the manifest again")
+  }
+
   test("spark.graft.scratchDir relocates every memoized copy root") {
     // all four scratch consumers must land under the configured root —
     // and a relocated root must REBUILD, never serve the old root's copy

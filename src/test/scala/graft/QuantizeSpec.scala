@@ -144,6 +144,17 @@ class QuantizeSpec extends SparkSpec {
     assert(c1 eq c2) // same cached instance, no retrain
   }
 
+  test("fitPqCached keys on the vector column: same key, other column, other books") {
+    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .withColumn("flipped", transform(col("embedding"), x => -x))
+    val a = Quantize.fitPqCached("spec-veccol", e, "vec_id", "embedding", 4, 8, 2)
+    val b = Quantize.fitPqCached("spec-veccol", e, "vec_id", "flipped", 4, 8, 2)
+    assert(!(a eq b), "a different vecCol must train its own codebooks")
+    assert(b.map(_.map(_.toSeq).toSeq).toSeq ===
+      Quantize.fitPq(e, "vec_id", "flipped", 4, 8, 2).map(_.map(_.toSeq).toSeq).toSeq)
+    assert(a.map(_.map(_.toSeq).toSeq).toSeq !== b.map(_.map(_.toSeq).toSeq).toSeq)
+  }
+
   test("pqTopK rejects an oversized probe set with a clear error") {
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val books = Quantize.fitPq(e, "vec_id", "embedding", m = 4, ksub = 8, iters = 1)

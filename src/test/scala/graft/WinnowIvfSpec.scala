@@ -102,10 +102,10 @@ class WinnowIvfSpec extends SparkSpec {
     val app = spark.sparkContext.applicationId
     val df = (0 until 40).map(i => (i.toLong, Array.fill(8)(i.toFloat)))
       .toDF("vec_id", "embedding")
-    val before = IvfIndex.cachedEntryCount(app)
+    val before = Memo.entries(app)
     val a = IvfIndex.fitCached("winnowivf-lifecycle", df, "vec_id", "embedding", nlist = 4, iters = 1)
     val b = IvfIndex.fitCached("winnowivf-lifecycle", df, "vec_id", "embedding", nlist = 4, iters = 1)
-    assert(IvfIndex.cachedEntryCount(app) === before + 1)
+    assert(Memo.entries(app) === before + 1)
     assert(a._1 eq b._1, "second fitCached call must reuse the fitted index")
   }
 
