@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   * JCSS 2003 shows ±1 projections preserve the geometry), and unlike
   * `nextGaussian()` (a rejection loop) the construction replays in
   * plain SQL, so an oracle can rebuild every bucket bit-for-bit
-  * (`SparkEntry.q26`'s DuckDB twin does exactly that). Production
+  * (`MediaQueries.q26`'s DuckDB twin does exactly that). Production
   * callers keep the Gaussian default; recall of both modes is pinned
   * in SimilaritySpec.
   */
@@ -101,7 +101,7 @@ case class RandomHyperplaneSignature(child: Expression, bits: Int, seed: Long,
   * re-hashes both sides). Plane generation is IDENTICAL to
   * [[RandomHyperplaneSignature]] for the same seed (and the same
   * `portable` mode — MD5 Rademacher ±1 planes that replay in SQL, the
-  * q26 discipline; `SparkEntry.q147`'s oracle rebuilds the multiprobe
+  * q26 discipline; `MediaQueries.q147`'s oracle rebuilds the multiprobe
   * buckets from them), so a multiprobed side joins directly against
   * single-signature buckets.
   *

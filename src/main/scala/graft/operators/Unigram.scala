@@ -166,7 +166,7 @@ object Unigram {
     * documents. Exact oracle: the q190 SQL replays the packed-integer
     * Viterbi DP per distinct word chunk as an unrolled
     * shortest-path over the pinned vocab literal — see
-    * [[graft.SparkEntry.q190OracleSql]].
+    * [[graft.registry.TextQueries.q190OracleSql]].
     */
   def unigramStats(docs: DataFrame, idCol: String, textCol: String,
                    vocab: Seq[(String, Long)], maxPieceLen: Int): DataFrame = {

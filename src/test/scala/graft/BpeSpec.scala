@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.BpeFunctions
 import graft.operators.Corpus
+import graft.registry.TextQueries
 
 /** BPE training pinned against an independent driver-side reference:
   * same start symbols (code points within whitespace words), same
@@ -154,7 +155,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("q102 tokenizes the fixture under the pinned merge table; ratio >= 1 everywhere") {
-    val st = SparkEntry.q102(spark, sf0001)
+    val st = TextQueries.q102(spark, sf0001)
       .select("id", "n_subwords", "n_chars", "chars_per_subword")
       .as[(Long, Long, Long, Double)].collect()
     assert(st.length === 500)
@@ -177,7 +178,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("q99 runs on the fixture and learns frequent merges first") {
-    val m = SparkEntry.q99(spark, sf0001)
+    val m = TextQueries.q99(spark, sf0001)
       .orderBy("rank").as[(Int, String, String, Long)].collect()
     assert(m.length === 12)
     // counts are non-increasing-ish is NOT guaranteed (later merges can

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Corpus
+import graft.registry.{CorpusQueries, DedupQueries, TextQueries}
 
 /** [[graft.operators.Corpus]] — TF-IDF, stratified sampling, sequence
   * packing, decontamination, reweighting. Formula pins on crafted
@@ -237,7 +238,7 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("decontaminate: benchmark side broadcasts — train corpus is not shuffled for the probe") {
-    val p = SparkEntry.q59(spark, sf0001).queryExecution.executedPlan.toString
+    val p = CorpusQueries.q59(spark, sf0001).queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"), s"probe join should broadcast:\n$p")
   }
 
@@ -390,7 +391,7 @@ class CorpusSpec extends SparkSpec {
       0L -> "x y z x y z x y",      // 6 3-grams, 3 distinct → 0.5
       1L -> "a b c d",              // 2 3-grams, 2 distinct → 0.0
       2L -> "w w"))                 // < 3 tokens → filtered out
-    val got = SparkEntry.q68(spark, sf0001) // shape check only against fixture
+    val got = DedupQueries.q68(spark, sf0001) // shape check only against fixture
     assert(got.columns.toSeq === Seq("doc_id", "rep_score"))
     val rows = d.select(col("doc_id"),
         graft.functions.TextFunctions.tokenCount(col("text")).as("n"),
@@ -898,7 +899,7 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("fertility (q134): subword count is never below the word count") {
-    val rows = SparkEntry.q134(spark, sf0001)
+    val rows = TextQueries.q134(spark, sf0001)
       .select("n_bpe", "n_words", "fertility")
       .as[(Long, Long, Double)].collect()
     assert(rows.nonEmpty)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import graft.registry.{CorpusQueries, DedupQueries}
 
 /** Dedup operator specs — LSH results validated against brute force
   * computed independently on the driver.
@@ -31,7 +32,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhashLshPairs == brute-force jaccard >= 0.7 pairs on sf0.001 documents") {
-    val got = SparkEntry.q22(spark, sf0001)
+    val got = DedupQueries.q22(spark, sf0001)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     val want = brutePairs(7, 10)
     assert(want.nonEmpty, "fixture should contain planted near-dups")
@@ -39,7 +40,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("setSimJoinPrefix == brute-force jaccard >= 0.5 pairs — EXACT, no w.h.p.") {
-    val got = SparkEntry.q129(spark, sf0001)
+    val got = DedupQueries.q129(spark, sf0001)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     val want = brutePairs(1, 2)
     assert(want.nonEmpty, "fixture should contain planted near-dups")
@@ -106,7 +107,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("ngramJaccardBanded == brute force restricted to the id window") {
-    val got = SparkEntry.q21(spark, sf0001)
+    val got = DedupQueries.q21(spark, sf0001)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     val want = brutePairs(1, 2).filter { case (a, b) => b - a <= 20 }
     assert(got === want)
@@ -138,7 +139,7 @@ class DedupSpec extends SparkSpec {
     // ...and every document is represented (its component survivor kept)
     val comps = Dedup.nearDupComponents(
       docs.select(col("doc_id")), "doc_id",
-      SparkEntry.q22(spark, sf0001).select("a_id", "b_id"))
+      DedupQueries.q22(spark, sf0001).select("a_id", "b_id"))
       .as[(Long, Long)].collect().toMap
     assert(comps.values.toSet.subsetOf(sIds))
   }
@@ -403,7 +404,7 @@ class DedupSpec extends SparkSpec {
     val splits = graft.operators.Corpus.splitAssign(
         Tables.documents(spark, sf0001), "doc_id", salt = "graft")
       .select("doc_id", "split").as[(Long, String)].collect().toMap
-    val got = SparkEntry.q109(spark, sf0001)
+    val got = CorpusQueries.q109(spark, sf0001)
       .select("eval_id", "train_id", "jac").as[(Long, Long, Double)].collect()
     assert(got.nonEmpty, "fixture plants cross-split near-dups")
     got.foreach { case (e, t, j) =>
@@ -508,7 +509,7 @@ class DedupSpec extends SparkSpec {
 
   test("incrementalNearDup == brute-force cross jaccard on the fixture split") {
     val dd = Tables.documents(spark, sf0001)
-    val got = SparkEntry.q105(spark, sf0001)
+    val got = DedupQueries.q105(spark, sf0001)
       .select("new_id", "old_id").as[(Long, Long)].collect().toSet
     // brute force: every (src1, non-src1) pair with exact jaccard >= 0.7
     val sh = dd.select(col("doc_id"), col("source"),

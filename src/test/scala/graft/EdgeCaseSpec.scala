@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.{HashFunctions, TextFunctions}
+import graft.registry.EventQueries
 
 /** Edge inputs for the byte-level expressions (multi-byte UTF-8, empty
   * and whitespace-only text, nulls) and Spark-SQL vs DataFrame parity.
@@ -58,7 +59,7 @@ class EdgeCaseSpec extends SparkSpec {
         |GROUP BY 1, 2 ORDER BY 1, 2
         |""".stripMargin)
       .as[(String, String, Double, Long)].collect().toSeq
-    val viaDf = SparkEntry.q10(spark, sf0001)
+    val viaDf = EventQueries.q10(spark, sf0001)
       .select("l_returnflag", "l_linestatus", "sum_qty", "n")
       .orderBy("l_returnflag", "l_linestatus")
       .as[(String, String, Double, Long)].collect().toSeq

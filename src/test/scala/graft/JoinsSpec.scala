@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Joins
+import graft.registry.EventQueries
 
 /** Salted skew-join specs: result-equivalence with the plain join,
   * fact-preservation on left joins, rejection of dim-emitting types.
@@ -180,7 +181,7 @@ class JoinsSpec extends SparkSpec {
   }
 
   test("rangeJoin plans an equi-join on buckets, never a nested loop") {
-    val p = SparkEntry.q42(spark, sf0001).queryExecution.executedPlan.toString
+    val p = EventQueries.q42(spark, sf0001).queryExecution.executedPlan.toString
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"range join degenerated to a nested loop:\n$p")
     assert(p.contains("__bucket"), s"expected the bucket equi-join key:\n$p")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.sinks.Layout
+import graft.registry.SinkQueries
 
 /** [[graft.sinks.Layout]] — Z-order clustering + file-level min/max
   * skipping. The claims that matter at 100 TB are asserted directly:
@@ -101,7 +102,7 @@ class LayoutSpec extends SparkSpec {
     // sf0.01: the band is ~3 % of the user domain — at sf0.001 the
     // 15-user domain is too coarse for quadrant-aligned skipping
     val sf001 = "/root/testdata/sf0.01"
-    val (df, read, total) = SparkEntry.q75Pruned(spark, sf001)
+    val (df, read, total) = SinkQueries.q75Pruned(spark, sf001)
     val expect = graft.Tables.events(spark, sf001)
       .filter(col("user_id") >= 4 && col("user_id") <= 7).count()
     assert(df.count() === expect, "pruned scan must equal the full filter")

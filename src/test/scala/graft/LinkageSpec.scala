@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions.col
+import graft.registry.EventQueries
 
 import graft.operators.Linkage
 
@@ -174,7 +175,7 @@ class LinkageSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      SparkEntry.q223(spark, sf0001) // construction only — no action
+      EventQueries.q223(spark, sf0001) // construction only — no action
       Thread.sleep(2000)             // listener bus drains asynchronously
       assert(jobs.get >= 1,
         "constructing q223 must run the eager pair-volume gate; zero " +

@@ -1,6 +1,7 @@
 package graft
 
 import graft.multimodal.Multimodal
+import graft.registry.MediaQueries
 
 /** Multimodal plumbing specs: binary payload schema, partition-wise batch
   * kernels, 1→N frame sampling, and the REAL codec paths — images
@@ -566,7 +567,7 @@ class MultimodalSpec extends SparkSpec {
       (id, s) <- top
     } yield (p, id, BigDecimal(s).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble))
       .toSet
-    val got = SparkEntry.q106(spark, sf0001)
+    val got = MediaQueries.q106(spark, sf0001)
       .select("probe_id", "vec_id", "sim_r").as[(Long, Long, Double)].collect().toSet
     assert(got === want)
   }
@@ -609,7 +610,7 @@ class MultimodalSpec extends SparkSpec {
     val want = byDoc.map { case (id, fs) =>
       id -> ((fs.size.toLong, fs.count(f => docsPerFrame(f) >= 2).toLong))
     }.toMap
-    val got = SparkEntry.q139(spark, sf0001)
+    val got = MediaQueries.q139(spark, sf0001)
       .select("doc_id", "n_frames", "n_shared")
       .as[(Long, Long, Long)].collect()
     assert(got.length === want.size)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Pca
+import graft.registry.MediaQueries
 
 /** PCA pinned by its spectral invariants: the aggregator's covariance
   * equals a driver-side brute force; Jacobi solves a known matrix;
@@ -75,10 +76,10 @@ class PcaSpec extends SparkSpec {
   }
 
   test("q95/q96 execute on the fixture with the declared shapes") {
-    val cov = SparkEntry.q95(spark, sf0001)
+    val cov = MediaQueries.q95(spark, sf0001)
     assert(cov.count() === 64L * 65 / 2)
     assert(cov.columns.toSeq === Seq("i", "j", "cov"))
-    val pr = SparkEntry.q96(spark, sf0001)
+    val pr = MediaQueries.q96(spark, sf0001)
     assert(pr.columns.toSeq ===
       Seq("vec_id", "pc1_units", "pc2_units", "pc1_r", "pc2_r"))
     assert(pr.count() > 0)

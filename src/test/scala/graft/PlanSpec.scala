@@ -1,5 +1,7 @@
 package graft
 
+import graft.registry._
+
 /** Physical-plan quality gates: the properties that make queries scale
   * are asserted, not assumed — filters reach the parquet scan, scans
   * prune columns, dimension joins broadcast, heap top-k aggregates
@@ -11,43 +13,43 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
 
   test("q02: validity filters are pushed to the parquet scan") {
-    val p = plan(SparkEntry.q02(spark, sf0001))
+    val p = plan(EventQueries.q02(spark, sf0001))
     assert(p.contains("PushedFilters: [IsNotNull(ts)"), s"no pushed filter in:\n$p")
   }
 
   test("q01: scan prunes to the projected columns only") {
-    val p = plan(SparkEntry.q01(spark, sf0001))
+    val p = plan(EventQueries.q01(spark, sf0001))
     assert(p.contains("ReadSchema: struct<event_id:bigint,user_id:bigint,event_type:string,value:double>"),
       s"scan did not prune columns:\n$p")
   }
 
   test("q09: all dimension joins are broadcast (lineitem streams, no shuffle join)") {
-    val p = plan(SparkEntry.q09(spark, sf0001))
+    val p = plan(EventQueries.q09(spark, sf0001))
     assert(p.contains("BroadcastHashJoin"), s"no broadcast join:\n$p")
     assert(!p.contains("SortMergeJoin"), s"unexpected sort-merge join:\n$p")
   }
 
   test("q10: aggregation is partial before the exchange") {
-    val p = plan(SparkEntry.q10(spark, sf0001))
+    val p = plan(EventQueries.q10(spark, sf0001))
     assert(p.contains("HashAggregate"), p)
     assert(p.contains("partial"), s"no partial aggregation:\n$p")
   }
 
   test("q32: heap top-k has partial merge and no Window operator") {
-    val p = plan(SparkEntry.q32(spark, sf0001))
+    val p = plan(EventQueries.q32(spark, sf0001))
     assert(p.contains("partial_collect_top_k"), s"no map-side top-k:\n$p")
     assert(!p.contains("Window"), s"unexpected window sort:\n$p")
   }
 
   test("q14: probe side is broadcast, corpus never shuffles for scoring") {
-    val p = plan(SparkEntry.q14(spark, sf0001))
+    val p = plan(MediaQueries.q14(spark, sf0001))
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       s"probe not broadcast:\n$p")
   }
 
   test("whole-stage codegen covers the scan->filter->project pipeline (q02)") {
     // codegen'd operators print with a `*(stageId)` prefix
-    val p = plan(SparkEntry.q02(spark, sf0001))
+    val p = plan(EventQueries.q02(spark, sf0001))
     assert(p.contains("*(1) Project") && p.contains("*(1) Filter"),
       s"no codegen span:\n$p")
   }
@@ -81,7 +83,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q40: salted join runs as a sort-merge join on (key, salt), never broadcast") {
-    val p = plan(SparkEntry.q40(spark, sf0001))
+    val p = plan(EventQueries.q40(spark, sf0001))
     assert(p.contains("SortMergeJoin"), s"salt demo must exercise the shuffle join:\n$p")
     assert(!p.contains("BroadcastHashJoin"), s"broadcast defeats the salting:\n$p")
     assert(p.contains("__salt"), s"join keys must include the salt column:\n$p")
@@ -134,14 +136,14 @@ class PlanSpec extends SparkSpec {
     // built-in .pivot() plans two Exchanges (pre-agg + pivotfirst) and,
     // without explicit values, a distinct values-discovery scan;
     // Reshape.pivotWide must plan as one plain codegen'd aggregate
-    val p = plan(SparkEntry.q45(spark, sf0001))
+    val p = plan(EventQueries.q45(spark, sf0001))
     assert("Exchange".r.findAllMatchIn(p).size === 1, s"pivot should shuffle once:\n$p")
     assert(p.contains("partial"), s"pivot aggregate not partial:\n$p")
     assert(!p.contains("pivotfirst"), s"fell back to the two-phase pivot plan:\n$p")
   }
 
   test("q46: cube expands grouping sets before the partial aggregate — one shuffle total") {
-    val p = plan(SparkEntry.q46(spark, sf0001))
+    val p = plan(EventQueries.q46(spark, sf0001))
     assert(p.contains("Expand"), s"cube should plan an Expand:\n$p")
     assert("Exchange".r.findAllMatchIn(p).size === 1,
       s"cube should need exactly one shuffle, not a union of group-bys:\n$p")
@@ -150,14 +152,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q47: cumulative frame is a running window — one shuffle, one sort, no self-join") {
-    val p = plan(SparkEntry.q47(spark, sf0001))
+    val p = plan(EventQueries.q47(spark, sf0001))
     assert(p.contains("Window"), s"expected a Window operator:\n$p")
     assert("Exchange".r.findAllMatchIn(p).size === 1, s"running total should shuffle once:\n$p")
     assert(!p.contains("Join"), s"cumulative sum must not plan a self-join:\n$p")
   }
 
   test("q48: semi join broadcasts the filtered side — customer scan never shuffles for the join") {
-    val p = plan(SparkEntry.q48(spark, sf0001))
+    val p = plan(EventQueries.q48(spark, sf0001))
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"),
       s"expected a broadcast left-semi join:\n$p")
     assert(p.contains("PushedFilters: [IsNotNull(o_totalprice), GreaterThan(o_totalprice,200000.0)"),
@@ -165,53 +167,53 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q49: RANGE frame plans one shuffle + one sort, no self-join") {
-    val p = plan(SparkEntry.q49(spark, sf0001))
+    val p = plan(EventQueries.q49(spark, sf0001))
     assert(p.contains("Window"), s"expected a Window operator:\n$p")
     assert("Exchange".r.findAllMatchIn(p).size === 1, s"moving window should shuffle once:\n$p")
     assert(!p.contains("Join"), s"range frame must not plan a self-join:\n$p")
   }
 
   test("q51: grouping sets expand by exactly the requested set count, one shuffle") {
-    val p = plan(SparkEntry.q51(spark, sf0001))
+    val p = plan(EventQueries.q51(spark, sf0001))
     assert(p.contains("Expand"), s"grouping sets should plan an Expand:\n$p")
     assert("Exchange".r.findAllMatchIn(p).size === 1, s"should shuffle once:\n$p")
   }
 
   test("q53: term frequency partial-aggregates the exploded tokens before its shuffle") {
-    val p = plan(SparkEntry.q53(spark, sf0001))
+    val p = plan(TextQueries.q53(spark, sf0001))
     assert(p.contains("Generate explode"), s"tokens should explode map-side:\n$p")
     assert(p.contains("partial_count"), s"no map-side combine before the shuffle:\n$p")
   }
 
   test("q54: the candidate pair join broadcasts — no corpus shuffle for the metric kernel") {
-    val p = plan(SparkEntry.q54(spark, sf0001))
+    val p = plan(DedupQueries.q54(spark, sf0001))
     assert(p.contains("BroadcastHashJoin"), s"pair join should broadcast at this scale:\n$p")
     assert(p.contains("levenshtein"), s"metric kernel missing from plan:\n$p")
   }
 
   test("q56: tfidf joins broadcast and the top-k cut is TakeOrdered, never a global sort") {
-    val p = plan(SparkEntry.q56(spark, sf0001))
+    val p = plan(TextQueries.q56(spark, sf0001))
     assert(p.contains("TakeOrderedAndProject"), s"top-k should be TakeOrdered:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"tf⋈df should broadcast at this scale:\n$p")
     assert(!p.contains("SortMergeJoin"), s"unexpected sort-merge join:\n$p")
   }
 
   test("q57: both sampling windows share ONE exchange on the strata columns") {
-    val p = plan(SparkEntry.q57(spark, sf0001))
+    val p = plan(EventQueries.q57(spark, sf0001))
     assert("Exchange".r.findAllMatchIn(p).size === 1,
       s"rank and total windows must share one shuffle:\n$p")
     assert("Window".r.findAllMatchIn(p).size === 2, s"expected two windows:\n$p")
   }
 
   test("q63/q64/q65: split-assign, chunking, pseudonymization are pure map-side (zero Exchange)") {
-    for (q <- Seq(SparkEntry.q63 _, SparkEntry.q64 _, SparkEntry.q65 _)) {
+    for (q <- Seq(CorpusQueries.q63 _, CorpusQueries.q64 _, EventQueries.q65 _)) {
       val p = plan(q(spark, sf0001))
       assert(!p.contains("Exchange"), s"map-side operator planned a shuffle:\n$p")
     }
   }
 
   test("q58: the data-scale cumsum window partitions by bucket; only the bucket-offset window is global") {
-    val p = plan(SparkEntry.q58(spark, sf0001))
+    val p = plan(CorpusQueries.q58(spark, sf0001))
     // exactly one single-partition window (over the tiny bucket list);
     // the per-row window must carry the __bucket partition spec
     // plan text: partitioned = `Window [fns], [partSpec], [orderSpec]`
@@ -226,7 +228,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q61/q77/q78: no partition-less window over the data — rank is two-level") {
-    for (q <- Seq(SparkEntry.q61 _, SparkEntry.q77 _, SparkEntry.q78 _)) {
+    for (q <- Seq(EventQueries.q61 _, EventQueries.q77 _, CorpusQueries.q78 _)) {
       val p = plan(q(spark, sf0001))
       assert(!p.contains("ntile"), s"ntile window survived into the plan:\n$p")
       val windows = "Window \\[[^\\n]*".r.findAllIn(p).toSeq
@@ -272,7 +274,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q80: the three stacked funnel windows share one hash partitioning") {
-    val p = plan(SparkEntry.q80(spark, sf0001))
+    val p = plan(EventQueries.q80(spark, sf0001))
     // exactly one per-user exchange feeds all three stage windows; the
     // only other hash exchange is the multi-count-distinct aggregate's
     val userExchanges = "Exchange hashpartitioning\\(user_id".r.findAllMatchIn(p).size
@@ -290,7 +292,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q82: bigram extraction is map-side — no Window, no per-doc shuffle") {
-    val p = plan(SparkEntry.q82(spark, sf0001))
+    val p = plan(TextQueries.q82(spark, sf0001))
     // unlike bigramCounts' lead() pairing, surprisal extracts bigrams by
     // zipping shifted array slices in the scan's own projection: zero
     // Window operators and no doc_id exchange anywhere in the plan
@@ -305,14 +307,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q83: the diff is one full-outer equi-join — no nested loop, no cartesian") {
-    val p = plan(SparkEntry.q83(spark, sf0001))
+    val p = plan(EventQueries.q83(spark, sf0001))
     assert(p.contains("FullOuter"), s"expected a full outer join:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"diff must stay an equi-join:\n$p")
   }
 
   test("q84: clamp is a projection behind one cutoff aggregate — no Window") {
-    val p = plan(SparkEntry.q84(spark, sf0001))
+    val p = plan(EventQueries.q84(spark, sf0001))
     assert(!p.contains("Window"), s"winsorize must not rank rows:\n$p")
     assert(p.contains("PushedFilters: [IsNotNull(value)"),
       s"null filter not pushed to the scan:\n$p")
@@ -321,7 +323,7 @@ class PlanSpec extends SparkSpec {
   test("q92: encoding is a pure map-side projection — zero exchanges, no join") {
     // the min/max stats fold into expression literals at build time; the
     // returned plan must be scan -> generate -> project with no shuffle
-    val p = plan(SparkEntry.q92(spark, sf0001))
+    val p = plan(MediaQueries.q92(spark, sf0001))
     assert(!p.contains("Exchange"), s"quantization encode must not shuffle:\n$p")
     assert(!p.contains("Join"), s"encode must not join the stats table:\n$p")
   }
@@ -331,7 +333,7 @@ class PlanSpec extends SparkSpec {
     // RepetitionMetrics, so the plan must be scan -> project, with no
     // shuffle anywhere (the legacy 9x gram explosion is the regression
     // this gate exists to catch)
-    val p = plan(SparkEntry.q193(spark, sf0001))
+    val p = plan(DedupQueries.q193(spark, sf0001))
     assert(!p.contains("Exchange"), s"repetition metrics must not shuffle:\n$p")
     assert(!p.contains("Join") && !p.contains("Window"),
       s"repetition metrics must stay a pure projection:\n$p")
@@ -340,7 +342,7 @@ class PlanSpec extends SparkSpec {
   test("q207: span-corruption plan is row-local — zero exchanges, no join, no window") {
     // anchor selection, span-length draws, and the interval-merge fold
     // all run inside the document row: the plan must be scan -> project
-    val p = plan(SparkEntry.q207(spark, sf0001))
+    val p = plan(CorpusQueries.q207(spark, sf0001))
     assert(!p.contains("Exchange"), s"span-corruption plan must not shuffle:\n$p")
     assert(!p.contains("Join") && !p.contains("Window"),
       s"span-corruption plan must stay a pure projection:\n$p")
@@ -380,7 +382,7 @@ class PlanSpec extends SparkSpec {
     // <= numResamples mean rows against the broadcast q_pct list —
     // a metadata-scale BroadcastNestedLoopJoin is the expected shape
     // there (the ddBoundCheck pattern), but nothing may Cartesian
-    val p = plan(SparkEntry.q209(spark, sf0001))
+    val p = plan(StatsQueries.q209(spark, sf0001))
     assert(!p.contains("CartesianProduct"),
       s"bootstrap must not cross-join:\n$p")
     assert("HashJoin [^\n]*__idx".r.findFirstIn(p).isDefined ||
@@ -393,7 +395,7 @@ class PlanSpec extends SparkSpec {
     // joins allowed are the metadata-scale percentile inequality join
     // against the broadcast q_pct list; the weight chain must stay
     // inside WholeStageCodegen (an array HOF here once cost 4×)
-    val p = plan(SparkEntry.q212(spark, sf0001))
+    val p = plan(StatsQueries.q212(spark, sf0001))
     assert(!p.contains("CartesianProduct"),
       s"pooled bootstrap must not cross-join:\n$p")
     assert(!"HashJoin [^\n]*__idx".r.findFirstIn(p).isDefined &&
@@ -412,14 +414,14 @@ class PlanSpec extends SparkSpec {
     // q214: the per-bigram top-2 must be the bounded-heap aggregate —
     // a g-partitioned rank window would sort a stopword bigram's whole
     // count group in one task
-    val p214 = plan(SparkEntry.q214(spark, sf0001))
+    val p214 = plan(TextQueries.q214(spark, sf0001))
     assert(!p214.contains("Window"),
       s"selfBleu2 must not window over bigram keys:\n$p214")
     assert(!p214.contains("CartesianProduct"),
       s"selfBleu2 must not cross-join:\n$p214")
     // q215: pair evidence is equi-joins + the heap top-k — nothing
     // cartesian, no window
-    val p215 = plan(SparkEntry.q215(spark, sf0001))
+    val p215 = plan(DedupQueries.q215(spark, sf0001))
     assert(!p215.contains("CartesianProduct") && !p215.contains("Window"),
       s"pairEvidence must stay equi-join + heap:\n$p215")
     // q215's one corpus-scale exchange (the global df collapse) must
@@ -436,7 +438,7 @@ class PlanSpec extends SparkSpec {
   test("q238/q239: line-tier exchanges carry hashes; q239's text join broadcasts") {
     // q238: the corpus-scale collapse keys on the xxhash64 line hash —
     // the line STRING must never be a corpus exchange key
-    val p238 = plan(SparkEntry.q238(spark, sf0001))
+    val p238 = plan(DedupQueries.q238(spark, sf0001))
     assert(p238.contains("hashpartitioning(__h"),
       s"line-df collapse must key on the line hash:\n$p238")
     assert(!p238.contains("hashpartitioning(__line"),
@@ -445,7 +447,7 @@ class PlanSpec extends SparkSpec {
       s"line dedup is aggregates + equi-joins, no window:\n$p238")
     // q239: k winner rows broadcast back for the text re-extract; the
     // only window runs AFTER the limit (≤ k metadata rows)
-    val p239 = plan(SparkEntry.q239(spark, sf0001))
+    val p239 = plan(DedupQueries.q239(spark, sf0001))
     assert(p239.contains("BroadcastHashJoin"),
       s"the k-winner text join must broadcast:\n$p239")
     assert(!p239.contains("SortMergeJoin") && !p239.contains("CartesianProduct"),
@@ -511,7 +513,7 @@ class PlanSpec extends SparkSpec {
       s"small probes must not pay the spread shuffle:\n$small")
     // q217: window texts build row-locally; the majority is a struct
     // min_by — the plan is scan → generate → two hash aggregates
-    val p217 = plan(SparkEntry.q217(spark, sf0001))
+    val p217 = plan(TextQueries.q217(spark, sf0001))
     assert(!p217.contains("Window") && !p217.contains("Join"),
       s"codeSwitchAudit must be generate + aggregates only:\n$p217")
     assert(p217.contains("Generate explode"),
@@ -520,30 +522,30 @@ class PlanSpec extends SparkSpec {
 
   test("q218-q223: the round-16 stats/linkage ops keep windows off data-scale keys") {
     // q218: kappa is aggregates + key-local joins — no window at all
-    val p218 = plan(SparkEntry.q218(spark, sf0001))
+    val p218 = plan(StatsQueries.q218(spark, sf0001))
     assert(!p218.contains("Window") && !p218.contains("CartesianProduct"),
       s"fleissKappa must stay aggregate + equi-join:\n$p218")
     // q219: two aggregation levels, nothing else
-    val p219 = plan(SparkEntry.q219(spark, sf0001))
+    val p219 = plan(SinkQueries.q219(spark, sf0001))
     assert(!p219.contains("Window") && !p219.contains("Join"),
       s"goodTuringMass must be generate + aggregates only:\n$p219")
     assert(p219.contains("Generate explode"), s"expected token explode:\n$p219")
     // q220: the frequency-rank window must partition BY THE QUASI
     // CLASS — a global window here would sort every class in one task
-    val p220 = plan(SparkEntry.q220(spark, sf0001))
+    val p220 = plan(EventQueries.q220(spark, sf0001))
     val w220 = "Window \\[[^\\n]*".r.findAllIn(p220).toSeq
     assert(w220.nonEmpty && w220.forall(_.contains("c_nationkey")),
       s"the rank window must partition by the quasi class:\n$p220")
     // q222: the q212 one-pass shape — per-doc sign explode, partial
     // agg, group-grain join; no window, no cartesian
-    val p222 = plan(SparkEntry.q222(spark, sf0001))
+    val p222 = plan(StatsQueries.q222(spark, sf0001))
     assert(!p222.contains("Window") && !p222.contains("CartesianProduct"),
       s"permutation totals must fold map-side:\n$p222")
     assert(p222.contains("Generate explode"),
       s"expected the per-doc permutation explode:\n$p222")
     // q223: the u-stats row rides a broadcast; candidate pairs come
     // from the block-key EQUI-join, never a cartesian
-    val p223 = plan(SparkEntry.q223(spark, sf0001))
+    val p223 = plan(EventQueries.q223(spark, sf0001))
     assert(p223.contains("BroadcastNestedLoopJoin") ||
       p223.contains("BroadcastExchange"),
       s"the scalar stats row must broadcast:\n$p223")
@@ -551,32 +553,32 @@ class PlanSpec extends SparkSpec {
       s"pair generation must be the block equi-join:\n$p223")
     // q224/q225: the mcnemar shape at any k — one collapse, no join,
     // no window
-    Seq("q224" -> plan(SparkEntry.q224(spark, sf0001)),
-        "q225" -> plan(SparkEntry.q225(spark, sf0001))).foreach {
+    Seq("q224" -> plan(StatsQueries.q224(spark, sf0001)),
+        "q225" -> plan(StatsQueries.q225(spark, sf0001))).foreach {
       case (n, p) =>
         assert(!p.contains("Window") && !p.contains("Join"),
           s"$n must be one aggregation pass:\n$p")
     }
     // q226: the cumulative pair window must partition by the group —
     // it runs over distinct metric values, never a global sort
-    val p226 = plan(SparkEntry.q226(spark, sf0001))
+    val p226 = plan(StatsQueries.q226(spark, sf0001))
     val w226 = "Window \\[[^\\n]*".r.findAllIn(p226).toSeq
     assert(w226.nonEmpty && w226.forall(_.contains("grp")),
       s"cliffsDelta windows must partition by group:\n$p226")
     // q227: the fleiss skeleton — aggregates + key-local joins only
-    val p227 = plan(SparkEntry.q227(spark, sf0001))
+    val p227 = plan(StatsQueries.q227(spark, sf0001))
     assert(!p227.contains("Window") && !p227.contains("CartesianProduct"),
       s"krippendorffAlpha must stay aggregate + equi-join:\n$p227")
     // q228: centroids are collected literals — the scoring pass joins
     // NOTHING and windows nothing (scan → project → one aggregate)
-    val p228 = plan(SparkEntry.q228(spark, sf0001))
+    val p228 = plan(MediaQueries.q228(spark, sf0001))
     assert(!p228.contains("Join") && !p228.contains("Window"),
       s"silhouette scoring must be a zero-join projection:\n$p228")
     // q229/q230/q237: every rank window partitions by the group
     // (bounded value support), never a global sort; no cartesian
-    Seq("q229" -> plan(SparkEntry.q229(spark, sf0001)),
-        "q230" -> plan(SparkEntry.q230(spark, sf0001)),
-        "q237" -> plan(SparkEntry.q237(spark, sf0001))).foreach {
+    Seq("q229" -> plan(StatsQueries.q229(spark, sf0001)),
+        "q230" -> plan(StatsQueries.q230(spark, sf0001)),
+        "q237" -> plan(StatsQueries.q237(spark, sf0001))).foreach {
       case (n, p) =>
         val ws = "Window \\[[^\\n]*".r.findAllIn(p).toSeq
         assert(ws.nonEmpty && ws.forall(_.contains("grp")),
@@ -619,7 +621,7 @@ class PlanSpec extends SparkSpec {
     // both sides are bucketed catalog tables keyed on orderkey: the
     // sort-merge join must consume the bucket partitioning directly —
     // the ONLY exchange in the plan is the 5-row priority aggregate
-    val p = plan(SparkEntry.q198(spark, sf0001))
+    val p = plan(SinkQueries.q198(spark, sf0001))
     assert(p.contains("SortMergeJoin"), s"expected a sort-merge join:\n$p")
     assert(!p.contains("BroadcastHashJoin"),
       s"the merge hint must pin the scale-relevant strategy:\n$p")
@@ -635,7 +637,7 @@ class PlanSpec extends SparkSpec {
     // the filter is on the bucket column, so the scan must select only
     // the (at most 3) buckets the keys hash into — file-level skipping
     // before any row-group stat is consulted
-    val q = SparkEntry.q199(spark, sf0001)
+    val q = SinkQueries.q199(spark, sf0001)
     val p = q.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     val m = "SelectedBucketsCount: (\\d+) out of 16".r.findFirstMatchIn(p)
@@ -645,7 +647,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q93: substrings materialize only after the hash-count join") {
-    val p = plan(SparkEntry.q93(spark, sf0001))
+    val p = plan(DedupQueries.q93(spark, sf0001))
     // stage A shuffles 8-byte hashes (count per hash); raw window strings
     // appear only above the join with the heavy-hash set
     // plans print top-down: the substr projection must sit ABOVE (= run
@@ -663,13 +665,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q98: the fact scan carries a dynamic partition-pruning filter") {
-    val p = plan(SparkEntry.q98(spark, sf0001))
+    val p = plan(SinkQueries.q98(spark, sf0001))
     assert(p.toLowerCase.contains("dynamicpruning"),
       s"fact scan must be dynamically partition-pruned by the dim side:\n$p")
   }
 
   test("q110: source-overlap joins 8-byte hashes with partial aggregation, no cartesian") {
-    val p = plan(SparkEntry.q110(spark, sf0001))
+    val p = plan(CorpusQueries.q110(spark, sf0001))
     assert(!p.contains("CartesianProduct"), s"no cartesian:\n$p")
     assert(p.contains("partial"), s"pair count must partial-aggregate:\n$p")
     // the join carries only (source, hash) — document text never reaches it
@@ -678,7 +680,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q103: the apply plan is exchange-free — one hashed-set pass over the scan") {
-    val p = plan(SparkEntry.q103(spark, sf0001))
+    val p = plan(TextQueries.q103(spark, sf0001))
     // the df aggregate ran during construction (stop-set collect); the
     // RETURNED plan must be pure map-side: scan -> expression -> project
     assert(p.contains("string_array_except_set"), s"expected the hashed-set expression:\n$p")
@@ -687,7 +689,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q107: top-k cut is TakeOrdered (heaps), never a global sort of the vocabulary") {
-    val p = plan(SparkEntry.q107(spark, sf0001))
+    val p = plan(TextQueries.q107(spark, sf0001))
     assert(p.contains("TakeOrderedAndProject"), s"expected a heap-based cut:\n$p")
     // the only Sort allowed is the k-row window's; a pre-cut global
     // Sort of the counts table would materialize the whole vocabulary
@@ -698,7 +700,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q105: corpus side never shuffles — broadcasts only, one candidate exchange") {
-    val p = plan(SparkEntry.q105(spark, sf0001))
+    val p = plan(DedupQueries.q105(spark, sf0001))
     assert(!p.contains("SortMergeJoin"), s"corpus must not shuffle for a join:\n$p")
     assert(!p.contains("CartesianProduct"), s"no cartesian:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"batch side must broadcast:\n$p")
@@ -708,7 +710,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q104: bloom probe filters map-side, BELOW the confirm join's exchange") {
-    val p = plan(SparkEntry.q104(spark, sf0001))
+    val p = plan(CorpusQueries.q104(spark, sf0001))
     val probeIdx = p.indexOf("long_bloom_might_contain")
     assert(probeIdx >= 0, s"expected the codegen'd bloom probe:\n$p")
     // plans print top-down: the probe must sit below (= run before)
@@ -722,7 +724,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q111: probe reads the STORED index (parquet scan, text column never read) and keeps q105's shape") {
-    val p = plan(SparkEntry.q111(spark, sf0001))
+    val p = plan(DedupQueries.q111(spark, sf0001))
     // the index side must be a parquet scan of the stored state — and a
     // pruned one: signatures and shingles, never document text
     assert(p.contains("graft-neardupidx"), s"expected a stored-index scan:\n$p")
@@ -738,7 +740,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q112: PII redaction is a pure map-side projection — zero exchanges, no UDF") {
-    val p = plan(SparkEntry.q112(spark, sf0001))
+    val p = plan(TextQueries.q112(spark, sf0001))
     assert(!p.contains("Exchange"), s"redaction must not shuffle:\n$p")
     assert(!p.contains("BatchEvalPython") && !p.contains("SQLUDF"),
       s"redaction must stay in codegen'd builtins:\n$p")
@@ -763,7 +765,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q114: the whole sessionization is ONE keyed exchange, never partition-less") {
-    val p = plan(SparkEntry.q114(spark, sf0001))
+    val p = plan(EventQueries.q114(spark, sf0001))
     // the lag + prefix-sum frames share one Window over user_id, and the
     // (user, session) aggregate reuses that partitioning (user_id alone
     // already clusters every group) — zero additional shuffles
@@ -776,7 +778,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q115: inverted index is ONE aggregation — heap postings, no window, no sort") {
-    val p = plan(SparkEntry.q115(spark, sf0001))
+    val p = plan(TextQueries.q115(spark, sf0001))
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(exchanges == 1, s"df + postings must share one exchange, got $exchanges:\n$p")
     assert(p.contains("partial_collect_top_k"),
@@ -786,7 +788,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q117: totals broadcast back; the per-source cut is a bounded heap") {
-    val p = plan(SparkEntry.q117(spark, sf0001))
+    val p = plan(TextQueries.q117(spark, sf0001))
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
       s"vocab/source totals must broadcast:\n$p")
     assert(!p.contains("SortMergeJoin"), s"no shuffle join for metadata-scale totals:\n$p")
@@ -795,7 +797,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q119: budget cut is two-level — data windows partition by bucket, offsets broadcast") {
-    val p = plan(SparkEntry.q119(spark, sf0001))
+    val p = plan(CorpusQueries.q119(spark, sf0001))
     assert(p.contains("BroadcastHashJoin"),
       s"bucket offsets must broadcast back, not shuffle-join:\n$p")
     assert(!p.contains("SortMergeJoin"), s"no shuffle join:\n$p")
@@ -811,7 +813,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q120: sample cut is TakeOrdered (per-partition heaps), rank only after the cut") {
-    val p = plan(SparkEntry.q120(spark, sf0001))
+    val p = plan(CorpusQueries.q120(spark, sf0001))
     assert(p.contains("TakeOrderedAndProject"), s"expected a heap-based cut:\n$p")
     // the rank window may sort its k rows; the corpus itself must not
     // globally sort before the cut
@@ -824,7 +826,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q123: the OOV probe is exchange-free — the vocabulary rides as a hashed set") {
-    val p = plan(SparkEntry.q123(spark, sf0001))
+    val p = plan(TextQueries.q123(spark, sf0001))
     assert(!p.contains("Exchange"), s"OOV apply must not shuffle:\n$p")
     assert(!p.contains("Join"), s"hashed-set membership must not join:\n$p")
     assert(p.contains("string_array_except_set"),
@@ -832,19 +834,19 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q125: chunking is a pure map-side explode — zero exchanges") {
-    val p = plan(SparkEntry.q125(spark, sf0001))
+    val p = plan(CorpusQueries.q125(spark, sf0001))
     assert(!p.contains("Exchange"), s"chunking must not shuffle:\n$p")
     assert(p.contains("Generate explode"), s"expected the start-sequence explode:\n$p")
   }
 
   test("q126: mixture sampling is a pure map-side filter — zero exchanges, no join") {
-    val p = plan(SparkEntry.q126(spark, sf0001))
+    val p = plan(CorpusQueries.q126(spark, sf0001))
     assert(!p.contains("Exchange"), s"sampling must not shuffle:\n$p")
     assert(!p.contains("Join"), s"the rate table must ride as a literal, not a join:\n$p")
   }
 
   test("q118: blocklist flag is map-side — one aggregate exchange, no join") {
-    val p = plan(SparkEntry.q118(spark, sf0001))
+    val p = plan(CorpusQueries.q118(spark, sf0001))
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(exchanges == 1, s"expected only the source-agg exchange, got $exchanges:\n$p")
     assert(!p.contains("Join"), s"hashed-set membership must not join:\n$p")
@@ -853,7 +855,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q137: the curriculum's data window is keyed by source; the index broadcasts back") {
-    val p = plan(SparkEntry.q137(spark, sf0001))
+    val p = plan(CorpusQueries.q137(spark, sf0001))
     assert(p.contains("windowspecdefinition(source"),
       s"per-source rank must partition by the stratum key:\n$p")
     assert(p.contains("BroadcastExchange"),
@@ -861,14 +863,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q138: the sweep window runs over the metadata grid, keyed by source") {
-    val p = plan(SparkEntry.q138(spark, sf0001))
+    val p = plan(CorpusQueries.q138(spark, sf0001))
     assert(p.contains("windowspecdefinition(source"),
       s"cumulative keep counts must partition by source:\n$p")
     assert(!p.contains("CartesianProduct"), p)
   }
 
   test("q147: ANN mining candidates come from an EQUI-join on the LSH bucket") {
-    val p = plan(SparkEntry.q147(spark, sf0001))
+    val p = plan(MediaQueries.q147(spark, sf0001))
     // the candidate join keys on the bucket struct — an equi strategy
     // Spark may size-pick (broadcast here, SMJ at scale); what must
     // NEVER appear is a nested-loop/cartesian pairing of the sides
@@ -878,7 +880,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q150: learned-quality inference is a pure projection — zero exchanges") {
-    val p = plan(SparkEntry.q150(spark, sf0001))
+    val p = plan(StatsQueries.q150(spark, sf0001))
     // training runs eagerly inside q150; the PLAN under test is the
     // scoring pass, which folds tokens against the weight-map literal
     // row-locally — nothing shuffles at any corpus size
@@ -887,7 +889,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q149: DSIR weigh is a row-local projection; cut plans TakeOrdered, no join") {
-    val p = plan(SparkEntry.q149(spark, sf0001))
+    val p = plan(CorpusQueries.q149(spark, sf0001))
     // the frozen score map is a plan literal folded per row: no join,
     // no aggregation, NO exchange reaches the doc-scale side — the cut
     // is per-partition heaps and the rank window runs over the k cut
@@ -900,7 +902,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q129: exact set-sim join plans equi-joins only — no cartesian, no nested loop") {
-    val p = plan(SparkEntry.q129(spark, sf0001))
+    val p = plan(DedupQueries.q129(spark, sf0001))
     assert(!p.contains("CartesianProduct"), s"cartesian in exact join:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin"), s"nested-loop in exact join:\n$p")
     // the per-doc reorder is array_sort over (df, h) structs, never a
@@ -909,14 +911,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q156: containment join plans equi-joins only — prefix probe vs full postings") {
-    val p = plan(SparkEntry.q156(spark, sf0001))
+    val p = plan(DedupQueries.q156(spark, sf0001))
     assert(!p.contains("CartesianProduct"), s"cartesian in containment join:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin"), s"nested-loop in containment join:\n$p")
     assert(!p.contains("Sort [df"), s"global sort of the shingle stream:\n$p")
   }
 
   test("q158: W1 windows are keyed by group and run over collapsed distinct values") {
-    val p = plan(SparkEntry.q158(spark, sf0001))
+    val p = plan(StatsQueries.q158(spark, sf0001))
     assert(!p.contains("windowspecdefinition()"),
       s"partition-less window in the W1 plan:\n$p")
     // the (group, value) collapse aggregates BEFORE any window
@@ -927,7 +929,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q154: BM25 prunes the token stream map-side and cuts with the heap, not a window") {
-    val p = plan(SparkEntry.q154(spark, sf0001))
+    val p = plan(TextQueries.q154(spark, sf0001))
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"),
       s"query-vocab prune must broadcast-semi-join:\n$p")
     assert(!p.contains("Window"), s"top-k must be the heap:\n$p")
@@ -935,14 +937,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q160: decay score is map-side + one keyed aggregate — no window, no sort") {
-    val p = plan(SparkEntry.q160(spark, sf0001))
+    val p = plan(EventQueries.q160(spark, sf0001))
     assert(!p.contains("Window"), s"no window in the decay plan:\n$p")
     val exchanges = "Exchange".r.findAllIn(p).length
     assert(exchanges <= 3, s"decay plan should be ~1 keyed exchange (+AQE reads), got $exchanges:\n$p")
   }
 
   test("q178: TPC-H Q3 pushes both date filters; top-10 is TakeOrdered") {
-    val p = plan(SparkEntry.q178(spark, sf0001))
+    val p = plan(EventQueries.q178(spark, sf0001))
     assert(p.contains("PushedFilters: [IsNotNull(o_orderdate)") ||
       p.contains("LessThan(o_orderdate"), s"order-date filter not pushed:\n$p")
     assert(p.contains("TakeOrderedAndProject"),
@@ -950,14 +952,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q179: TPC-H Q5's bounded dimension chain broadcasts — lineitem never sort-merge-joins a dim") {
-    val p = plan(SparkEntry.q179(spark, sf0001))
+    val p = plan(EventQueries.q179(spark, sf0001))
     val bhj = "BroadcastHashJoin".r.findAllIn(p).length
     assert(bhj >= 3, s"supplier/nation-region chains must broadcast, got $bhj:\n$p")
     assert(!p.contains("CartesianProduct"), p)
   }
 
   test("q180: TPC-H Q18's qualifying keys enter as a semi-join; top-100 is TakeOrdered") {
-    val p = plan(SparkEntry.q180(spark, sf0001))
+    val p = plan(EventQueries.q180(spark, sf0001))
     assert(p.contains("LeftSemi"), s"HAVING>n keys must re-enter as a semi-join:\n$p")
     assert(p.contains("TakeOrderedAndProject"),
       s"top-100 must be TakeOrdered, not a global sort:\n$p")
@@ -965,7 +967,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q181: TPC-H Q21 shape — semi + anti self-joins, supplier dim broadcasts") {
-    val p = plan(SparkEntry.q181(spark, sf0001))
+    val p = plan(EventQueries.q181(spark, sf0001))
     assert(p.contains("LeftSemi"), s"other-supplier EXISTS must be a semi-join:\n$p")
     assert(p.contains("LeftAnti"), s"no-other-late NOT EXISTS must be an anti-join:\n$p")
     assert(p.contains("BroadcastHashJoin"),
@@ -974,10 +976,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q182/q186: no cartesian products; q186's top-20 is TakeOrdered over one keyed aggregate") {
-    val p182 = plan(SparkEntry.q182(spark, sf0001))
+    val p182 = plan(MediaQueries.q182(spark, sf0001))
     assert(!p182.contains("CartesianProduct"),
       s"banded hamming join must never go quadratic:\n$p182")
-    val p186 = plan(SparkEntry.q186(spark, sf0001))
+    val p186 = plan(EventQueries.q186(spark, sf0001))
     assert(!p186.contains("CartesianProduct"), p186)
     assert(p186.contains("TakeOrderedAndProject"),
       s"top-20 must be TakeOrdered, not a global sort:\n$p186")
@@ -996,7 +998,7 @@ class PlanSpec extends SparkSpec {
     // exchanges are inspectable as concrete nodes with input schemas.
     // Set AFTER construction: Tables.* re-enable it via
     // GraftSession.configure, and physical planning is lazy.
-    val df = SparkEntry.q187(spark, sf0001)
+    val df = MediaQueries.q187(spark, sf0001)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val p = plan(df)
@@ -1068,7 +1070,7 @@ class PlanSpec extends SparkSpec {
     // the truncation (no corpus re-derivation can survive it), and
     // check the per-iteration cache discipline on the UNCUT plan
     // (checkpointEvery = 0), where the iteration structure is visible
-    val p = plan(SparkEntry.q133(spark, sf0001))
+    val p = plan(TextQueries.q133(spark, sf0001))
     assert(!p.contains("FileScan"),
       s"the checkpointed registry plan must not re-derive the corpus:\n$p")
     assert(!p.contains("CartesianProduct"), p)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
+import graft.registry.MediaQueries
 
 /** Similarity search specs: exact top-k against a driver-side brute
   * force; LSH ANN recall on planted clusters.
@@ -27,7 +28,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("topKCosine matches driver-side brute force") {
-    val got = SparkEntry.q14(spark, sf0001)
+    val got = MediaQueries.q14(spark, sf0001)
       .orderBy("rk").select("vec_id").as[Long].collect().toSeq
     assert(got === bruteTopK(0L, 10))
   }
@@ -92,7 +93,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("cosineNearDupBanded respects the id window and threshold") {
-    val out = SparkEntry.q23(spark, sf0001)
+    val out = MediaQueries.q23(spark, sf0001)
       .select("a_id", "b_id", "sim_r").as[(Long, Long, Double)].collect()
     assert(out.nonEmpty)
     assert(out.forall { case (a, b, s) => b > a && b - a <= 100 && s >= 0.3 - 1e-9 })

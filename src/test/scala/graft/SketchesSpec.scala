@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Sketches
+import graft.registry.StatsQueries
 
 /** Count-Min guarantees pinned: never underestimates, merge of partial
   * sketches equals the one-pass sketch, and the overestimate stays
@@ -69,7 +70,7 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("q100 output contract: top-20 by exact count, est alongside") {
-    val df = SparkEntry.q100(spark, sf0001)
+    val df = StatsQueries.q100(spark, sf0001)
     assert(df.columns.toSeq === Seq("key", "exact", "est"))
     val rows = df.as[(Long, Long, Long)].collect()
     val nUsers = Tables.events(spark, sf0001)
@@ -249,7 +250,7 @@ class SketchesSpec extends SparkSpec {
     val bound = exact + (3.0 * na * nb / width).toLong
     assert(est <= bound, s"estimate $est above bound $bound (exact $exact)")
     // and it is the q140 surface
-    val q = SparkEntry.q140(spark, sf0001).head().getLong(0)
+    val q = StatsQueries.q140(spark, sf0001).head().getLong(0)
     assert(q === est)
   }
 

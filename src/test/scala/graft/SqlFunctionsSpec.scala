@@ -1,5 +1,7 @@
 package graft
 
+import graft.registry.MediaQueries
+
 /** SQL-surface spec: custom expressions registered in the function
   * registry are callable from `spark.sql`.
   */
@@ -78,7 +80,7 @@ class SqlFunctionsSpec extends SparkSpec {
     assert(top.length === 3)
     assert(top.forall(r => !r.isNullAt(1)))
     // agrees with the DataFrame-API operator
-    val apiTop = SparkEntry.q14(spark, sf0001)
+    val apiTop = MediaQueries.q14(spark, sf0001)
       .orderBy("rk").select("vec_id").limit(3)
       .collect().map(_.getLong(0)).toSeq
     assert(top.map(_.getLong(0)).toSeq === apiTop)
