@@ -58,9 +58,7 @@ private[functions] object BpeKernel {
   }
 
   def words(text: String): Array[String] =
-    // the explicit class RE2's \s matches (no \x0B) — consistent with
-    // TextFunctions.whitespaceClass and HashedWordNgrams
-    text.split("[ \t\n\f\r]+").filter(_.nonEmpty)
+    TextFunctions.whitespacePattern.split(text).filter(_.nonEmpty)
 }
 
 /** `bpe_symbols(text)` — the corpus tokenized under a FIXED merge list:

@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
+import TextFunctions.isWhitespace
+
 /** Document-sketch expressions for the north-star dedup operators
   * (MinHash+LSH, SimHash). Single-pass over the token/shingle array:
   * one xxHash64 per element, then cheap per-function mixing — versus the
@@ -103,9 +105,9 @@ case class HashedWordNgrams(child: Expression, n: Int, seed: Long)
     var i = 0
     while (i < len) {
       // skip whitespace
-      while (i < len && isWs(org.apache.spark.unsafe.Platform.getByte(base, off + i))) i += 1
+      while (i < len && isWhitespace(org.apache.spark.unsafe.Platform.getByte(base, off + i))) i += 1
       val start = i
-      while (i < len && !isWs(org.apache.spark.unsafe.Platform.getByte(base, off + i))) i += 1
+      while (i < len && !isWhitespace(org.apache.spark.unsafe.Platform.getByte(base, off + i))) i += 1
       if (i > start) {
         if (nTok == tokenHashes.length)
           tokenHashes = java.util.Arrays.copyOf(tokenHashes, nTok * 2)
@@ -136,11 +138,6 @@ case class HashedWordNgrams(child: Expression, n: Int, seed: Long)
     }
     new GenericArrayData(java.util.Arrays.copyOf(grams, out))
   }
-
-  // matches TextFunctions.whitespaceClass / RE2 \s exactly — NOT Java \s,
-  // which additionally includes vertical tab (\x0B)
-  @inline private def isWs(b: Byte): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f'
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -179,9 +176,9 @@ case class WordShingles(child: Expression, n: Int)
     var nTok = 0
     var i = 0
     while (i < len) {
-      while (i < len && isWs(org.apache.spark.unsafe.Platform.getByte(base, off + i))) i += 1
+      while (i < len && isWhitespace(org.apache.spark.unsafe.Platform.getByte(base, off + i))) i += 1
       val start = i
-      while (i < len && !isWs(org.apache.spark.unsafe.Platform.getByte(base, off + i))) i += 1
+      while (i < len && !isWhitespace(org.apache.spark.unsafe.Platform.getByte(base, off + i))) i += 1
       if (i > start) {
         if (nTok == starts.length) {
           starts = java.util.Arrays.copyOf(starts, nTok * 2)
@@ -214,9 +211,6 @@ case class WordShingles(child: Expression, n: Int)
     }
     new GenericArrayData(seen.toArray.asInstanceOf[Array[AnyRef]])
   }
-
-  @inline private def isWs(b: Byte): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f'
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -37,11 +37,10 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 private[graft] object RepetitionKernel {
 
-  private val wsSplit = java.util.regex.Pattern.compile("[ \\t\\n\\f\\r]+")
   private val nlSplit = java.util.regex.Pattern.compile("\n")
 
   def tokens(text: String): Array[String] =
-    wsSplit.split(text, -1).filter(_.nonEmpty)
+    TextFunctions.whitespacePattern.split(text, -1).filter(_.nonEmpty)
 
   def lines(text: String): Array[String] =
     nlSplit.split(text, -1).filter(_.nonEmpty)

@@ -20,6 +20,13 @@ object TextFunctions {
     */
   val whitespaceClass = "[ \\t\\n\\f\\r]+"
 
+  /** [[whitespaceClass]] compiled once, for the kernels that split Scala strings. */
+  private[functions] val whitespacePattern = java.util.regex.Pattern.compile(whitespaceClass)
+
+  /** Whether one byte is in [[whitespaceClass]], for the kernels that scan UTF-8 bytes. */
+  @inline private[functions] def isWhitespace(b: Byte): Boolean =
+    b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f'
+
   def tokens(text: Column): Column =
     filter(split(trim(text), whitespaceClass), t => t =!= "")
 

@@ -2,22 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** Shared machinery for pairwise float/double-vector expressions over
-  * `ArrayType(FloatType|DoubleType)` columns (the `embeddings.embedding`
-  * fixture column is `array<float>`).
-  *
-  * North-star similarity-search scalar kernel (SURVEY.md §2.2 Q14). All
-  * arithmetic is performed in Double after widening, so results are
-  * deterministic and match an oracle that casts to DOUBLE[] first.
-  */
-/** SQL-registration type guard shared by every vector kernel: a
+/** SQL-registration type guard shared by every vector kernel (a
   * non-array child must fail analysis with a TypeCheckFailure, not
-  * blow up execution with a ClassCastException.
+  * blow up execution with a ClassCastException), and the element
+  * widening the centroid kernels share.
   */
 private[functions] object VectorTypeCheck {
   import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -28,9 +20,30 @@ private[functions] object VectorTypeCheck {
       case other => TypeCheckResult.TypeCheckFailure(
         s"$name needs array<float> or array<double>, got ${other.catalogString}")
     }
+
+  /** The row's vector widened to Double once, so a kernel's
+    * per-centroid loops read a primitive array instead of calling
+    * `getFloat`/`getDouble` and branching on the element type per
+    * element. The values, and so every sum over them, are unchanged.
+    */
+  def widened(a: ArrayData, isFloat: Boolean): Array[Double] =
+    if (!isFloat) a.toDoubleArray()
+    else {
+      val out = new Array[Double](a.numElements()); var i = 0
+      while (i < out.length) { out(i) = a.getFloat(i).toDouble; i += 1 }
+      out
+    }
 }
 
-abstract class VectorBinaryExpression extends BinaryExpression {
+/** Shared machinery for pairwise float/double-vector expressions over
+  * `ArrayType(FloatType|DoubleType)` columns (the `embeddings.embedding`
+  * fixture column is `array<float>`).
+  *
+  * North-star similarity-search scalar kernel (SURVEY.md §2.2 Q14). All
+  * arithmetic is performed in Double after widening, so results are
+  * deterministic and match an oracle that casts to DOUBLE[] first.
+  */
+abstract class VectorBinaryExpression extends BinaryExpression with KernelCodegen {
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
@@ -62,20 +75,6 @@ case class DotProduct(left: Expression, right: Expression) extends VectorBinaryE
       s
     }
   }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val s = ctx.freshName("s")
-      val la = if (leftIsFloat) s"(double)$a.getFloat($i)" else s"$a.getDouble($i)"
-      val rb = if (rightIsFloat) s"(double)$b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |if ($a.numElements() != $b.numElements()) { ${ev.isNull} = true; }
-         |else {
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $a.numElements(); $i++) { $s += $la * $rb; }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -98,26 +97,6 @@ case class CosineSimilarity(left: Expression, right: Expression) extends VectorB
       else dot / (math.sqrt(na) * math.sqrt(nb))
     }
   }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val la = if (leftIsFloat) s"(double)$a.getFloat($i)" else s"$a.getDouble($i)"
-      val rb = if (rightIsFloat) s"(double)$b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |if ($a.numElements() != $b.numElements()) { ${ev.isNull} = true; }
-         |else {
-         |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |  for (int $i = 0; $i < $a.numElements(); $i++) {
-         |    double $x = $la; double $y = $rb;
-         |    $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |  }
-         |  if ($na == 0.0 || $nb == 0.0) { ${ev.isNull} = true; }
-         |  else { ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb)); }
-         |}
-       """.stripMargin
-    })
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -125,7 +104,7 @@ case class CosineSimilarity(left: Expression, right: Expression) extends VectorB
 /** `nearest_centroid(vec)` — index of the cosine-nearest centroid from a
   * plan-constant centroid matrix (the IVF coarse-quantizer assignment,
   * [[graft.operators.IvfIndex]]). The matrix is nlist × dim metadata
-  * carried in the expression (codegen references it as an object), so
+  * carried in the expression, so
   * cell assignment is a pure map-side projection: no crossJoin against a
   * centroid table, no groupBy-by-vector shuffle.
   *
@@ -139,7 +118,7 @@ case class CosineSimilarity(left: Expression, right: Expression) extends VectorB
   * policy as [[PqAdcScore]]'s corrupted-input handling).
   */
 case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with KernelCodegen {
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
 
@@ -158,52 +137,22 @@ case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
   }
 
   override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val isF = childIsFloat
-    val n = a.numElements()
+    val x = VectorTypeCheck.widened(v.asInstanceOf[ArrayData], childIsFloat)
+    val n = x.length
+    val norms = invNorms
     var best = 0; var bestScore = Double.NegativeInfinity
     var cell = 0
     while (cell < centroids.length) {
       val c = centroids(cell)
-      if (c.length == n && invNorms(cell) > 0.0) {
+      if (c.length == n && norms(cell) > 0.0) {
         var dot = 0.0; var i = 0
-        while (i < n) {
-          dot += (if (isF) a.getFloat(i).toDouble else a.getDouble(i)) * c(i)
-          i += 1
-        }
-        val s = dot * invNorms(cell)
+        while (i < n) { dot += x(i) * c(i); i += 1 }
+        val s = dot * norms(cell)
         if (s > bestScore) { bestScore = s; best = cell }
       }
       cell += 1
     }
     if (bestScore == Double.NegativeInfinity) null else best
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    val norms = ctx.addReferenceObj("invNorms", invNorms, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val cell = ctx.freshName("cell")
-      val i = ctx.freshName("i"); val dot = ctx.freshName("dot")
-      val s = ctx.freshName("s"); val best = ctx.freshName("best")
-      val bestScore = ctx.freshName("bestScore"); val c = ctx.freshName("c")
-      val get = if (childIsFloat) s"(double)$a.getFloat($i)" else s"$a.getDouble($i)"
-      s"""
-         |int $n = $a.numElements();
-         |int $best = 0; double $bestScore = Double.NEGATIVE_INFINITY;
-         |for (int $cell = 0; $cell < $cents.length; $cell++) {
-         |  double[] $c = $cents[$cell];
-         |  if ($c.length == $n && $norms[$cell] > 0.0) {
-         |    double $dot = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) { $dot += $get * $c[$i]; }
-         |    double $s = $dot * $norms[$cell];
-         |    if ($s > $bestScore) { $bestScore = $s; $best = $cell; }
-         |  }
-         |}
-         |if ($bestScore == Double.NEGATIVE_INFINITY) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $best; }
-       """.stripMargin
-    })
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -222,7 +171,7 @@ case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
   * policy as [[PqAdcScore]]).
   */
 case class NearestCentroidL2(child: Expression, centroids: Array[Array[Double]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with KernelCodegen {
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
 
@@ -240,52 +189,22 @@ case class NearestCentroidL2(child: Expression, centroids: Array[Array[Double]])
   }
 
   override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val isF = childIsFloat
-    val n = a.numElements()
+    val x = VectorTypeCheck.widened(v.asInstanceOf[ArrayData], childIsFloat)
+    val n = x.length
+    val norms = sqNorms
     var best = 0; var bestScore = Double.PositiveInfinity
     var cell = 0
     while (cell < centroids.length) {
       val c = centroids(cell)
       if (c.length == n) {
         var dot = 0.0; var i = 0
-        while (i < n) {
-          dot += (if (isF) a.getFloat(i).toDouble else a.getDouble(i)) * c(i)
-          i += 1
-        }
-        val s = sqNorms(cell) - 2.0 * dot
+        while (i < n) { dot += x(i) * c(i); i += 1 }
+        val s = norms(cell) - 2.0 * dot
         if (s < bestScore) { bestScore = s; best = cell }
       }
       cell += 1
     }
     if (bestScore == Double.PositiveInfinity) null else best
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    val norms = ctx.addReferenceObj("sqNorms", sqNorms, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val cell = ctx.freshName("cell")
-      val i = ctx.freshName("i"); val dot = ctx.freshName("dot")
-      val s = ctx.freshName("s"); val best = ctx.freshName("best")
-      val bestScore = ctx.freshName("bestScore"); val c = ctx.freshName("c")
-      val get = if (childIsFloat) s"(double)$a.getFloat($i)" else s"$a.getDouble($i)"
-      s"""
-         |int $n = $a.numElements();
-         |int $best = 0; double $bestScore = Double.POSITIVE_INFINITY;
-         |for (int $cell = 0; $cell < $cents.length; $cell++) {
-         |  double[] $c = $cents[$cell];
-         |  if ($c.length == $n) {
-         |    double $dot = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) { $dot += $get * $c[$i]; }
-         |    double $s = $norms[$cell] - 2.0 * $dot;
-         |    if ($s < $bestScore) { $bestScore = $s; $best = $cell; }
-         |  }
-         |}
-         |if ($bestScore == Double.POSITIVE_INFINITY) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $best; }
-       """.stripMargin
-    })
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -301,7 +220,7 @@ case class NearestCentroidL2(child: Expression, centroids: Array[Array[Double]])
   * silently skew ranking).
   */
 case class PqAdcScore(left: Expression, right: Expression, ksub: Int)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCodegen {
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
@@ -320,25 +239,6 @@ case class PqAdcScore(left: Expression, right: Expression, ksub: Int)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (codes, lut) => {
-      val s = ctx.freshName("s"); val c = ctx.freshName("c")
-      val idx = ctx.freshName("idx"); val acc = ctx.freshName("acc")
-      val ok = ctx.freshName("ok")
-      s"""
-         |double $acc = 0.0;
-         |boolean $ok = true;
-         |for (int $s = 0; $ok && $s < $codes.numElements(); $s++) {
-         |  if ($codes.isNullAt($s)) { $ok = false; break; }
-         |  int $c = $codes.getInt($s);
-         |  int $idx = $s * $ksub + $c;
-         |  if ($c < 0 || $c >= $ksub || $idx >= $lut.numElements()) { $ok = false; break; }
-         |  $acc += $lut.getDouble($idx);
-         |}
-         |if (!$ok) { ${ev.isNull} = true; } else { ${ev.value} = $acc; }
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
@@ -359,7 +259,7 @@ case class PqAdcScore(left: Expression, right: Expression, ksub: Int)
   */
 case class CosineOwnMax(left: Expression, right: Expression,
                         centroids: Array[Array[Double]])
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCodegen {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = true
 
@@ -385,28 +285,22 @@ case class CosineOwnMax(left: Expression, right: Expression,
   }
 
   override def nullSafeEval(v: Any, idxAny: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
+    val x = VectorTypeCheck.widened(v.asInstanceOf[ArrayData], childIsFloat)
     val ownIdx = idxAny.asInstanceOf[Int]
-    val isF = childIsFloat
-    val n = a.numElements()
+    val n = x.length
+    val norms = sqrtNorms
     var na = 0.0; var i = 0
-    while (i < n) {
-      val x = if (isF) a.getFloat(i).toDouble else a.getDouble(i)
-      na += x * x; i += 1
-    }
+    while (i < n) { na += x(i) * x(i); i += 1 }
     val sqna = math.sqrt(na)
     var own: Any = null
     var best = 0.0; var any = false
     var cell = 0
     while (cell < centroids.length) {
       val c = centroids(cell)
-      if (c.length == n && na != 0.0 && sqrtNorms(cell) != 0.0) {
+      if (c.length == n && na != 0.0 && norms(cell) != 0.0) {
         var dot = 0.0; i = 0
-        while (i < n) {
-          dot += (if (isF) a.getFloat(i).toDouble else a.getDouble(i)) * c(i)
-          i += 1
-        }
-        val cos = dot / (sqna * sqrtNorms(cell))
+        while (i < n) { dot += x(i) * c(i); i += 1 }
+        val cos = dot / (sqna * norms(cell))
         if (cell == ownIdx) own = cos
         else if (!any || cos > best) { best = cos; any = true }
       }
@@ -414,39 +308,6 @@ case class CosineOwnMax(left: Expression, right: Expression,
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
       Array[Any](own, if (any) best else null))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    val norms = ctx.addReferenceObj("sqrtNorms", sqrtNorms, "double[]")
-    nullSafeCodeGen(ctx, ev, (a, ownIdx) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val na = ctx.freshName("na"); val sqna = ctx.freshName("sqna")
-      val x = ctx.freshName("x"); val cell = ctx.freshName("cell")
-      val dot = ctx.freshName("dot"); val cos = ctx.freshName("cos")
-      val own = ctx.freshName("own"); val best = ctx.freshName("best")
-      val any = ctx.freshName("any"); val c = ctx.freshName("c")
-      val get = if (childIsFloat) s"(double)$a.getFloat($i)" else s"$a.getDouble($i)"
-      s"""
-         |int $n = $a.numElements();
-         |double $na = 0.0;
-         |for (int $i = 0; $i < $n; $i++) { double $x = $get; $na += $x * $x; }
-         |double $sqna = java.lang.Math.sqrt($na);
-         |Object $own = null; double $best = 0.0; boolean $any = false;
-         |for (int $cell = 0; $cell < $cents.length; $cell++) {
-         |  double[] $c = $cents[$cell];
-         |  if ($c.length == $n && $na != 0.0 && $norms[$cell] != 0.0) {
-         |    double $dot = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) { $dot += $get * $c[$i]; }
-         |    double $cos = $dot / ($sqna * $norms[$cell]);
-         |    if ($cell == $ownIdx) { $own = (Object) $cos; }
-         |    else if (!$any || $cos > $best) { $best = $cos; $any = true; }
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  new Object[]{ $own, $any ? (Object) $best : null });
-       """.stripMargin
-    })
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =

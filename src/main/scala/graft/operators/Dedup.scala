@@ -1084,7 +1084,7 @@ object Dedup {
       concat_ws("\n", filter(split(col(textCol), "\n"),
         (_, i) => !array_contains(col("__drops"), i))))
       .otherwise(col(textCol))
-    val keep = docs.columns.filterNot(_ == textCol).map(docs(_))
+    val keep = docs.columns.toSeq.filterNot(_ == textCol).map(docs(_))
     docs.join(drops, docs(idCol) === col("__id"), "left")
       .select(keep :+ rebuilt.as(textCol)
         :+ coalesce(col("__nd"), lit(0L)).as("n_dropped"): _*)

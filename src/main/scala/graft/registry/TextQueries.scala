@@ -26,7 +26,7 @@ private[graft] object TextQueries extends Family {
     * path on `dup`); multi pieces are priced to exercise the DP's
     * choices (see [[q190]]).
     */
-  private val q190Vocab: Array[(String, Long)] = Array(
+  private val q190Vocab: Seq[(String, Long)] = Seq(
     // singles (no 'u' — UNK exercises at 20e6)
     ("a", 2500000L), ("b", 3000000L), ("c", 3000000L), ("d", 3000000L),
     ("e", 2600000L), ("f", 3000000L), ("g", 3000000L), ("h", 3000000L),

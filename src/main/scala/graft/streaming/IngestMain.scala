@@ -186,7 +186,8 @@ object IngestMain {
       Seq("vision", "air_quality").foreach { t =>
         val p = new org.apache.hadoop.fs.Path(s"$root/$t")
         if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-          graft.sinks.PartitionedSink.compactPartitions(spark, s"$root/$t")
+          graft.sinks.PartitionedSink.compactPartitions(spark, s"$root/$t",
+            format = conf.getOrElse("format", "parquet"))
       }
     }
 

@@ -157,6 +157,98 @@ class ExpressionsSpec extends SparkSpec {
     assert(n === 500)
   }
 
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("vector kernels run inside whole-stage codegen, bit-identical to the interpreted run") {
+    import org.apache.spark.sql.{Column, DataFrame, Row}
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.graft.ColumnBridge
+    import org.apache.spark.sql.types._
+
+    // ragged on purpose: a length-2 cell and a zero-norm cell
+    val cents = Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0), Array(0.0, 0.0, 0.0),
+      Array(0.3, -0.2, 0.9), Array(-1.0, 0.5, 0.25))
+    val fv = ArrayType(FloatType); val dv = ArrayType(DoubleType)
+    val schema = StructType(Seq("fa" -> fv, "fb" -> fv, "da" -> dv, "db" -> dv,
+      "codes" -> ArrayType(IntegerType), "lut" -> dv, "own" -> IntegerType)
+      .map { case (n, t) => StructField(n, t) })
+    val lut = Seq(0.5, -0.25, 1.5, 2.0, -3.0, 0.125)  // 3 subspaces x ksub 2
+    val rows = Seq(
+      Row(Seq(1f, 2f, 3f), Seq(4f, 5f, 6f), Seq(1.0, 2.0, 3.0), Seq(0.5, -1.0, 2.0),
+        Seq(0, 1, 1), lut, 0),
+      Row(Seq(0.1f, -0.7f, 0.3f), Seq(0.3f, 0.3f, 0.3f), Seq(-0.2, 0.9, 0.1),
+        Seq(0.1, 0.2, 0.3), Seq(1, 0, 0), lut, 3),
+      Row(Seq(0f, 0f, 0f), Seq(1f, 0f, 0f), Seq(0.0, 0.0, 0.0), Seq(1.0, 1.0, 1.0),
+        Seq(0, null, 1), lut, 1),                               // zero norm; null code
+      Row(Seq(1f, 2f), Seq(1f, 2f, 3f), Seq(0.5, 0.5), Seq(1.0, 2.0, 3.0),
+        Seq(0, 2, 1), lut, 4),                                  // length mismatch; code >= ksub
+      Row(Seq(3f, 4f), Seq(3f, 4f), Seq(2.0, -1.0), Seq(2.0, -1.0),
+        Seq(-1, 0, 0), lut, 1),                                 // ragged vs the 3-wide cells; code < 0
+      Row(Seq.empty[Float], Seq.empty[Float], Seq.empty[Double], Seq.empty[Double],
+        Seq(1, 1, 1, 1), lut, 0),                               // empty; codes past the lut
+      Row(null, Seq(1f, 2f, 3f), null, Seq(1.0, 2.0, 3.0), null, lut, null),   // null children
+      Row(Seq(1f, 2f, 3f), null, Seq(1.0, 2.0, 3.0), null, Seq(0, 1, 1), null, 2))
+    val small = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val e = Tables.embeddings(spark, sf0001)
+    val probe = e.filter(col("vec_id") === 0).select("embedding").as[Seq[Float]].head()
+
+    val cases: Seq[(String, DataFrame, Column)] = Seq(
+      ("dot float", small, VectorFunctions.dot(col("fa"), col("fb"))),
+      ("dot double", small, VectorFunctions.dot(col("da"), col("db"))),
+      ("cosine float-double", small, VectorFunctions.cosineSimilarity(col("fa"), col("db"))),
+      ("cosine double-float", small, VectorFunctions.cosineSimilarity(col("da"), col("fb"))),
+      ("cosine, 500 fixture rows", e,
+        VectorFunctions.cosineSimilarity(col("embedding"), typedLit(probe))),
+      ("nearest_centroid float", small, VectorFunctions.nearestCentroid(col("fa"), cents)),
+      ("nearest_centroid double", small, VectorFunctions.nearestCentroid(col("da"), cents)),
+      ("nearest_centroid_l2 float", small, VectorFunctions.nearestCentroidL2(col("fa"), cents)),
+      ("nearest_centroid_l2 double", small, VectorFunctions.nearestCentroidL2(col("da"), cents)),
+      ("pq_adc_score", small, VectorFunctions.pqAdcScore(col("codes"), col("lut"), 2)),
+      ("cosine_own_max float", small, VectorFunctions.cosineOwnMax(col("fa"), col("own"), cents)),
+      ("cosine_own_max double", small, VectorFunctions.cosineOwnMax(col("da"), col("own"), cents)))
+
+    // doubles compared by their bits, so 0.0 vs -0.0 or one ulp shows
+    def bits(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case s: scala.collection.Seq[_] => s.map(bits)
+      case other => other
+    }
+    def operatorsInStages(p: SparkPlan): Seq[SparkPlan] = {
+      def stage(q: SparkPlan): Seq[SparkPlan] = q match {
+        case _: InputAdapter => Seq.empty
+        case _ => q +: q.children.flatMap(stage)
+      }
+      p.collect { case w: WholeStageCodegenExec => stage(w.child) }.flatten
+    }
+    cases.foreach { case (name, df, kernel) =>
+      val kernelClass = ColumnBridge.expression(kernel).getClass
+      // a fresh Dataset per run: each plans under the confs set around it
+      val (generated, plan) =
+        withConf("spark.sql.codegen.fallback" -> "false") {
+          val run = df.select(kernel.as("r"))
+          (run.collect().map(r => bits(r.get(0))).toSeq, run.queryExecution.executedPlan)
+        }
+      val holders = plan.collect {
+        case op if op.expressions.exists(_.exists(_.getClass == kernelClass)) => op
+      }
+      assert(holders.nonEmpty, s"$name: no operator holds the kernel\n$plan")
+      val staged = operatorsInStages(plan)
+      assert(holders.forall(h => staged.exists(_ eq h)),
+        s"$name: kernel outside whole-stage codegen\n$plan")
+      val interpreted = withConf("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+        df.select(kernel.as("r")).collect().map(r => bits(r.get(0))).toSeq
+      }
+      assert(generated === interpreted, name)
+      assert(generated.size === df.count(), name)
+    }
+  }
+
   test("nearest_centroid / _l2: ragged row no centroid matches -> null, not cell 0") {
     val cents = Array(Array(1.0, 0.0), Array(0.0, 1.0)) // all length 2
     val df = Seq(

@@ -62,12 +62,15 @@ class IngestMainSpec extends SparkSpec {
     finally h.unset("fs.s3a.aws.credentials.provider")
   }
 
-  test("compactLake: compact=true after a multi-batch drain leaves one data file per leaf, rows unchanged") {
-    // three CRON runs over one `dir:` source and checkpoint: each drains
-    // the file that arrived since the last, so each lake leaf holds one
-    // data file per run
+  /** Three CRON runs over one `dir:` source into two lakes (own
+    * checkpoints) with the settings in `extra`: each run drains the file
+    * that arrived since the last, so each lake leaf holds one data file
+    * per run. Returns the confs of the two lakes.
+    */
+  private def drainThreeRuns(extra: Map[String, String])
+      : (Map[String, String], Map[String, String]) = {
     val src = Files.createTempDirectory("graft_compact_src_").toString
-    def conf(tag: String) = Map("source" -> s"dir:$src",
+    def conf(tag: String) = extra ++ Map("source" -> s"dir:$src",
       "root" -> Files.createTempDirectory(s"graft_compact_lake_$tag").toString,
       "checkpoint" -> Files.createTempDirectory(s"graft_compact_ck_$tag").toString)
     val compacted = conf("on")
@@ -81,17 +84,26 @@ class IngestMainSpec extends SparkSpec {
         IngestMain.startQueries(spark, c + ("mode" -> "drain")).foreach(_.awaitTermination())
       }
     }
-    // data files per leaf directory of the two lake tables
-    def dataFiles(c: Map[String, String]): Map[String, Seq[String]] = {
-      def walk(d: java.io.File): Seq[java.io.File] =
-        if (d.isDirectory && !d.getName.startsWith("_"))
-          d.listFiles().sortBy(_.getName).toSeq.flatMap(walk)
-        else if (d.isFile && d.getName.endsWith(".parquet")) Seq(d)
-        else Seq.empty
-      Seq("vision", "air_quality").flatMap(t => walk(new java.io.File(s"${c("root")}/$t")))
-        .groupBy(_.getParentFile.getPath.stripPrefix(c("root")))
-        .map { case (leaf, fs) => leaf -> fs.map(_.getName) }
-    }
+    (compacted, plain)
+  }
+
+  /** Data files (names ending in `ext`) per leaf directory of the two lake tables. */
+  private def dataFiles(c: Map[String, String], ext: String): Map[String, Seq[String]] = {
+    def walk(d: java.io.File): Seq[java.io.File] =
+      if (d.isDirectory && !d.getName.startsWith("_"))
+        d.listFiles().sortBy(_.getName).toSeq.flatMap(walk)
+      else if (d.isFile && d.getName.endsWith(ext)) Seq(d)
+      else Seq.empty
+    Seq("vision", "air_quality").flatMap(t => walk(new java.io.File(s"${c("root")}/$t")))
+      .groupBy(_.getParentFile.getPath.stripPrefix(c("root")))
+      .map { case (leaf, fs) => leaf -> fs.map(_.getName) }
+  }
+
+  private val lakeLeaves = Set("/vision/entity=cam0/year=2024/month=1",
+    "/vision/entity=cam1/year=2024/month=1", "/air_quality/entity=downtown/year=2024/month=1")
+
+  test("compactLake: compact=true after a multi-batch drain leaves one data file per leaf, rows unchanged") {
+    val (compacted, plain) = drainThreeRuns(Map.empty)
     def rows(c: Map[String, String]) = (
       spark.read.parquet(s"${c("root")}/vision")
         .select("entity", "timestamp", "hit_counts", "year", "month")
@@ -99,23 +111,37 @@ class IngestMainSpec extends SparkSpec {
       spark.read.parquet(s"${c("root")}/air_quality")
         .select("entity", "timestamp", "year", "month")
         .as[(String, Long, Int, Int)].collect().sorted.toSeq)
-    val drained = dataFiles(compacted)
-    assert(drained.keySet === Set("/vision/entity=cam0/year=2024/month=1",
-      "/vision/entity=cam1/year=2024/month=1", "/air_quality/entity=downtown/year=2024/month=1"))
+    val drained = dataFiles(compacted, ".parquet")
+    assert(drained.keySet === lakeLeaves)
     assert(drained.values.forall(_.size === 3), drained)
 
     // only `mode=drain compact=true` compacts: a daemon run and a drain
     // without compact= leave every file as it was
     IngestMain.compactLake(spark, compacted + ("mode" -> "daemon") + ("compact" -> "true"))
-    assert(dataFiles(compacted) === drained)
+    assert(dataFiles(compacted, ".parquet") === drained)
     IngestMain.compactLake(spark, plain)
-    assert(dataFiles(plain).values.forall(_.size === 3))
+    assert(dataFiles(plain, ".parquet").values.forall(_.size === 3))
 
     IngestMain.compactLake(spark, compacted + ("mode" -> "drain") + ("compact" -> "true"))
-    val after = dataFiles(compacted)
+    val after = dataFiles(compacted, ".parquet")
     assert(after.keySet === drained.keySet)
     assert(after.values.forall(_.size === 1), after)
     assert(rows(compacted) === rows(plain))
     assert(rows(plain)._1.size === 6 && rows(plain)._2.size === 3)
+  }
+
+  test("compactLake: a format=csv drain compacts its csv leaves, rows unchanged") {
+    val (compacted, plain) = drainThreeRuns(Map("format" -> "csv"))
+    assert(dataFiles(compacted, ".csv").keySet === lakeLeaves)
+    assert(dataFiles(compacted, ".csv").values.forall(_.size === 3))
+
+    IngestMain.compactLake(spark, compacted + ("mode" -> "drain") + ("compact" -> "true"))
+    val after = dataFiles(compacted, ".csv")
+    assert(after.keySet === lakeLeaves)
+    assert(after.values.forall(_.size === 1), after)
+    def rows(c: Map[String, String]) = Seq("vision", "air_quality").map(t =>
+      spark.read.csv(s"${c("root")}/$t").collect().map(_.toString).sorted.toSeq)
+    assert(rows(compacted) === rows(plain))
+    assert(rows(plain).map(_.size) === Seq(6, 3))
   }
 }
